@@ -78,6 +78,10 @@ object GraftSession {
     spark
   }
 
+  /** The mains' core count: `SPARK_GRAFT_CPUS`, else every core. */
+  def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Local session used by tests and mains. `local[32]`-ish parallelism with
     * shuffle partitions matched to cores (not the 200 default), AQE on so
     * skewed shuffles re-plan at runtime — the same settings that hold on a

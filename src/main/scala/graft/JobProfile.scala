@@ -21,9 +21,7 @@ object JobProfile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("/tmp/jobprofile.tsv")
     val filters = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local(GraftSession.envCpus)
     // one-time store/index builds happen OUTSIDE the per-query counters,
     // mirroring the bench's fixtures_sec accounting
     Fixtures.warmAll(spark, sfDir)

@@ -34,6 +34,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partial rewrite. Mutators shrink the window by dropping the token's
   * marker before rewriting ([[uncommit]]); the window is replay-only and
   * never affects the common append path.
+  *
+  * WRITE SIDE: every builder, appender and compactor of the families above
+  * goes through the four operations at the bottom of this object, so the
+  * protocol's ordering and refresh policy live here and nowhere else:
+  *  - [[rebuild]]: take the store's [[StoreLock]], delete the root, run the
+  *    body (builders: `rebuild(root)(append(..., "base"))`);
+  *  - [[writeBatch]]: drop the token's marker, let the body write every
+  *    family dir (and sidecar) for the token through a [[BatchWriter]],
+  *    commit ONE marker, then `refreshByPath` every family/sidecar root
+  *    the body wrote — no others. Appenders call it inside their own
+  *    store lock (their validation reads must be locked too);
+  *  - [[compact]]: refuse `src == dst`, [[rebuild]] `dst` under ITS lock,
+  *    write it as token `base` through [[writeBatch]]. `src` is only read
+  *    and never changes; the caller swaps paths when `dst` is complete, so
+  *    a crash leaves a partial `dst` to overwrite, never a half-deleted
+  *    `src`, and re-compacting into a stale `dst` starts from scratch;
+  *  - [[dropBatch]]: a replay's removal of its own half-written batch
+  *    dir, marker first so racing probes stop seeing it before it goes.
+  *
+  * Deliberately NOT on the manifest (rebuild-only, they use [[rebuild]]
+  * alone): the SCD2 interval store ([[graft.ts.Scd]], replay keyed by its
+  * own `seq`), the z-order layout ([[graft.operators.LayoutOps]], which
+  * keeps its own per-batch `_manifest`), and the bigram reference model
+  * ([[graft.operators.TextOps.buildLmModel]], one snapshot per rebuild).
   */
 object StoreCommit {
 
@@ -224,6 +248,79 @@ object StoreCommit {
           readCache.put(key, (visible, df))
           df
         }
+    }
+  }
+
+  // ---- write side ----------------------------------------------------------
+
+  /** The dirs of ONE token's batch, handed to a [[writeBatch]] body: every
+    * path it hands out is remembered, and [[writeBatch]] refreshes exactly
+    * those roots once the marker lands.
+    */
+  final class BatchWriter private[StoreCommit] (root: String, token: String) {
+    private[StoreCommit] val written =
+      scala.collection.mutable.LinkedHashSet.empty[String]
+    private def mark(p: String): String = { written += p; p }
+
+    /** `root[/family]/batch=<token>` — the token's dir in `family` (`""` =
+      * the store root itself), for writers that need their own
+      * `partitionBy` shape.
+      */
+    def dir(family: String): String =
+      mark(if (family.isEmpty) root else s"$root/$family") + s"/batch=$token"
+
+    /** Overwrite `df` as the token's batch of `family`. */
+    def write(df: DataFrame, family: String = ""): Unit =
+      df.write.mode("overwrite").parquet(dir(family))
+
+    /** Overwrite the root-level sidecar `name` (`meta`, `codebooks`,
+      * `centroids`): one dir for the whole store, outside the manifest.
+      */
+    def sidecar(df: DataFrame, name: String): Unit =
+      df.write.mode("overwrite").parquet(mark(s"$root/$name"))
+  }
+
+  /** Take `root`'s [[StoreLock]], delete the root, run `body`. */
+  def rebuild(spark: SparkSession, root: String)(body: => Unit): Unit =
+    StoreLock.withLock(spark, root) {
+      val p = new Path(root)
+      val hfs = fs(spark, p)
+      if (hfs.exists(p)) hfs.delete(p, true)
+      body
+    }
+
+  /** Write one batch token: [[uncommit]], `body` writes every family dir
+    * of the token, [[commit]], then refresh every root `body` wrote (a
+    * probe earlier in this session may have listing-cached them).
+    */
+  def writeBatch(spark: SparkSession, root: String, token: String)(
+      body: BatchWriter => Unit): Unit = {
+    uncommit(spark, root, token)
+    val w = new BatchWriter(root, token)
+    body(w)
+    commit(spark, root, token)
+    w.written.foreach(spark.catalog.refreshByPath)
+  }
+
+  /** Compact `src` into a fresh single-batch store at `dst`: `body` reads
+    * `src` and writes token `base` of `dst`.
+    */
+  def compact(spark: SparkSession, src: String, dst: String)(
+      body: BatchWriter => Unit): Unit = {
+    require(src != dst, "compact to a NEW path, then swap")
+    rebuild(spark, dst)(writeBatch(spark, dst, "base")(body))
+  }
+
+  /** Replay-drop: remove `token`'s own (possibly half-written) batch dir
+    * under `root`, marker first.
+    */
+  def dropBatch(spark: SparkSession, root: String, token: String): Unit = {
+    uncommit(spark, root, token)
+    val own = new Path(s"$root/batch=$token")
+    val hfs = fs(spark, own)
+    if (hfs.exists(own)) {
+      hfs.delete(own, true)
+      spark.catalog.refreshByPath(root)
     }
   }
 }

@@ -57,16 +57,6 @@ object DedupOps {
   def baseHashes(set: Column): Column =
     transform(set, s => pmod(baseHash(s), lit(1L << 31)))
 
-  /** MinHash signature (array<bigint> of length numHashes) over precomputed
-    * [[baseHashes]]. Pure map-side arithmetic — numHashes × |set| pmods.
-    */
-  def minhashSignature(bases: Column, numHashes: Int): Column = {
-    val coeffs = hashCoeffs(numHashes)
-    array(coeffs.map { case (a, b) =>
-      array_min(transform(bases, h => pmod(h * a + b, lit(MersennePrime31))))
-    }: _*)
-  }
-
   /** Exact duplicate mapping: every row keyed to the min id sharing its
     * content fingerprint. Rows with canonical_id != id are exact dups.
     */
@@ -157,10 +147,7 @@ object DedupOps {
     * machinery for what survives. The corpus-side md5 pass runs once, here.
     */
   def buildFingerprintStore(df: DataFrame, idCol: String, textCol: String,
-      path: String): Unit = graft.StoreLock.withLock(df.sparkSession, path) {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // full rebuild: no stale batch dirs
+      path: String): Unit = graft.StoreCommit.rebuild(df.sparkSession, path) {
     appendFingerprintStore(df, idCol, textCol, path, "base")
   }
 
@@ -567,10 +554,7 @@ object DedupOps {
     */
   def buildLineStore(df: DataFrame, idCol: String, textCol: String,
       path: String, delim: String = "\n"): Unit =
-      graft.StoreLock.withLock(df.sparkSession, path) {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+      graft.StoreCommit.rebuild(df.sparkSession, path) {
     appendLineStore(df, idCol, textCol, path, delim, "base")
   }
 
@@ -596,17 +580,10 @@ object DedupOps {
     * rebuild-dst-then-swap contract as the other compactors.
     */
   def compactLineStore(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String): Unit = {
-    require(srcPath != dstPath, "compact to a NEW path, then swap")
-    val p = new org.apache.hadoop.fs.Path(dstPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    graft.StoreCommit.read(spark, srcPath)
-      .groupBy(col("h")).agg(sum(col("c")).as("c"))
-      .write.mode("overwrite").parquet(s"$dstPath/batch=base")
-    graft.StoreCommit.commit(spark, dstPath, "base")
-    spark.catalog.refreshByPath(dstPath)
-  }
+      srcPath: String, dstPath: String): Unit =
+    graft.StoreCommit.compact(spark, srcPath, dstPath)(_.write(
+      graft.StoreCommit.read(spark, srcPath)
+        .groupBy(col("h")).agg(sum(col("c")).as("c"))))
 
   /** [[removeFrequentLines]] against a persisted census: batch lines are
     * stripped when the STORE's summed occurrence count for their hash
@@ -726,10 +703,7 @@ object DedupOps {
     */
   def buildWindowStore(df: DataFrame, idCol: String, textCol: String,
       path: String, k: Int = 4): Unit =
-      graft.StoreLock.withLock(df.sparkSession, path) {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // full rebuild: no stale batch dirs
+      graft.StoreCommit.rebuild(df.sparkSession, path) {
     appendWindowStore(df, idCol, textCol, path, k, "base")
   }
 
@@ -741,16 +715,19 @@ object DedupOps {
       path: String, k: Int = 4,
       batchToken: String = java.util.UUID.randomUUID.toString): Unit =
       graft.StoreLock.withLock(df.sparkSession, path) {
-    graft.StoreCommit.uncommit(df.sparkSession, path, batchToken)
-    windowHashRows(df, idCol, textCol, k)
-      .groupBy(col("h"))
+    writeStoreBatch(firstOccurrences(windowHashRows(df, idCol, textCol, k)),
+      path, batchToken)
+  }
+
+  /** One `(h, id, p)` row per distinct window content, (id, p) its least
+    * occurrence — the store row shape, folded the same way by appends and
+    * compaction.
+    */
+  private def firstOccurrences(rows: DataFrame): DataFrame =
+    rows.groupBy(col("h"))
       .agg(min(struct(col("id"), col("p"))).as("__first"))
       .select(col("h"), col("__first").getField("id").as("id"),
         col("__first").getField("p").as("p"))
-      .write.mode("overwrite").parquet(s"$path/batch=$batchToken")
-    graft.StoreCommit.commit(df.sparkSession, path, batchToken)
-    df.sparkSession.catalog.refreshByPath(path)
-  }
 
   /** Compact a many-batch window store (a long-running incremental tail
     * appends one `batch=` dir per micro-batch) into a fresh single-batch
@@ -766,22 +743,9 @@ object DedupOps {
     * never a half-deleted src).
     */
   def compactWindowStore(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String): Unit = {
-    require(srcPath != dstPath, "compact to a NEW path, then swap")
-    val p = new org.apache.hadoop.fs.Path(dstPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    graft.StoreCommit.read(spark, srcPath)
-      .select(col("h"), col("id"), col("p"))
-      .groupBy(col("h"))
-      .agg(min(struct(col("id"), col("p"))).as("__first"))
-      .select(col("h"), col("__first").getField("id").as("id"),
-        col("__first").getField("p").as("p"))
-      .write.mode("overwrite").parquet(s"$dstPath/batch=base")
-    graft.StoreCommit.commit(spark, dstPath, "base")
-    // a dst this session already probed must drop stale listing caches
-    spark.catalog.refreshByPath(dstPath)
-  }
+      srcPath: String, dstPath: String): Unit =
+    graft.StoreCommit.compact(spark, srcPath, dstPath)(_.write(firstOccurrences(
+      graft.StoreCommit.read(spark, srcPath).select(col("h"), col("id"), col("p")))))
 
   /** Compact a many-batch per-id store (minhash [[buildMinhashStore]] or
     * fingerprint [[buildFingerprintStore]] layout — rows are per-id and
@@ -792,17 +756,9 @@ object DedupOps {
     * [[compactWindowStore]].
     */
   def compactIdStore(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String): Unit = {
-    require(srcPath != dstPath, "compact to a NEW path, then swap")
-    val p = new org.apache.hadoop.fs.Path(dstPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    val src = graft.StoreCommit.read(spark, srcPath)
-    src.select(src.columns.filter(_ != "batch").map(col): _*)
-      .write.mode("overwrite").parquet(s"$dstPath/batch=base")
-    graft.StoreCommit.commit(spark, dstPath, "base")
-    spark.catalog.refreshByPath(dstPath)
-  }
+      srcPath: String, dstPath: String): Unit =
+    graft.StoreCommit.compact(spark, srcPath, dstPath)(
+      _.write(graft.StoreCommit.read(spark, srcPath).drop("batch")))
 
   /** Duplicated windows of a NEW batch against the store ∪ the batch
     * itself: (id, p, __first) where __first is the GLOBAL canonical
@@ -1040,14 +996,6 @@ object DedupOps {
   private def explodedHashes(rows: DataFrame): DataFrame =
     rows.select(col("id"), pmod(baseHash(col("s")), lit(1L << 31)).as("h"))
 
-  /** (id, sig: array<bigint>[numHashes]) from shingle rows. */
-  private def minhashSigArray(rows: DataFrame, numHashes: Int): DataFrame = {
-    val minAggs = minAggsFor(numHashes)
-    explodedHashes(rows).groupBy(col("id")).agg(minAggs.head, minAggs.tail: _*)
-      .select(col("id"),
-        array((0 until numHashes).map(j => col(s"m$j")): _*).as("sig"))
-  }
-
   /** (id, sig: array<bigint>[numHashes], hs: sorted array<bigint> of the
     * doc's DISTINCT 31-bit shingle base hashes) — one groupBy: the minhash
     * partial-min aggregates ([[minAggsFor]], the same math as
@@ -1086,10 +1034,7 @@ object DedupOps {
     */
   def buildMinhashStore(df: DataFrame, idCol: String, textCol: String,
       path: String, shingleK: Int = 3, numHashes: Int = 128): Unit =
-      graft.StoreLock.withLock(df.sparkSession, path) {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // full rebuild: no stale batch dirs
+      graft.StoreCommit.rebuild(df.sparkSession, path) {
     appendMinhashStore(df, idCol, textCol, path, shingleK, numHashes, "base")
   }
 
@@ -1183,16 +1128,12 @@ object DedupOps {
       path, batchToken)
   }
 
-  /** Write an already-computed [[sigAndHashes]] frame into the store. */
-  private[graft] def writeStoreBatch(sigs: DataFrame, path: String,
-      batchToken: String): Unit = {
-    // committed-read contract ([[graft.StoreCommit]]): a replayed token
-    // drops its marker before the rewrite, every fresh batch is invisible
-    // to probes until the marker lands after the write completes
-    graft.StoreCommit.uncommit(sigs.sparkSession, path, batchToken)
-    sigs.write.mode("overwrite").parquet(s"$path/batch=$batchToken")
-    graft.StoreCommit.commit(sigs.sparkSession, path, batchToken)
-  }
+  /** One plain single-family batch of `rows` through
+    * [[graft.StoreCommit.writeBatch]].
+    */
+  private[graft] def writeStoreBatch(rows: DataFrame, path: String,
+      batchToken: String): Unit =
+    graft.StoreCommit.writeBatch(rows.sparkSession, path, batchToken)(_.write(rows))
 
   /** Near-dup pairs of a NEW batch against a persisted corpus store (plus
     * new-new pairs), without re-pairing the corpus: the incremental shape
@@ -1476,12 +1417,14 @@ object DedupOps {
     */
   def buildWinnowStore(df: DataFrame, idCol: String, textCol: String,
       path: String, k: Int = 4, w: Int = 5): Unit =
-      graft.StoreLock.withLock(df.sparkSession, path) {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+      graft.StoreCommit.rebuild(df.sparkSession, path) {
     appendWinnowStore(df, idCol, textCol, path, k, w, "base")
   }
+
+  /** The winnow store's one-row `(k, w)` meta sidecar. */
+  private def winnowMeta(spark: org.apache.spark.sql.SparkSession, k: Int,
+      w: Int): DataFrame =
+    spark.range(1).select(lit(k).as("k"), lit(w).as("w")).coalesce(1)
 
   /** Append one batch of NEW docs (ids disjoint from every prior batch).
     * Same-token re-runs overwrite rather than duplicate. */
@@ -1491,16 +1434,13 @@ object DedupOps {
       graft.StoreLock.withLock(df.sparkSession, path) {
     val spark = df.sparkSession
     val p = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (hfs.exists(p)) {
+    val hasMeta = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    if (hasMeta) {
       val m = spark.read.parquet(s"$path/meta").head()
       require(m.getAs[Int]("k") == k && m.getAs[Int]("w") == w,
         s"store at $path was built with (k=${m.getAs[Int]("k")}, " +
           s"w=${m.getAs[Int]("w")}); appending at (k=$k, w=$w) would mix " +
           "incompatible fingerprints")
-    } else {
-      spark.range(1).select(lit(k).as("k"), lit(w).as("w"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
     }
     val fps = graft.CacheScope.persist(
       TextOps.winnowingFingerprints(df, idCol, textCol, k, w)
@@ -1508,13 +1448,11 @@ object DedupOps {
     // one marker covers BOTH families: probes see the token's fps and
     // sizes dirs all-or-nothing (a sizes-less fps batch would under-count
     // containment denominators)
-    graft.StoreCommit.uncommit(spark, path, batchToken)
-    fps.write.mode("overwrite").parquet(s"$path/fps/batch=$batchToken")
-    fps.groupBy(col("id")).agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$path/sizes/batch=$batchToken")
-    graft.StoreCommit.commit(spark, path, batchToken)
-    Seq("fps", "sizes", "meta").foreach(sub =>
-      spark.catalog.refreshByPath(s"$path/$sub"))
+    graft.StoreCommit.writeBatch(spark, path, batchToken) { b =>
+      if (!hasMeta) b.sidecar(winnowMeta(spark, k, w), "meta")
+      b.write(fps, "fps")
+      b.write(fps.groupBy(col("id")).agg(count(lit(1)).as("n")), "sizes")
+    }
   }
 
   /** Compact a many-batch winnow store (a long-running [[graft.streaming
@@ -1525,23 +1463,15 @@ object DedupOps {
     * crash-safe rebuild-dst-then-swap contract as the other compactors.
     */
   def compactWinnowStore(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String): Unit = {
-    require(srcPath != dstPath, "compact to a NEW path, then swap")
-    val p = new org.apache.hadoop.fs.Path(dstPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    val m = spark.read.parquet(s"$srcPath/meta").head()
-    spark.range(1)
-      .select(lit(m.getAs[Int]("k")).as("k"), lit(m.getAs[Int]("w")).as("w"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dstPath/meta")
-    graft.StoreCommit.read(spark, srcPath, Some("fps")).select(col("id"), col("f"))
-      .write.mode("overwrite").parquet(s"$dstPath/fps/batch=base")
-    graft.StoreCommit.read(spark, srcPath, Some("sizes")).select(col("id"), col("n"))
-      .write.mode("overwrite").parquet(s"$dstPath/sizes/batch=base")
-    graft.StoreCommit.commit(spark, dstPath, "base")
-    Seq("fps", "sizes", "meta").foreach(sub =>
-      spark.catalog.refreshByPath(s"$dstPath/$sub"))
-  }
+      srcPath: String, dstPath: String): Unit =
+    graft.StoreCommit.compact(spark, srcPath, dstPath) { b =>
+      val m = spark.read.parquet(s"$srcPath/meta").head()
+      b.sidecar(winnowMeta(spark, m.getAs[Int]("k"), m.getAs[Int]("w")), "meta")
+      b.write(graft.StoreCommit.read(spark, srcPath, Some("fps"))
+        .select(col("id"), col("f")), "fps")
+      b.write(graft.StoreCommit.read(spark, srcPath, Some("sizes"))
+        .select(col("id"), col("n")), "sizes")
+    }
 
   /** Containment pairs of a NEW batch against a persisted winnow store
     * (plus new-new pairs) — [[winnowingPairs]] over store ∪ batch
@@ -1880,10 +1810,7 @@ object DedupOps {
     */
   def buildSimhashStore(df: DataFrame, idCol: String, textCol: String,
       path: String): Unit =
-      graft.StoreLock.withLock(df.sparkSession, path) {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+      graft.StoreCommit.rebuild(df.sparkSession, path) {
     appendSimhashStore(df, idCol, textCol, path, "base")
   }
 
@@ -2027,6 +1954,12 @@ object DedupOps {
     simhashVerify(touching, oldHalves.unionByName(simhashHalves(fresh)), maxHamming)
   }
 
+  /** Rounds the most recent [[connectedComponents]] call on this JVM took
+    * to converge — diagnostic only (the ScaleSmoke O(log n) round gate);
+    * racing concurrent CC calls read whichever finished last.
+    */
+  private[graft] val lastCcRounds = new java.util.concurrent.atomic.AtomicInteger(-1)
+
   /** Connected components over an undirected pair list — the last step of
     * every dedup pipeline: near-dup PAIRS (from [[minhashLshPairs]],
     * [[simhashNearDupPairs]], [[SimilarityOps.nearDupPairs]], …) become
@@ -2064,16 +1997,11 @@ object DedupOps {
     * active remainder throws rather than mislabeling. ON by default (after
     * a soak round of byte-identical gates and a 2× 10M-edge smoke win):
     * identical output either way, the flag only trades per-round freeze
-    * overhead against skewed-tail round cost (wins when rounds >> 3); pass
-    * `freezeStars = false` to opt out on graphs known to converge in 1-2
-    * rounds.
+    * overhead against skewed-tail round cost (wins when rounds >> 3).
+    * Small graphs need no opt-out: below `freezeMinEdges` initial edges
+    * (default [[FreezeMinEdges]]) the freeze is skipped automatically,
+    * since those rounds are scheduling-bound and freezing only adds jobs.
     */
-  /** Rounds the most recent [[connectedComponents]] call on this JVM took
-    * to converge — diagnostic only (the ScaleSmoke O(log n) round gate);
-    * racing concurrent CC calls read whichever finished last.
-    */
-  private[graft] val lastCcRounds = new java.util.concurrent.atomic.AtomicInteger(-1)
-
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 50, freezeStars: Boolean = true,
       freezeMinEdges: Long = FreezeMinEdges): DataFrame = {
@@ -2293,14 +2221,9 @@ object DedupOps {
     */
   def buildClusterStore(pairs: DataFrame, aCol: String, bCol: String,
       path: String): Unit =
-      graft.StoreLock.withLock(pairs.sparkSession, path) {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(pairs.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    connectedComponents(pairs, aCol, bCol)
-      .select(col("id"), col("component"), lit(0L).as("seq"))
-      .write.mode("overwrite").parquet(s"$path/batch=base")
-    graft.StoreCommit.commit(pairs.sparkSession, path, "base")
+      graft.StoreCommit.rebuild(pairs.sparkSession, path) {
+    writeStoreBatch(connectedComponents(pairs, aCol, bCol)
+      .select(col("id"), col("component"), lit(0L).as("seq")), path, "base")
   }
 
   /** Fold a NEW batch of near-dup pairs (e.g. [[incrementalNearDupPairs]]'
@@ -2331,13 +2254,9 @@ object DedupOps {
     // dir; its half-visible labels would poison the touched-component
     // lookup (a member shadowed into the merged component while a sibling
     // is not → the sibling silently keeps its stale label). Replay starts
-    // from a clean slate instead.
-    val tokDir = new org.apache.hadoop.fs.Path(s"$path/batch=$batchToken")
-    val tfs = tokDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // marker first: racing probes must stop seeing the dir BEFORE it is
-    // deleted, or a committed-read could open a path mid-removal
-    graft.StoreCommit.uncommit(spark, path, batchToken)
-    if (tfs.exists(tokDir)) { tfs.delete(tokDir, true); spark.catalog.refreshByPath(path) }
+    // from a clean slate instead (marker first: racing probes must stop
+    // seeing the dir BEFORE it is deleted).
+    graft.StoreCommit.dropBatch(spark, path, batchToken)
     // prune the RAW store BEFORE any latest-wins aggregation — the full
     // [[loadClusterLabels]] view would cost a corpus-sized hash-agg per
     // update. The prune is exact because membership is MONOTONE: edges are
@@ -2376,9 +2295,7 @@ object DedupOps {
       .agg(coalesce(max(col("seq")), lit(-1L))).head()
     val seq = seqRow.getLong(0) + 1L
     val out = fresh.select(col("id"), col("component"), lit(seq).as("seq"))
-    out.write.mode("overwrite").parquet(s"$path/batch=$batchToken")
-    graft.StoreCommit.commit(spark, path, batchToken)
-    spark.catalog.refreshByPath(path)
+    writeStoreBatch(out, path, batchToken)
     out
   }
 
@@ -2390,17 +2307,10 @@ object DedupOps {
     * rebuild-dst-then-swap contract as the other compactors.
     */
   def compactClusterStore(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String): Unit = {
-    require(srcPath != dstPath, "compact to a NEW path, then swap")
-    val p = new org.apache.hadoop.fs.Path(dstPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    loadClusterLabels(spark, srcPath)
-      .select(col("id"), col("component"), lit(0L).as("seq"))
-      .write.mode("overwrite").parquet(s"$dstPath/batch=base")
-    graft.StoreCommit.commit(spark, dstPath, "base")
-    spark.catalog.refreshByPath(dstPath)
-  }
+      srcPath: String, dstPath: String): Unit =
+    graft.StoreCommit.compact(spark, srcPath, dstPath)(_.write(
+      loadClusterLabels(spark, srcPath)
+        .select(col("id"), col("component"), lit(0L).as("seq"))))
 
   /** Per-cluster KEEP-BEST representative selection: every doc labeled with
     * its near-dup component ([[connectedComponents]] over `pairs`; docs in

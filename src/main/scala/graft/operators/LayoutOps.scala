@@ -73,12 +73,9 @@ object LayoutOps {
     */
   def writeZOrdered(df: DataFrame, zCols: Seq[String], path: String,
       nFiles: Int = 64, bits: Int = 21, batchToken: String = "base"): Unit =
-      graft.StoreLock.withLock(df.sparkSession, path) {
+      graft.StoreCommit.rebuild(df.sparkSession, path) {
     require(zCols.nonEmpty, "writeZOrdered needs at least one layout column")
     val spark = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
     import spark.implicits._
     Seq((zCols.mkString(","), bits)).toDF("z_cols", "bits")
       .coalesce(1).write.parquet(s"$path/_layout_meta")

@@ -36,10 +36,7 @@ object SearchOps {
   /** Build (overwrite) the index at `path` from scratch. */
   def buildPostingsIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit =
-      graft.StoreLock.withLock(docs.sparkSession, path) {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // full rebuild: no stale batch dirs
+      graft.StoreCommit.rebuild(docs.sparkSession, path) {
     appendPostingsIndex(docs, idCol, textCol, path, "base")
   }
 
@@ -53,7 +50,6 @@ object SearchOps {
       batchToken: String = java.util.UUID.randomUUID.toString): Unit =
       graft.StoreLock.withLock(docs.sparkSession, path) {
     DedupOps.ensureHashRegistered(docs)
-    val spark = docs.sparkSession
     // null text = empty text: the doc must still reach the postings (as its
     // [''] token) so the n_docs sidecar counts it — [[keywordTopKIndexed]]
     // and [[TextOps.keywordTopK]] must agree on N for any corpus
@@ -61,40 +57,41 @@ object SearchOps {
     // BM25's length normalization needs it at probe time, and a separate
     // per-doc sidecar would cost the probe an O(corpus) id-join — carrying
     // one int per posting keeps the probe fully bucket-pruned
-    // replay hook: drop the token's marker before rewriting its dirs —
-    // the three families commit ALL-OR-NOTHING under one marker after the
-    // last sidecar lands ([[graft.StoreCommit]]'s multi-family contract)
-    graft.StoreCommit.uncommit(spark, path, batchToken)
-    docs.select(col(idCol).as("id"),
-        explode(TextOps.tokens(coalesce(col(textCol), lit("")))).as("term"),
-        TextOps.tokenCount(coalesce(col(textCol), lit(""))).as("dl"))
-      .groupBy(col("id"), col("term"))
-      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-      .withColumn("bkt", pmod(DedupOps.baseHash(col("term")), lit(TermBuckets.toLong)))
+    graft.StoreCommit.writeBatch(docs.sparkSession, path, batchToken)(
+      writePostingsBatch(_, docs.select(col(idCol).as("id"),
+          explode(TextOps.tokens(coalesce(col(textCol), lit("")))).as("term"),
+          TextOps.tokenCount(coalesce(col(textCol), lit(""))).as("dl"))
+        .groupBy(col("id"), col("term"))
+        .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
+        .withColumn("bkt", pmod(DedupOps.baseHash(col("term")), lit(TermBuckets.toLong)))))
+  }
+
+  /** One token's three families from its (id, term, tf, dl, bkt) postings
+    * — shared by appends and compaction, so both derive the df/count
+    * sidecars the same way; they commit ALL-OR-NOTHING under the token's
+    * one marker ([[graft.StoreCommit]]'s multi-family contract).
+    */
+  private def writePostingsBatch(b: graft.StoreCommit.BatchWriter,
+      postings: DataFrame): Unit = {
+    val dir = b.dir("postings")
+    postings
       .repartition(TermBuckets, col("bkt")) // one writer task per bucket — no small files
       .write.partitionBy("bkt").mode("overwrite")
-      .parquet(s"$path/postings/batch=$batchToken")
+      .parquet(dir)
     // sidecars from the written batch: one (id, term) row per doc-term, so
     // count(*) per term IS the batch's df and count_distinct(id) its size
     // (every doc emits >= 1 token — split of "" is [""])
-    val back = spark.read.parquet(s"$path/postings/batch=$batchToken")
+    val back = postings.sparkSession.read.parquet(dir)
     back.groupBy(col("term"), col("bkt"))
       .agg(count(lit(1)).as("df"))
       .repartition(TermBuckets, col("bkt"))
       .write.partitionBy("bkt").mode("overwrite")
-      .parquet(s"$path/terms/batch=$batchToken")
+      .parquet(b.dir("terms"))
     // n_tokens = Σ tf over the batch = Σ dl over its (disjoint) docs —
     // additive across batches like n_docs, and the probe's avgdl input
-    back.agg(count_distinct(col("id")).as("n_docs"),
+    b.write(back.agg(count_distinct(col("id")).as("n_docs"),
         sum(col("tf")).cast("long").as("n_tokens"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/counts/batch=$batchToken")
-    graft.StoreCommit.commit(spark, path, batchToken)
-    // an append (or a replayed token's overwrite) mutates files under paths
-    // a prior probe in this session may have LISTING-CACHED — drop those
-    // entries or the next probe reads deleted part files
-    Seq("postings", "terms", "counts").foreach(sub =>
-      spark.catalog.refreshByPath(s"$path/$sub"))
+      .coalesce(1), "counts")
   }
 
   /** Compact a many-batch index (a long-running streaming tail appends one
@@ -109,32 +106,10 @@ object SearchOps {
     * The caller swaps paths when the new index is complete.
     */
   def compactPostingsIndex(spark: SparkSession, srcPath: String,
-      dstPath: String): Unit = {
-    require(srcPath != dstPath, "compact to a NEW path, then swap")
-    val p = new org.apache.hadoop.fs.Path(dstPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    graft.StoreCommit.read(spark, srcPath, Some("postings"))
-      .select(col("id"), col("term"), col("tf"), col("dl"), col("bkt"))
-      .repartition(TermBuckets, col("bkt"))
-      .write.partitionBy("bkt").mode("overwrite")
-      .parquet(s"$dstPath/postings/batch=base")
-    val back = spark.read.parquet(s"$dstPath/postings/batch=base")
-    back.groupBy(col("term"), col("bkt"))
-      .agg(count(lit(1)).as("df"))
-      .repartition(TermBuckets, col("bkt"))
-      .write.partitionBy("bkt").mode("overwrite")
-      .parquet(s"$dstPath/terms/batch=base")
-    back.agg(count_distinct(col("id")).as("n_docs"),
-        sum(col("tf")).cast("long").as("n_tokens"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dstPath/counts/batch=base")
-    graft.StoreCommit.commit(spark, dstPath, "base")
-    // same staleness hazard as appends: a re-compaction to a dst this
-    // session already probed must drop the old listing-cache entries
-    Seq("postings", "terms", "counts").foreach(sub =>
-      spark.catalog.refreshByPath(s"$dstPath/$sub"))
-  }
+      dstPath: String): Unit =
+    graft.StoreCommit.compact(spark, srcPath, dstPath)(
+      writePostingsBatch(_, graft.StoreCommit.read(spark, srcPath, Some("postings"))
+        .select(col("id"), col("term"), col("tf"), col("dl"), col("bkt"))))
 
   /** Top-k docs for `terms` from a persisted index: IDENTICAL result to
     * [[TextOps.keywordTopK]] over the union of all appended batches (df

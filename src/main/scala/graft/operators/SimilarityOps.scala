@@ -50,11 +50,6 @@ object SimilarityOps {
     graft.functions.IvfBestCell.register(df.sparkSession)
   }
 
-  /** Exact cosine between quantized vectors, as double. */
-  def cosineQ(a: Column, b: Column): Column =
-    dotInt(a, b).cast("double") /
-      (sqrt(dotInt(a, a).cast("double")) * sqrt(dotInt(b, b).cast("double")))
-
   /** (id, quantized vector, precomputed norm): norms are computed once per
     * vector, not once per pair — the dominant cost in pairwise scoring.
     */
@@ -161,31 +156,25 @@ object SimilarityOps {
     */
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String, path: String,
       nCells: Int = 16, refineIters: Int = 2): Unit =
-      graft.StoreLock.withLock(corpus.sparkSession, path) {
+      graft.StoreCommit.rebuild(corpus.sparkSession, path) {
     ensureRegistered(corpus)
-    // full rebuild: clear stale append batches too (mirrors
-    // [[DedupOps.buildMinhashStore]])
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
     val cq = prep(corpus, idCol, vecCol, "id", "v", "nrm")
     val cents = refinedCentroids(cq, nCells, refineIters)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    writeAssignedBatch(bestCell(cq, cents, "id", "v", "nrm"), path, "base")
-    graft.StoreCommit.commit(corpus.sparkSession, path, "base")
+    graft.StoreCommit.writeBatch(corpus.sparkSession, path, "base") { b =>
+      b.sidecar(cents, "centroids")
+      writeByCell(bestCell(cq, cents, "id", "v", "nrm"), b.dir("assigned"))
+    }
   }
 
-  /** One batch's cell assignments land as `assigned/batch=<token>/cell=*`:
-    * the batch dir is an atomic per-token overwrite (replay-idempotent, the
-    * minhash-store pattern) and `cell` stays a hive partition column, so
-    * probes keep pruning to their nProbe cells' dirs within every batch.
+  /** A batch dir of cell-keyed rows (`assigned/` or IVF+PQ `codes/`)
+    * with `cell` kept as a hive partition column, so probes keep pruning
+    * to their nProbe cells' dirs within every batch.
     */
-  private def writeAssignedBatch(assigned: DataFrame, path: String,
-      batchToken: String): Unit =
-    assigned
+  private def writeByCell(rows: DataFrame, dir: String): Unit =
+    rows
       .repartition(col("cell")) // one writer task per cell — no small files
       .write.partitionBy("cell").mode("overwrite")
-      .parquet(s"$path/assigned/batch=$batchToken")
+      .parquet(dir)
 
   /** Append new vectors to a persisted IVF index WITHOUT a rebuild — the
     * serving-side ingest path (mirrors [[DedupOps.appendMinhashStore]]):
@@ -215,9 +204,8 @@ object SimilarityOps {
     require(bad.isEmpty,
       s"appendIvfIndex: appended vector dimension != index dimension $dim at $path")
     val nq = prep(newVecs, idCol, vecCol, "id", "v", "nrm")
-    graft.StoreCommit.uncommit(spark, path, batchToken)
-    writeAssignedBatch(bestCell(nq, cents, "id", "v", "nrm"), path, batchToken)
-    graft.StoreCommit.commit(spark, path, batchToken)
+    graft.StoreCommit.writeBatch(spark, path, batchToken)(b =>
+      writeByCell(bestCell(nq, cents, "id", "v", "nrm"), b.dir("assigned")))
   }
 
   /** Probe a persisted IVF index (see [[buildIvfIndex]]); same results as
@@ -358,10 +346,7 @@ object SimilarityOps {
     */
   def buildEmbStore(df: DataFrame, idCol: String, vecCol: String,
       path: String): Unit =
-      graft.StoreLock.withLock(df.sparkSession, path) {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+      graft.StoreCommit.rebuild(df.sparkSession, path) {
     appendEmbStore(df, idCol, vecCol, path, "base")
   }
 
@@ -372,8 +357,6 @@ object SimilarityOps {
       batchToken: String = java.util.UUID.randomUUID.toString): Unit =
       graft.StoreLock.withLock(df.sparkSession, path) {
     ensureRegistered(df)
-    // committed-read contract ([[graft.StoreCommit]]), same as the dedup
-    // store family: the batch is invisible to probes until its marker lands
     graft.operators.DedupOps.writeStoreBatch(
       prep(df, idCol, vecCol, "id", "v", "nrm"), path, batchToken)
   }
@@ -617,27 +600,27 @@ object SimilarityOps {
     */
   def buildSq8Index(corpus: DataFrame, idCol: String, vecCol: String,
       path: String): Unit =
-      graft.StoreLock.withLock(corpus.sparkSession, path) {
+      graft.StoreCommit.rebuild(corpus.sparkSession, path) {
     ensureRegistered(corpus)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
     val c = prep(corpus, idCol, vecCol, "neighbor_id", "cv", "cn")
     // an empty corpus has no scale: a zero-row meta would make every later
     // probe silently return nothing — fail at build time instead (the same
     // loud contract as appendSq8Index on a missing index)
     require(!c.isEmpty, s"buildSq8Index: empty corpus, no scale to derive for $path")
     val gm = corpusGmax(c, "cv")
-    c.crossJoin(broadcast(gm))
-      .select(col("__gm").as("gmax"), size(col("cv")).as("dim"))
-      .limit(1)
-      .write.mode("overwrite").parquet(s"$path/meta")
+    graft.StoreCommit.writeBatch(c.sparkSession, path, "base") { b =>
+      b.sidecar(c.crossJoin(broadcast(gm))
+        .select(col("__gm").as("gmax"), size(col("cv")).as("dim"))
+        .limit(1), "meta")
+      b.write(sq8Codes(c, gm), "codes")
+    }
+  }
+
+  /** (id, c8) SQ8 code rows of prepped vectors under the scale `gm`. */
+  private def sq8Codes(c: DataFrame, gm: DataFrame): DataFrame =
     c.crossJoin(broadcast(gm))
       .select(col("neighbor_id").as("id"),
         q8Expr("cv").cast("array<int>").as("c8"))
-      .write.mode("overwrite").parquet(s"$path/codes/batch=base")
-    graft.StoreCommit.commit(c.sparkSession, path, "base")
-  }
 
   /** Append new vectors' codes to a persisted SQ8 index without a rebuild
     * (cf. [[appendIvfIndex]]): encode under the STORED scale, reject a
@@ -678,15 +661,8 @@ object SimilarityOps {
     }
     val c = prep(newVecs, idCol, vecCol, "neighbor_id", "cv", "cn")
     val gm = spark.read.parquet(s"$path/meta").select(col("gmax").as("__gm"))
-    // replay hook: drop the token's marker before rewriting its dir, so a
-    // probe racing the rewrite sees the pre-replay index, never a half-
-    // rewrite ([[graft.StoreCommit]]); commit lands after the write
-    graft.StoreCommit.uncommit(spark, path, batchToken)
-    c.crossJoin(broadcast(gm))
-      .select(col("neighbor_id").as("id"),
-        q8Expr("cv").cast("array<int>").as("c8"))
-      .write.mode("overwrite").parquet(s"$path/codes/batch=$batchToken")
-    graft.StoreCommit.commit(spark, path, batchToken)
+    graft.StoreCommit.writeBatch(spark, path, batchToken)(
+      _.write(sq8Codes(c, gm), "codes"))
   }
 
   /** Probe a persisted SQ8 index: stage-1 candidates from the stored
@@ -1033,40 +1009,35 @@ object SimilarityOps {
   def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       path: String, nCells: Int = 16, ivfRefine: Int = 2,
       m: Int = 4, ksub: Int = 8, pqRefine: Int = 1): Unit =
-      graft.StoreLock.withLock(corpus.sparkSession, path) {
+      graft.StoreCommit.rebuild(corpus.sparkSession, path) {
     ensureRegistered(corpus)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
     val c = prep(corpus, idCol, vecCol, "id", "v", "nrm")
     require(!c.isEmpty, s"buildIvfPqIndex: empty corpus, nothing to train for $path")
-    val cents = refinedCentroids(c, nCells, ivfRefine)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    val book = trainPqBook(c.select(col("id"), col("v")), m, ksub, pqRefine)
-    Seq((m, ksub, book.dim)).toDF("m", "ksub", "dim")
-      .write.mode("overwrite").parquet(s"$path/meta")
-    book.rows.toDF("j", "cell", "cv")
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    writeCellCodes(bestCell(c, cents, "id", "v", "nrm"), book, path, "base")
-    graft.StoreCommit.commit(corpus.sparkSession, path, "base")
+    graft.StoreCommit.writeBatch(corpus.sparkSession, path, "base") { b =>
+      val cents = refinedCentroids(c, nCells, ivfRefine)
+      b.sidecar(cents, "centroids")
+      val book = trainPqBook(c.select(col("id"), col("v")), m, ksub, pqRefine)
+      writePqBook(corpus.sparkSession, b, book, m, ksub)
+      writeByCell(cellCodes(bestCell(c, cents, "id", "v", "nrm"), book),
+        b.dir("codes"))
+    }
   }
 
-  /** One batch's (id, codes) rows land cell-partitioned under an atomic
-    * per-token batch dir (the [[writeAssignedBatch]] + [[appendPqIndex]]
-    * contracts combined): replay-idempotent, one writer task per cell.
+  /** One batch's (id, codes, cell) rows: [[bestCell]] assignments encoded
+    * against `book`, for [[writeByCell]].
     */
-  private def writeCellCodes(assigned: DataFrame, book: PqBook, path: String,
-      batchToken: String): Unit = {
-    val bf = book.frame(assigned.sparkSession)
-    assigned.crossJoin(broadcast(bf))
+  private def cellCodes(assigned: DataFrame, book: PqBook): DataFrame =
+    assigned.crossJoin(broadcast(book.frame(assigned.sparkSession)))
       .select(col("id"),
         pqEncodeCol(col("v"), col("__cents"), col("__joff")).as("codes"),
         col("cell"))
-      .repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite")
-      .parquet(s"$path/codes/batch=$batchToken")
+
+  /** The PQ `meta` (m, ksub, dim) and `codebooks` sidecars of a build. */
+  private def writePqBook(spark: org.apache.spark.sql.SparkSession,
+      b: graft.StoreCommit.BatchWriter, book: PqBook, m: Int, ksub: Int): Unit = {
+    import spark.implicits._
+    b.sidecar(Seq((m, ksub, book.dim)).toDF("m", "ksub", "dim"), "meta")
+    b.sidecar(book.rows.toDF("j", "cell", "cv"), "codebooks")
   }
 
   /** Append new vectors under the FROZEN centroids and codebooks: assign
@@ -1101,10 +1072,8 @@ object SimilarityOps {
     val cents = spark.read.parquet(s"$path/centroids")
     val book = readPqBook(spark, path, m, dim)
     val c = prep(newVecs, idCol, vecCol, "id", "v", "nrm")
-    graft.StoreCommit.uncommit(spark, path, batchToken)
-    writeCellCodes(bestCell(c, cents, "id", "v", "nrm"), book, path, batchToken)
-    graft.StoreCommit.commit(spark, path, batchToken)
-    spark.catalog.refreshByPath(s"$path/codes")
+    graft.StoreCommit.writeBatch(spark, path, batchToken)(b => writeByCell(
+      cellCodes(bestCell(c, cents, "id", "v", "nrm"), book), b.dir("codes")))
   }
 
   /** Probe a persisted IVF+PQ index: the probed cell set (≤ queries ×
@@ -1163,23 +1132,15 @@ object SimilarityOps {
     */
   def buildPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       path: String, m: Int = 4, ksub: Int = 8, refineIters: Int = 1): Unit =
-      graft.StoreLock.withLock(corpus.sparkSession, path) {
+      graft.StoreCommit.rebuild(corpus.sparkSession, path) {
     ensureRegistered(corpus)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
     val c = prep(corpus, idCol, vecCol, "id", "v", "nrm")
     require(!c.isEmpty, s"buildPqIndex: empty corpus, no codebooks to train for $path")
-    val book = trainPqBook(c.select(col("id"), col("v")), m, ksub, refineIters)
-    Seq((m, ksub, book.dim)).toDF("m", "ksub", "dim")
-      .write.mode("overwrite").parquet(s"$path/meta")
-    book.rows.toDF("j", "cell", "cv")
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    pqEncodeAll(c.select(col("id"), col("v")), book)
-      .write.mode("overwrite").parquet(s"$path/codes/batch=base")
-    graft.StoreCommit.commit(corpus.sparkSession, path, "base")
+    graft.StoreCommit.writeBatch(corpus.sparkSession, path, "base") { b =>
+      val book = trainPqBook(c.select(col("id"), col("v")), m, ksub, refineIters)
+      writePqBook(corpus.sparkSession, b, book, m, ksub)
+      b.write(pqEncodeAll(c.select(col("id"), col("v")), book), "codes")
+    }
   }
 
   /** Read a persisted codebook back into driver form. */
@@ -1228,21 +1189,10 @@ object SimilarityOps {
     }
     val book = readPqBook(spark, path, m, dim)
     val c = prep(newVecs, idCol, vecCol, "id", "v", "nrm")
-    graft.StoreCommit.uncommit(spark, path, batchToken)
-    pqEncodeAll(c.select(col("id"), col("v")), book)
-      .write.mode("overwrite").parquet(s"$path/codes/batch=$batchToken")
-    graft.StoreCommit.commit(spark, path, batchToken)
-    spark.catalog.refreshByPath(s"$path/codes")
+    graft.StoreCommit.writeBatch(spark, path, batchToken)(
+      _.write(pqEncodeAll(c.select(col("id"), col("v")), book), "codes"))
   }
 
-  /** Compact a streaming-grown PQ index to a NEW path: meta + codebooks
-    * rewritten verbatim, the many `batch=` code dirs collapsed into one
-    * `batch=base` (code rows are per-id and ids are disjoint across
-    * batches — the [[graft.operators.DedupOps.compactIdStore]] contract,
-    * here with the index sidecars carried along). Crash-safe like every
-    * compactor in the family: dst is rebuilt from scratch and src is
-    * untouched until the caller swaps paths.
-    */
   /** RECALL-DRIFT probe for a persisted PQ index — the monitoring signal
     * VERDICT r6 asked for: appends encode under FROZEN codebooks, so a
     * drifting corpus silently degrades candidate recall with no signal
@@ -1363,45 +1313,34 @@ object SimilarityOps {
     buildPqIndex(vecs, idCol, vecCol, dstPath, m, ksub, refineIters)
   }
 
+  /** Compact a streaming-grown PQ index to a NEW path: meta + codebooks
+    * rewritten verbatim, the many `batch=` code dirs collapsed into one
+    * `batch=base` (code rows are per-id and ids are disjoint across
+    * batches — the [[graft.operators.DedupOps.compactIdStore]] contract,
+    * here with the index sidecars carried along), through
+    * [[graft.StoreCommit.compact]].
+    */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String): Unit = {
-    require(srcPath != dstPath, "compact to a NEW path, then swap")
-    val p = new org.apache.hadoop.fs.Path(dstPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    spark.read.parquet(s"$srcPath/meta")
-      .write.mode("overwrite").parquet(s"$dstPath/meta")
-    spark.read.parquet(s"$srcPath/codebooks")
-      .write.mode("overwrite").parquet(s"$dstPath/codebooks")
-    val codes = graft.StoreCommit.read(spark, srcPath, Some("codes"))
-    codes.select(codes.columns.filter(_ != "batch").map(col): _*)
-      .write.mode("overwrite").parquet(s"$dstPath/codes/batch=base")
-    graft.StoreCommit.commit(spark, dstPath, "base")
-    spark.catalog.refreshByPath(s"$dstPath/codes")
-  }
+      srcPath: String, dstPath: String): Unit =
+    graft.StoreCommit.compact(spark, srcPath, dstPath) { b =>
+      Seq("meta", "codebooks").foreach(side =>
+        b.sidecar(spark.read.parquet(s"$srcPath/$side"), side))
+      b.write(graft.StoreCommit.read(spark, srcPath, Some("codes")).drop("batch"),
+        "codes")
+    }
 
   /** [[compactPqIndex]] for the IVF+PQ layout: centroids come along and
     * the rewritten codes KEEP their `cell=` partitioning (one writer task
     * per cell), so probes stay directory-pruned after compaction.
     */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String): Unit = {
-    require(srcPath != dstPath, "compact to a NEW path, then swap")
-    val p = new org.apache.hadoop.fs.Path(dstPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    Seq("centroids", "meta", "codebooks").foreach { side =>
-      spark.read.parquet(s"$srcPath/$side")
-        .write.mode("overwrite").parquet(s"$dstPath/$side")
+      srcPath: String, dstPath: String): Unit =
+    graft.StoreCommit.compact(spark, srcPath, dstPath) { b =>
+      Seq("centroids", "meta", "codebooks").foreach(side =>
+        b.sidecar(spark.read.parquet(s"$srcPath/$side"), side))
+      writeByCell(graft.StoreCommit.read(spark, srcPath, Some("codes")).drop("batch"),
+        b.dir("codes"))
     }
-    val codes = graft.StoreCommit.read(spark, srcPath, Some("codes"))
-    codes.select(codes.columns.filter(_ != "batch").map(col): _*)
-      .repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite")
-      .parquet(s"$dstPath/codes/batch=base")
-    graft.StoreCommit.commit(spark, dstPath, "base")
-    spark.catalog.refreshByPath(s"$dstPath/codes")
-  }
 
   /** Probe a persisted PQ index: ADC scan over the stored codes, exact
     * rescore against `corpus` (vectors' source of truth; only candidate

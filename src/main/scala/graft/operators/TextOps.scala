@@ -334,11 +334,8 @@ object TextOps {
     * curated releases, not streams); [[buildLmModel]] overwrites.
     */
   def buildLmModel(ref: DataFrame, textCol: String, path: String): Unit =
-      graft.StoreLock.withLock(ref.sparkSession, path) {
+      graft.StoreCommit.rebuild(ref.sparkSession, path) {
     val spark = ref.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
     val refBg = graft.CacheScope.persist(bigramRows(ref, textCol, Seq.empty))
     refBg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
       .write.mode("overwrite").parquet(s"$path/c12")

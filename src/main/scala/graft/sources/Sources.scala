@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.GraftSession
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -11,11 +10,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * over the data and non-deterministic under schema drift).
   */
 object Sources {
-
-  def readParquet(spark: SparkSession, path: String): DataFrame = {
-    GraftSession.tune(spark)
-    spark.read.parquet(path)
-  }
 
   def readCsv(spark: SparkSession, path: String, schema: Option[StructType] = None,
       header: Boolean = true, delimiter: String = ","): DataFrame = {
@@ -48,16 +42,4 @@ object Sources {
     (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
       .format("parquet").saveAsTable(table)
   }
-
-  /** JDBC passthrough (catalog DBs, dimension tables). Partitioned reads
-    * need (column, bounds, numPartitions) or every executor funnels through
-    * one connection.
-    */
-  def readJdbc(spark: SparkSession, url: String, table: String,
-      partitionColumn: Option[(String, Long, Long, Int)] = None,
-      props: java.util.Properties = new java.util.Properties()): DataFrame =
-    partitionColumn match {
-      case Some((c, lo, hi, n)) => spark.read.jdbc(url, table, c, lo, hi, n, props)
-      case None                 => spark.read.jdbc(url, table, props)
-    }
 }

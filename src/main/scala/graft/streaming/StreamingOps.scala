@@ -250,14 +250,8 @@ object StreamingOps {
           val spark = batch.sparkSession
           val scope = graft.CacheScope.snapshot()
           // drop a replayed batch's own half-committed store dir BEFORE
-          // the probe reads the store (marker first — see StoreCommit)
-          graft.StoreCommit.uncommit(spark, storePath, s"b$bid")
-          val own = new org.apache.hadoop.fs.Path(s"$storePath/batch=b$bid")
-          val hfs = own.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (hfs.exists(own)) {
-            hfs.delete(own, true)
-            spark.catalog.refreshByPath(storePath)
-          }
+          // the probe reads the store
+          graft.StoreCommit.dropBatch(spark, storePath, s"b$bid")
           // cold start is decided by OTHER COMMITTED batch dirs, not bare
           // dir existence: a batch-0 crash-retry leaves storePath present
           // but empty after its own dir is dropped, and reading it would
@@ -457,12 +451,10 @@ object StreamingOps {
           // label-store cold start: an empty base batch types the store
           // from the batch's id column; later updates shadow it
           val lp = new org.apache.hadoop.fs.Path(labelPath)
-          if (!lp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lp)) {
-            batch.select(col(idCol).as("id"), col(idCol).as("component"),
-                lit(0L).as("seq")).limit(0)
-              .write.mode("overwrite").parquet(s"$labelPath/batch=base")
-            graft.StoreCommit.commit(spark, labelPath, "base")
-          }
+          if (!lp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lp))
+            graft.operators.DedupOps.writeStoreBatch(
+              batch.select(col(idCol).as("id"), col(idCol).as("component"),
+                lit(0L).as("seq")).limit(0), labelPath, "base")
           // an empty pair batch has nothing to fold (and CC over an empty
           // edge set is degenerate); the skip replays identically
           if (!pairs.isEmpty)

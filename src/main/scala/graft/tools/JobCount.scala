@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.{Fixtures, SparkEntry}
+import graft.{Fixtures, GraftSession, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main: run named gate queries and report Spark job counts and
   * per-job wall times — the fixed per-query driver-action floor is the
@@ -12,13 +11,7 @@ import org.apache.spark.sql.SparkSession
 object JobCount {
   def main(args: Array[String]): Unit = {
     val (sfDir, pat) = (args(0), args(1).r)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus)
     Fixtures.store(spark, sfDir)
     val starts = scala.collection.concurrent.TrieMap[Int, Long]()
     val jobs = scala.collection.mutable.ArrayBuffer[(Int, Double)]()

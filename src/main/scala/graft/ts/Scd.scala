@@ -164,19 +164,23 @@ object Scd {
   /** Build (overwrite) the SCD2 store from the full observation history. */
   def buildScdStore(df: DataFrame, entityCol: String, timeCol: String,
       attrCols: Seq[String], tieCols: Seq[String], path: String): Unit =
-      graft.StoreLock.withLock(df.sparkSession, path) {
-    val spark = df.sparkSession
-    val fs = fsOf(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(p)) fs.delete(p, true)
-    import spark.implicits._
-    Seq((entityCol, timeCol, attrCols.mkString(","), tieCols.mkString(",")))
-      .toDF("entity_col", "time_col", "attr_cols", "tie_cols")
-      .coalesce(1).write.parquet(s"$path/meta")
-    intervalsWithLastObs(df, entityCol, timeCol, attrCols, tieCols)
-      .withColumn("seq", lit(0L))
-      .write.parquet(s"$path/intervals/batch=base")
-  }
+    writeBase(df.sparkSession, path, entityCol, timeCol, attrCols, tieCols,
+      intervalsWithLastObs(df, entityCol, timeCol, attrCols, tieCols))
+
+  /** Rebuild `path` as its meta plus one `base` interval batch at seq 0 —
+    * the shape both the build and compaction leave.
+    */
+  private def writeBase(spark: org.apache.spark.sql.SparkSession, path: String,
+      entityCol: String, timeCol: String, attrCols: Seq[String],
+      tieCols: Seq[String], intervals: DataFrame): Unit =
+    graft.StoreCommit.rebuild(spark, path) {
+      import spark.implicits._
+      Seq((entityCol, timeCol, attrCols.mkString(","), tieCols.mkString(",")))
+        .toDF("entity_col", "time_col", "attr_cols", "tie_cols")
+        .coalesce(1).write.parquet(s"$path/meta")
+      intervals.withColumn("seq", lit(0L))
+        .write.parquet(s"$path/intervals/batch=base")
+    }
 
   private def readMeta(spark: org.apache.spark.sql.SparkSession,
       path: String): (String, String, Seq[String], Seq[String]) = {
@@ -345,14 +349,6 @@ object Scd {
       .select((col(entityCol) +: attrCols.map(a => col(s"__r.$a").as(a))) :+
         col("valid_from") :+ col("__r.valid_to").as("valid_to") :+
         col("__r.last_obs").as("last_obs"): _*)
-    val fs = fsOf(spark, dstPath)
-    val p = new org.apache.hadoop.fs.Path(dstPath)
-    if (fs.exists(p)) fs.delete(p, true)
-    import spark.implicits._
-    Seq((entityCol, timeCol, attrCols.mkString(","), tieCols.mkString(",")))
-      .toDF("entity_col", "time_col", "attr_cols", "tie_cols")
-      .coalesce(1).write.parquet(s"$dstPath/meta")
-    resolved.withColumn("seq", lit(0L))
-      .write.parquet(s"$dstPath/intervals/batch=base")
+    writeBase(spark, dstPath, entityCol, timeCol, attrCols, tieCols, resolved)
   }
 }

@@ -244,4 +244,105 @@ class StoreCommitSpec extends SparkTestBase {
       s"once committed, the planted doc must surface: $after")
     graft.CacheScope.release()
   }
+
+  test("compact: every compactor's dst equals src's compacted view, even rebuilt over a stale dst") {
+    import org.apache.spark.sql.DataFrame
+    val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+    def d(lo: Int, hi: Int) = docs.where(col("doc_id") >= lo && col("doc_id") < hi)
+    def e(lo: Int, hi: Int) = emb.where(col("vec_id") >= lo && col("vec_id") < hi)
+    def chain(lo: Int, hi: Int) = spark.range(lo, hi)
+      .select(col("id").as("a"), (col("id") + 1).as("b"))
+    // one row per compactor: build, append a token, compact, and the
+    // families (with the fold that resolves src's batches to the compacted
+    // rows — identity for disjoint-id unions) plus sidecars to compare
+    case class Family(name: String, build: String => Unit,
+        append: (String, String, Int) => Unit,
+        compact: (String, String) => Unit,
+        parts: Seq[(String, DataFrame => DataFrame)],
+        sidecars: Seq[String] = Nil)
+    val same: DataFrame => DataFrame = identity
+    val families = Seq(
+      Family("line",
+        DedupOps.buildLineStore(d(0, 200), "doc_id", "text", _),
+        (p, t, lo) => DedupOps.appendLineStore(d(lo, lo + 100), "doc_id", "text", p,
+          batchToken = t),
+        DedupOps.compactLineStore(spark, _, _),
+        Seq("" -> (_.groupBy("h").agg(sum("c").as("c"))))),
+      Family("window",
+        DedupOps.buildWindowStore(d(0, 200), "doc_id", "text", _),
+        (p, t, lo) => DedupOps.appendWindowStore(d(lo, lo + 100), "doc_id", "text", p,
+          batchToken = t),
+        DedupOps.compactWindowStore(spark, _, _),
+        Seq("" -> (_.groupBy("h").agg(min(struct("id", "p")).as("f"))
+          .select(col("h"), col("f.id").as("id"), col("f.p").as("p"))))),
+      Family("id: minhash",
+        DedupOps.buildMinhashStore(d(0, 200), "doc_id", "text", _),
+        (p, t, lo) => DedupOps.appendMinhashStore(d(lo, lo + 100), "doc_id", "text", p,
+          batchToken = t),
+        DedupOps.compactIdStore(spark, _, _),
+        Seq("" -> same)),
+      Family("id: fingerprint",
+        DedupOps.buildFingerprintStore(d(0, 200), "doc_id", "text", _),
+        (p, t, lo) => DedupOps.appendFingerprintStore(d(lo, lo + 100), "doc_id", "text",
+          p, t),
+        DedupOps.compactIdStore(spark, _, _),
+        Seq("" -> same)),
+      Family("winnow",
+        DedupOps.buildWinnowStore(d(0, 200), "doc_id", "text", _),
+        (p, t, lo) => DedupOps.appendWinnowStore(d(lo, lo + 100), "doc_id", "text", p,
+          batchToken = t),
+        DedupOps.compactWinnowStore(spark, _, _),
+        Seq("fps" -> same, "sizes" -> same), Seq("meta")),
+      Family("cluster",
+        DedupOps.buildClusterStore(chain(0, 50), "a", "b", _),
+        (p, t, lo) => DedupOps.updateClusterStore(chain(lo, lo + 50), "a", "b", p, t),
+        DedupOps.compactClusterStore(spark, _, _),
+        Seq("" -> (_.groupBy("id").agg(max(struct("seq", "component")).as("l"))
+          .select(col("id"), col("l.component").as("component"), lit(0L).as("seq"))))),
+      Family("postings",
+        SearchOps.buildPostingsIndex(d(0, 200), "doc_id", "text", _),
+        (p, t, lo) => SearchOps.appendPostingsIndex(d(lo, lo + 100), "doc_id", "text",
+          p, t),
+        SearchOps.compactPostingsIndex(spark, _, _),
+        Seq("postings" -> same,
+          "terms" -> (_.groupBy("term", "bkt").agg(sum("df").as("df"))
+            .select("term", "df", "bkt")),
+          "counts" -> (_.agg(sum("n_docs").as("n_docs"),
+            sum("n_tokens").as("n_tokens"))))),
+      Family("pq",
+        SimilarityOps.buildPqIndex(e(0, 200), "vec_id", "embedding", _),
+        (p, t, lo) => SimilarityOps.appendPqIndex(e(lo, lo + 100), "vec_id", "embedding",
+          p, t),
+        SimilarityOps.compactPqIndex(spark, _, _),
+        Seq("codes" -> same), Seq("meta", "codebooks")),
+      Family("ivf+pq",
+        SimilarityOps.buildIvfPqIndex(e(0, 200), "vec_id", "embedding", _),
+        (p, t, lo) => SimilarityOps.appendIvfPqIndex(e(lo, lo + 100), "vec_id",
+          "embedding", p, t),
+        SimilarityOps.compactIvfPqIndex(spark, _, _),
+        Seq("codes" -> same), Seq("centroids", "meta", "codebooks")))
+    families.foreach { f =>
+      val root = tmpDir("sc_compact")
+      val (src, dst) = (s"$root/src", s"$root/dst")
+      def rows(df: DataFrame) = df.collect().toSet
+      def sub(s: String) = Option(s).filter(_.nonEmpty)
+      f.build(src)
+      f.append(src, "b1", 200)
+      f.compact(src, dst)
+      f.append(src, "b2", 300) // dst is now stale: the next compaction rebuilds it
+      f.compact(src, dst)
+      f.parts.foreach { case (s, fold) =>
+        val view = rows(fold(StoreCommit.read(spark, src, sub(s)).drop("batch")))
+        assert(view.nonEmpty, s"${f.name}/$s: empty source view")
+        assert(StoreCommit.visibleTokens(spark, dst, sub(s)) == Seq("base"), f.name)
+        assert(rows(StoreCommit.read(spark, dst, sub(s)).drop("batch")) == view,
+          s"${f.name}/$s: compacted rows != src's compacted view")
+      }
+      f.sidecars.foreach(side => assert(
+        rows(spark.read.parquet(s"$dst/$side")) == rows(spark.read.parquet(s"$src/$side")),
+        s"${f.name}: sidecar $side"))
+      intercept[IllegalArgumentException](f.compact(src, src))
+      graft.CacheScope.release()
+    }
+  }
 }
