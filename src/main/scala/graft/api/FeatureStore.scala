@@ -125,21 +125,18 @@ class FeatureStore(
     * streaming micro-batch appends a part-file set; see
     * [[graft.storage.TimeseriesStorage.compactFeature]] for the rewrite
     * contract: all `(time, created_time)` versions preserved, crash-safe
-    * swap under the store lock). Covers whichever layouts the feature
-    * has data in (plain and/or entity-keyed); stats are summed.
+    * swap under the store lock). Compacts the one layout the catalog
+    * entry names: entity-keyed when it carries
+    * [[FeatureStore.EntityKeysMeta]], plain otherwise.
     */
   def compactFeature(qualified: String,
       targetBytes: Long = graft.storage.TimeseriesStorage.DefaultCompactTargetBytes)
       : graft.storage.CompactionStats = {
     val (ns, n) = Catalog.splitName(qualified)
-    requireFeature(ns, n)
-    val plain = storage.compactFeature(ns, n, targetBytes)
-    val keyed = storage.compactKeyed(ns, n, targetBytes)
-    graft.storage.CompactionStats(
-      plain.partitionsCompacted + keyed.partitionsCompacted,
-      plain.filesBefore + keyed.filesBefore,
-      plain.filesAfter + keyed.filesAfter,
-      plain.bytesRewritten + keyed.bytesRewritten)
+    val f = catalog.getFeature(ns, n)
+      .getOrElse(throw new MissingFeatureException(s"no feature: $ns/$n"))
+    if (f.meta.contains(FeatureStore.EntityKeysMeta)) storage.compactKeyed(ns, n, targetBytes)
+    else storage.compactFeature(ns, n, targetBytes)
   }
 
   /** [[compactFeature]] for a feature group's single wide table. */
@@ -149,10 +146,6 @@ class FeatureStore(
     val (ns, n) = Catalog.splitName(qualified)
     storage.compactGroup(ns, n, targetBytes)
   }
-
-  private def requireFeature(ns: String, n: String): Unit =
-    if (catalog.getFeature(ns, n).isEmpty)
-      throw new MissingFeatureException(s"no feature: $ns/$n")
 
   // ---- persisted store/index registry ---------------------------------------
 
@@ -352,7 +345,7 @@ class FeatureStore(
       // ONE-SCAN wide export: every feature's pruned partition dirs feed
       // a single multi-dir read (feature identity from the file path) —
       // one listing, one codegen'd scan leg, files coalesced across
-      // features ([[graft.storage.TimeseriesStorage.scanStacked]]).
+      // features ([[graft.storage.TimeseriesStorage.scanStackedWithBounds]]).
       // Requires a shared pinned value dtype and path-safe names; both
       // hold for every store this library writes. The per-feature-scan
       // union below stays as the fallback (unpinned dtypes: features
@@ -396,7 +389,7 @@ class FeatureStore(
           scala.concurrent.Future {
             val dtype = if (f.serialized) Some("string")
               else f.meta.get(Catalog.ValueDtypeKey)
-            q -> storage.scan(f.namespace, f.name, fromTs, toTs, None, None,
+            q -> storage.scan(f.namespace, f.name, fromTs, toTs,
               timeTravel, f.partitionScheme, f.serialized, dtype)
           }
         }.map(scala.concurrent.Await.result(
@@ -561,9 +554,7 @@ class FeatureStore(
   }
 
   def saveGroup(qualified: String, df: DataFrame): Unit = {
-    val (ns, n) = Catalog.splitName(qualified)
-    val g = catalog.getGroup(ns, n)
-      .getOrElse(throw new MissingFeatureException(s"no group: $qualified"))
+    val (ns, n, g, _) = resolveGroup(qualified)
     storage.saveGroup(ns, n, df, g.columns, g.partitionScheme)
   }
 
@@ -573,6 +564,16 @@ class FeatureStore(
   def loadGroup(qualified: String, columns: Seq[String] = Nil,
       from: Option[String] = None, to: Option[String] = None,
       timeTravel: Option[String] = None): DataFrame = {
+    val (ns, n, g, cols) = resolveGroup(qualified, columns)
+    storage.loadGroup(ns, n, cols, from.map(TimeUtil.parseTimestamp),
+      to.map(TimeUtil.parseTimestamp), timeTravel, g.partitionScheme)
+  }
+
+  /** The catalog entry of group `qualified` and the requested column
+    * subset (every column when `columns` is empty), checked against it.
+    */
+  private def resolveGroup(qualified: String, columns: Seq[String] = Nil)
+      : (String, String, GroupDef, Seq[String]) = {
     val (ns, n) = Catalog.splitName(qualified)
     val g = catalog.getGroup(ns, n)
       .getOrElse(throw new MissingFeatureException(s"no group: $qualified"))
@@ -580,8 +581,7 @@ class FeatureStore(
     val unknown = cols.filterNot(g.columns.contains)
     if (unknown.nonEmpty)
       throw new FeatureStoreException(s"group $qualified has no columns: ${unknown.mkString(",")}")
-    storage.loadGroup(ns, n, cols, from.map(TimeUtil.parseTimestamp),
-      to.map(TimeUtil.parseTimestamp), timeTravel, g.partitionScheme)
+    (ns, n, g, cols)
   }
 
   /** Create an ENTITY-KEYED feature group: N signals per entity in one
@@ -599,27 +599,27 @@ class FeatureStore(
   }
 
   def saveKeyedGroup(qualified: String, df: DataFrame): Unit = {
-    val (ns, n) = Catalog.splitName(qualified)
-    val g = catalog.getGroup(ns, n)
-      .getOrElse(throw new MissingFeatureException(s"no group: $qualified"))
+    val (ns, n, g, _) = resolveGroup(qualified)
     storage.saveKeyedGroup(ns, n, df, keyedGroupKeys(g, qualified),
       g.columns, g.partitionScheme)
   }
 
   def loadKeyedGroup(qualified: String, columns: Seq[String] = Nil,
       from: Option[String] = None, to: Option[String] = None,
-      timeTravel: Option[String] = None): DataFrame = {
-    val (ns, n) = Catalog.splitName(qualified)
-    val g = catalog.getGroup(ns, n)
-      .getOrElse(throw new MissingFeatureException(s"no group: $qualified"))
-    val cols = if (columns.isEmpty) g.columns else columns
-    val unknown = cols.filterNot(g.columns.contains)
-    if (unknown.nonEmpty)
-      throw new FeatureStoreException(
-        s"group $qualified has no columns: ${unknown.mkString(",")}")
-    storage.loadKeyedGroup(ns, n, keyedGroupKeys(g, qualified), cols,
+      timeTravel: Option[String] = None): DataFrame =
+    readKeyedGroup(qualified, columns, from, to, timeTravel)._3
+
+  /** [[loadKeyedGroup]] plus the group's entity keys and the resolved
+    * column subset — one catalog lookup for the latest/as-of reads.
+    */
+  private def readKeyedGroup(qualified: String, columns: Seq[String],
+      from: Option[String], to: Option[String], timeTravel: Option[String])
+      : (Seq[String], Seq[String], DataFrame) = {
+    val (ns, n, g, cols) = resolveGroup(qualified, columns)
+    val keys = keyedGroupKeys(g, qualified)
+    (keys, cols, storage.loadKeyedGroup(ns, n, keys, cols,
       from.map(TimeUtil.parseTimestamp), to.map(TimeUtil.parseTimestamp),
-      timeTravel, g.partitionScheme)
+      timeTravel, g.partitionScheme))
   }
 
   /** [[loadKeyedLatest]] for a keyed GROUP: each entity's most recent wide
@@ -630,12 +630,7 @@ class FeatureStore(
   def loadKeyedGroupLatest(qualified: String, columns: Seq[String] = Nil,
       asOf: Option[String] = None,
       timeTravel: Option[String] = None): DataFrame = {
-    val (ns, n) = Catalog.splitName(qualified)
-    val g = catalog.getGroup(ns, n)
-      .getOrElse(throw new MissingFeatureException(s"no group: $qualified"))
-    val keys = keyedGroupKeys(g, qualified)
-    val cols = if (columns.isEmpty) g.columns else columns
-    val data = loadKeyedGroup(qualified, cols, to = asOf, timeTravel = timeTravel)
+    val (keys, cols, data) = readKeyedGroup(qualified, columns, None, asOf, timeTravel)
     data.groupBy(keys.map(col): _*)
       .agg(max(struct((TimeCol +: cols).map(col): _*)).as("__last"))
       .select(keys.map(col) ++
@@ -652,12 +647,7 @@ class FeatureStore(
   def loadKeyedGroupAsOf(spine: DataFrame, qualified: String,
       columns: Seq[String] = Nil,
       timeTravel: Option[String] = None): DataFrame = {
-    val (ns, n) = Catalog.splitName(qualified)
-    val g = catalog.getGroup(ns, n)
-      .getOrElse(throw new MissingFeatureException(s"no group: $qualified"))
-    val keys = keyedGroupKeys(g, qualified)
-    val cols = if (columns.isEmpty) g.columns else columns
-    val data = loadKeyedGroup(qualified, cols, timeTravel = timeTravel)
+    val (keys, cols, data) = readKeyedGroup(qualified, columns, None, None, timeTravel)
     Align.asOfJoinKeyed(spine, data, keys, TimeCol, cols)
   }
 
@@ -809,7 +799,6 @@ class FeatureStore(
     val (ns, n) = Catalog.splitName(qualified)
     require(bins > 0, s"profileDrift: bins must be positive, got $bins")
     require(hi > lo, s"profileDrift: need hi > lo, got [$lo, $hi)")
-    val width = (hi - lo) / bins
     def slice(f: String, t: String, tag: Int) =
       storage.load(ns, n, Some(TimeUtil.parseTimestamp(f)),
           Some(TimeUtil.parseTimestamp(t)), timeTravel = timeTravel)
@@ -819,15 +808,19 @@ class FeatureStore(
     // inflating the lowest bin instead of reporting missing data
     val u = slice(refFrom, refTo, 0).unionAll(slice(curFrom, curTo, 1))
       .where(col(ValueCol).isNotNull && !isnan(col(ValueCol)))
-    val bin = least(greatest(
-      floor((col(ValueCol) - lit(lo)) / lit(width)).cast("bigint"),
-      lit(0L)), lit((bins - 1).toLong))
-    val h = u.select(bin.as("bin"), col("__w"))
+    val h = u.select(driftBin(lo, hi, bins).as("bin"), col("__w"))
       .groupBy("bin")
       .agg(sum(when(col("__w") === 0, 1L).otherwise(0L)).as("n_ref"),
         sum(when(col("__w") === 1, 1L).otherwise(0L)).as("n_cur"))
     graft.operators.DriftOps.ppmShares(h, Seq("bin"))
   }
+
+  /** [[profileDrift]]'s bin of `value`: `bins` equal-width bins over
+    * [lo, hi), out-of-range values clamped into the edge bins.
+    */
+  private def driftBin(lo: Double, hi: Double, bins: Int): Column =
+    least(greatest(floor((col(ValueCol) - lit(lo)) / lit((hi - lo) / bins)).cast("bigint"),
+      lit(0L)), lit((bins - 1).toLong))
 
   /** Z-score-normalized latest view (feature scaling for training): the
     * moments come from EXACT integer cents sums (a double mean/variance
@@ -872,17 +865,13 @@ class FeatureStore(
     val (ns, n) = Catalog.splitName(qualified)
     require(bins > 0, s"buildHistStore: bins must be positive, got $bins")
     require(hi > lo, s"buildHistStore: need hi > lo, got [$lo, $hi)")
-    val width = (hi - lo) / bins
-    val bin = least(greatest(
-      floor((col(ValueCol) - lit(lo)) / lit(width)).cast("bigint"),
-      lit(0L)), lit((bins - 1).toLong))
     // store MUTATOR ⇒ StoreLock, like every other member of the persisted-
     // store family: two concurrent builders must not interleave hist/meta
     graft.StoreLock.withLock(spark, path) {
       storage.load(ns, n, Some(TimeUtil.parseTimestamp(refFrom)),
           Some(TimeUtil.parseTimestamp(refTo)), timeTravel = timeTravel)
         .where(col(ValueCol).isNotNull && !isnan(col(ValueCol))) // never bin 0
-        .select(bin.as("bin"))
+        .select(driftBin(lo, hi, bins).as("bin"))
         .groupBy(col("bin")).agg(count(lit(1)).as("n_ref"))
         .coalesce(1).write.mode("overwrite").parquet(s"$path/hist")
       import spark.implicits._
@@ -903,14 +892,10 @@ class FeatureStore(
     val (ns, n) = Catalog.splitName(qualified)
     val meta = spark.read.parquet(s"$path/meta").head()
     val (lo, hi, bins) = (meta.getDouble(0), meta.getDouble(1), meta.getInt(2))
-    val width = (hi - lo) / bins
-    val bin = least(greatest(
-      floor((col(ValueCol) - lit(lo)) / lit(width)).cast("bigint"),
-      lit(0L)), lit((bins - 1).toLong))
     val cur = storage.load(ns, n, Some(TimeUtil.parseTimestamp(curFrom)),
         Some(TimeUtil.parseTimestamp(curTo)), timeTravel = timeTravel)
       .where(col(ValueCol).isNotNull && !isnan(col(ValueCol))) // never bin 0
-      .select(bin.as("bin"))
+      .select(driftBin(lo, hi, bins).as("bin"))
       .groupBy(col("bin")).agg(count(lit(1)).as("n_cur"))
     val ref = spark.read.parquet(s"$path/hist")
     val h = ref.join(cur, Seq("bin"), "full_outer")

@@ -16,6 +16,10 @@ import scala.util.control.NonFatal
   * 72-93): `{root}/feature/{namespace}/{name}/partition={p}/part-*.parquet`,
   * snappy parquet, append-only; logical upsert happens at read time by keeping
   * the max-`created_time` row per `time` (src/qafs/backend/pandas.py:161).
+  * Entity-keyed features (`{root}/keyed/...`), groups and keyed groups
+  * (`{root}/group/...`) are the same table with key and/or several value
+  * columns: all four layouts share one write, one pruned read and one
+  * latest-wins dedup (the private `Table` primitive below).
   *
   * Scale design:
   *  - writes are hive-partitioned on the derived `partition` column so reads
@@ -49,21 +53,178 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
   def featurePath(namespace: String, name: String): String =
     s"$root/feature/$namespace/$name"
 
+  // ---- the one table shape: append, pruned read, latest-wins dedup --------
+
+  /** One append-only, time-partitioned timeseries table: the physical
+    * shape every feature layout shares — plain features ([[save]]),
+    * entity-keyed features ([[saveKeyed]]), groups ([[saveGroup]]) and
+    * keyed groups ([[saveKeyedGroup]]). Files live under
+    * `{dir}/partition={p}/` with the [[columns]] below plus the derived
+    * hive `partition`; the logical upsert key is `(keys, time)`.
+    *
+    * The dedup rule ([[latest]]) is fixed per layout: single-value
+    * layouts (`wholeRow = false`: plain and keyed features) keep the
+    * non-null-preferring `max(struct(__nonnull, created_time, value))`;
+    * groups (`wholeRow = true`) keep the whole row with max
+    * `created_time`, `max(struct(created_time, cols…))`, so a row's
+    * signals stay mutually consistent.
+    *
+    * Empty-directory contract: a table whose directory is missing, or
+    * holds no readable partition (never written, or every partition
+    * dropped by [[dropBefore]]), reads as its typed empty frame — time
+    * columns `timestamp`, keys `long`, values `double` unless `types`
+    * pins them — never as an error. [[read]] detects it from the reader's
+    * own `PATH_NOT_FOUND` / `UNABLE_TO_INFER_SCHEMA`, without a separate
+    * existence probe.
+    */
+  private case class Table(namespace: String, dir: String,
+      keys: Seq[String] = Nil, values: Seq[String] = Seq(ValueCol),
+      wholeRow: Boolean = false, types: Map[String, DataType] = Map.empty) {
+    /** Stored column order (minus `partition`), per layout. */
+    def columns: Seq[String] =
+      if (wholeRow) keys ++ (TimeCol +: CreatedCol +: values)
+      else keys ++ (TimeCol +: values :+ CreatedCol)
+  }
+
+  /** Extraneous columns are an error (reference
+    * src/qafs/backend/pandas.py:257-260), and so is a missing key, `time`
+    * or value column; `created_time` is optional.
+    */
+  private def requireColumns(t: Table, df: DataFrame, what: String): Unit = {
+    val extra = df.columns.toSet -- t.columns
+    if (extra.nonEmpty)
+      throw new FeatureStoreException(s"unexpected columns ${extra.mkString(",")} saving $what")
+    val missing = (t.keys ++ (TimeCol +: t.values)).filterNot(df.columns.contains)
+    require(missing.isEmpty, s"missing columns saving $what: ${missing.mkString(",")}")
+  }
+
+  /** Coerce + derive partition + write one frame into `t`: `time` cast to
+    * timestamp, `created_time` defaulted to now, snappy, hive-partitioned.
+    */
+  private def write(t: Table, df: DataFrame, scheme: PartitionScheme,
+      mode: String = "append"): Unit =
+    df.withColumn(TimeCol, col(TimeCol).cast(TimestampType))
+      .withColumn(CreatedCol,
+        if (df.columns.contains(CreatedCol))
+          coalesce(col(CreatedCol).cast(TimestampType), current_timestamp())
+        else current_timestamp())
+      .withColumn(PartCol, partitionExpr(scheme, col(TimeCol)))
+      .select((t.columns :+ PartCol).map(col): _*)
+      // co-locate each hive partition's rows in one task: otherwise every
+      // writer task emits a file per partition value (tasks × partitions
+      // small files — a scan-killer at scale and locally)
+      .repartition(col(PartCol))
+      .write
+      .format(fmt(t.namespace))
+      .option("compression", "snappy")
+      .partitionBy(PartCol)
+      .mode(mode)
+      .save(t.dir)
+
+  /** Pruned read of `t`'s stored rows (all versions): time-range filters,
+    * plus the same bounds *translated to partition bounds* so hive pruning
+    * kicks in (the derived `partition` column is monotonic in `time` for
+    * both schemes; the reference relies on dask's filters= for the same
+    * effect, src/qafs/backend/pandas.py:97-117), then the time-travel
+    * predicate. All filters are Catalyst-pushable. `schema` skips the
+    * reader's inference when the caller knows the stored schema.
+    */
+  private def read(t: Table, scheme: PartitionScheme,
+      from: Option[Timestamp], to: Option[Timestamp], timeTravel: Option[String],
+      schema: Option[StructType] = None): DataFrame = {
+    // no driver-side existence probe: spark.read's own file listing is the
+    // single storage round-trip per table (an extra fs.exists here is one
+    // more remote call per feature per query — N+ on a wide loadFeatures)
+    val stored = try schema.fold(spark.read)(spark.read.schema(_))
+        .format(fmt(t.namespace)).load(t.dir) catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if Option(e.getCondition).exists(c =>
+            c == "PATH_NOT_FOUND" || c.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
+        return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(t.columns.map(c => StructField(c, t.types.getOrElse(c,
+            if (c == TimeCol || c == CreatedCol) TimestampType
+            else if (t.keys.contains(c)) LongType
+            else DoubleType)))))
+    }
+    val (f, u) = clampRange(from, to)
+    var df = within(stored, f, u)
+    f.foreach(a => df = df.where(col(PartCol) >= lit(partitionValue(scheme, a))))
+    u.foreach(b => df = df.where(col(PartCol) <= lit(partitionValue(scheme, b))))
+    travelled(df.select(t.columns.map(col): _*), timeTravel)
+  }
+
+  /** [[read]] → [[latest]], projected to `keys ++ time ++ values`. */
+  private def loadTable(t: Table, scheme: PartitionScheme,
+      from: Option[Timestamp], to: Option[Timestamp],
+      timeTravel: Option[String]): DataFrame =
+    latest(read(t, scheme, from, to, timeTravel), t.keys, t.values, t.wholeRow)
+      .select((t.keys ++ (TimeCol +: t.values)).map(col): _*)
+
+  /** Degenerate range clamp: to < from → to = from (reference pandas.py:155-156). */
+  private def clampRange(from: Option[Timestamp], to: Option[Timestamp])
+      : (Option[Timestamp], Option[Timestamp]) = (from, to) match {
+    case (Some(a), Some(b)) if b.before(a) => (Some(a), Some(a))
+    case other => other
+  }
+
+  /** Row-level `from <= time <= to` filters. */
+  private def within(df: DataFrame, from: Option[Timestamp],
+      to: Option[Timestamp]): DataFrame = {
+    val lo = from.fold(df)(a => df.where(col(TimeCol) >= lit(a)))
+    to.fold(lo)(b => lo.where(col(TimeCol) <= lit(b)))
+  }
+
+  /** F2 time-travel: keep rows already known at event-time + `timeTravel`. */
+  private def travelled(df: DataFrame, timeTravel: Option[String]): DataFrame =
+    timeTravel.fold(df) { tt =>
+      df.where(unix_micros(col(CreatedCol)) <=
+        unix_micros(col(TimeCol)) + lit(TimeUtil.parseMicros(tt)))
+    }
+
+  /** The one partition-dir listing: `dir`'s `partition=` subdirectories
+    * (none when `dir` does not exist).
+    */
+  private def partitionDirs(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$PartCol="))
+
+  /** Partition values stored under `dir`, lexically (= time) sorted. */
+  private def partitionValues(dir: String): Seq[String] =
+    partitionDirs(new Path(dir)).map(_.getPath.getName.stripPrefix(s"$PartCol=")).sorted
+
+  /** Retention (TTL) delete of one table: drop every hive partition
+    * STRICTLY OLDER than `cutoff`'s partition — pure directory removal
+    * against the partition listing, no data scan or rewrite at any size
+    * (the point of deriving the partition from the time axis, S2's pruning
+    * run in reverse). The cutoff's own partition survives even when
+    * partially expired: sub-partition retention would mean rewriting
+    * files, and a retention policy that needs sub-day precision should
+    * partition sub-day instead. Returns the dropped partition values.
+    * Idempotent; reads after a drop see the new listing
+    * ([[org.apache.spark.sql.catalog.Catalog.refreshByPath]]) — and a
+    * table with every partition dropped reads empty.
+    */
+  private def dropBefore(dir: String, cutoff: Timestamp,
+      scheme: PartitionScheme): Seq[String] = {
+    val cutPart = partitionValue(scheme, cutoff)
+    val dropped = partitionValues(dir).filter(_ < cutPart)
+    dropped.foreach(part => fs.delete(new Path(s"$dir/$PartCol=$part"), true))
+    if (dropped.nonEmpty) spark.catalog.refreshByPath(dir)
+    dropped
+  }
+
   // ---- S1: append sink ----------------------------------------------------
 
   /** Validate + coerce + derive partition + append-write one feature frame.
     * Input df columns: `time` (+ optional `created_time`) + `value`.
-    * Extraneous columns are an error (reference src/qafs/backend/pandas.py:257-260).
     */
   def save(namespace: String, name: String, df: DataFrame,
       scheme: PartitionScheme = PartitionScheme.Date,
       serialized: Boolean = false, append: Boolean = true,
       checkDrift: Boolean = true): Unit = {
-    val extra = df.columns.toSet -- Set(TimeCol, ValueCol, CreatedCol)
-    if (extra.nonEmpty)
-      throw new FeatureStoreException(s"unexpected columns ${extra.mkString(",")} saving $namespace/$name")
-    require(df.columns.contains(TimeCol), s"missing '$TimeCol' column")
-    require(df.columns.contains(ValueCol), s"missing '$ValueCol' column")
+    val t = Table(namespace, featurePath(namespace, name))
+    requireColumns(t, df, s"$namespace/$name")
     // non-serialized features pin their value type at first write: a
     // drifted append would land parquet files whose schemas can't merge
     // (reference rejects drift too, tests/test_feature_store.py:400-427;
@@ -95,101 +256,37 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
       }
     }
 
-    val coerced = df
-      .withColumn(TimeCol, col(TimeCol).cast(TimestampType))
-      .withColumn(CreatedCol,
-        if (df.columns.contains(CreatedCol))
-          coalesce(col(CreatedCol).cast(TimestampType), current_timestamp())
-        else current_timestamp())
     val encoded =
       if (serialized)
-        coerced.withColumn(ValueCol,
-          serializeValue(coerced(ValueCol), coerced.schema(ValueCol).dataType))
-      else coerced
-    val partitioned = encoded.withColumn(PartCol, partitionExpr(scheme, col(TimeCol)))
-
-    partitioned
-      .select(TimeCol, ValueCol, CreatedCol, PartCol)
-      // co-locate each hive partition's rows in one task: otherwise every
-      // writer task emits a file per partition value (tasks × partitions
-      // small files — a scan-killer at scale and locally)
-      .repartition(col(PartCol))
-      .write
-      .format(fmt(namespace))
-      .option("compression", "snappy")
-      .partitionBy(PartCol)
-      .mode(if (append) "append" else "overwrite")
-      .save(featurePath(namespace, name))
+        df.withColumn(ValueCol, serializeValue(df(ValueCol), df.schema(ValueCol).dataType))
+      else df
+    write(t, encoded, scheme, if (append) "append" else "overwrite")
   }
 
   // ---- S2 + F1/F2: scan with pushdown -------------------------------------
 
-  /** Raw scan with time-range / exact-date / partition filters and optional
-    * time-travel predicate. All filters are Catalyst-pushable; in addition,
-    * time bounds are *translated to partition bounds* so hive pruning kicks in
-    * (the reference relies on dask's filters= for the same effect,
-    * src/qafs/backend/pandas.py:97-117).
+  /** Raw scan of one feature's stored rows (all versions) with time-range
+    * partition pruning and optional time-travel predicate — [[read]].
     */
   def scan(namespace: String, name: String,
       from: Option[Timestamp] = None, to: Option[Timestamp] = None,
-      exact: Option[Timestamp] = None,
-      partitions: Option[Seq[String]] = None,
       timeTravel: Option[String] = None,
       scheme: PartitionScheme = PartitionScheme.Date,
       serialized: Boolean = false,
       valueDtype: Option[String] = None): DataFrame = {
-    val path = featurePath(namespace, name)
     // a catalog-pinned value dtype yields a fully-known read schema, so the
     // reader SKIPS its parquet footer probe — one fewer remote round-trip
     // per feature per query (a real cost on object stores; the pin gates
     // every write, so the footer could never disagree). Unpinned features
     // (pre-first-write, or foreign data) fall back to inference.
-    val reader = valueDtype
+    val schema = valueDtype
       .flatMap(d => scala.util.Try(org.apache.spark.sql.types.DataType.fromDDL(d)).toOption)
-      .map(dt => spark.read.schema(StructType(Seq(
+      .map(dt => StructType(Seq(
         StructField(TimeCol, TimestampType),
         StructField(ValueCol, dt),
         StructField(CreatedCol, TimestampType),
-        StructField(PartCol, StringType))))) // both schemes write string partitions
-      .getOrElse(spark.read)
-    // no driver-side existence probe: spark.read's own file listing is the
-    // single storage round-trip per feature (an extra fs.exists here is one
-    // more remote call per feature per query — N+ on a wide loadFeatures);
-    // a feature that was never written (or written then emptied) maps to
-    // the empty frame, same as before
-    var df = try reader.format(fmt(namespace)).load(path) catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if Option(e.getCondition).exists(c =>
-            c == "PATH_NOT_FOUND" || c.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
-        return emptyFrame(spark)
-    }
-    // degenerate range clamp: to < from → to = from (reference pandas.py:155-156)
-    val (f, t) = (from, to) match {
-      case (Some(a), Some(b)) if b.before(a) => (Some(a), Some(a))
-      case other => other
-    }
-    exact match {
-      case Some(e) => df = df.where(col(TimeCol) === lit(e))
-      case None =>
-        f.foreach(a => df = df.where(col(TimeCol) >= lit(a)))
-        t.foreach(b => df = df.where(col(TimeCol) <= lit(b)))
-    }
-    // hive partition pruning: explicit partition list, else bounds derived
-    // from the time range (the derived `partition` column is monotonic in
-    // `time` for both schemes, so range bounds are safe)
-    partitions match {
-      case Some(ps) => df = df.where(col(PartCol).isin(ps: _*))
-      case None =>
-        exact.orElse(f).foreach(a => df = df.where(col(PartCol) >= lit(partitionValue(scheme, a))))
-        exact.orElse(t).foreach(b => df = df.where(col(PartCol) <= lit(partitionValue(scheme, b))))
-    }
-    var out = df.drop(PartCol)
-    // F2: time-travel — keep rows already known at event-time + delta
-    timeTravel.foreach { tt =>
-      val delta = TimeUtil.parseMicros(tt)
-      out = out.where(unix_micros(col(CreatedCol)) <= unix_micros(col(TimeCol)) + lit(delta))
-    }
-    out
+        StructField(PartCol, StringType)))) // both schemes write string partitions
+    read(Table(namespace, featurePath(namespace, name)), scheme, from, to, timeTravel, schema)
   }
 
   /** ONE multi-directory scan over MANY features — the wide training-set
@@ -219,19 +316,12 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
     * before routing here): every feature is plain-stored with ONE shared
     * pinned value dtype, and namespace/name are path-safe (no characters
     * the path-derived identity regexp could misparse).
-    */
-  def scanStacked(feats: Seq[(String, String, PartitionScheme)],
-      from: Option[Timestamp] = None, to: Option[Timestamp] = None,
-      timeTravel: Option[String] = None,
-      valueDtype: String = "double"): DataFrame =
-    scanStackedWithBounds(feats, from, to, timeTravel, valueDtype).df
-
-  /** [[scanStacked]] plus the time bounds the LISTING already knows: the
-    * min/max selected partition values parse to a conservative
-    * `[lo, hi)` micros cover of every stored row's time (partition is
-    * monotonic in time for both schemes) — callers seed downstream
-    * bucketing hints from it instead of running a bounds job
-    * ([[graft.ts.Align.CutsMemo.seed]]).
+    *
+    * Also returns the time bounds the LISTING already knows: the min/max
+    * selected partition values parse to a conservative `[lo, hi)` micros
+    * cover of every stored row's time (partition is monotonic in time for
+    * both schemes) — callers seed downstream bucketing hints from it
+    * instead of running a bounds job ([[graft.ts.Align.CutsMemo.seed]]).
     */
   def scanStackedWithBounds(feats: Seq[(String, String, PartitionScheme)],
       from: Option[Timestamp] = None, to: Option[Timestamp] = None,
@@ -242,11 +332,7 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
       StructField(TimeCol, TimestampType),
       StructField(ValueCol, dt),
       StructField(CreatedCol, TimestampType)))
-    // degenerate range clamp: to < from → to = from (same as [[scan]])
-    val (f, t) = (from, to) match {
-      case (Some(a), Some(b)) if b.before(a) => (Some(a), Some(a))
-      case other => other
-    }
+    val (f, t) = clampRange(from, to)
     // per-feature pruned partition-dir listing, on a bounded driver pool
     // (one listStatus per feature; sequential would be linear in width)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -258,8 +344,7 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
         scala.concurrent.Future {
           val lo = f.map(partitionValue(scheme, _))
           val hi = t.map(partitionValue(scheme, _))
-          val vals = partitionDirs(new Path(featurePath(ns, n)))
-            .map(_.getPath.getName.stripPrefix(s"$PartCol="))
+          val vals = partitionValues(featurePath(ns, n))
             .filter(v => lo.forall(v >= _) && hi.forall(v <= _))
           (fmt(ns),
             vals.map(v => s"${featurePath(ns, n)}/$PartCol=$v"),
@@ -278,18 +363,11 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
     val bounds =
       if (covers.isEmpty) None else Some((covers.map(_._1).min, covers.map(_._2).max))
     val legs = dirsByFmt.filter(_._2.nonEmpty).map { case (format, dirs) =>
-      var df = spark.read.schema(schema).format(format).load(dirs: _*)
+      val stacked = spark.read.schema(schema).format(format).load(dirs: _*)
         .withColumn("__f", regexp_extract(input_file_name(),
           ".*/feature/([^/]+/[^/]+)/" + PartCol + "=[^/]*/[^/]*$", 1))
         .select(col(TimeCol), col("__f"), col(ValueCol), col(CreatedCol))
-      f.foreach(a => df = df.where(col(TimeCol) >= lit(a)))
-      t.foreach(b => df = df.where(col(TimeCol) <= lit(b)))
-      timeTravel.foreach { tt =>
-        val delta = TimeUtil.parseMicros(tt)
-        df = df.where(
-          unix_micros(col(CreatedCol)) <= unix_micros(col(TimeCol)) + lit(delta))
-      }
-      df
+      travelled(within(stacked, f, t), timeTravel)
     }
     val df =
       if (legs.isEmpty)
@@ -318,20 +396,38 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
 
   // ---- A1: latest-version dedup -------------------------------------------
 
-  /** Per `time`, keep the value with max `created_time` (ties broken by max
-    * value — deterministic). Non-null values are preferred over null ones
-    * regardless of version, matching the reference's `groupby().last()`
-    * which skips NaN (src/qafs/backend/pandas.py:161). Shaped as groupBy +
-    * max(struct(...)) so Spark plans a partial (map-side) aggregate before
-    * the shuffle, instead of sorting the whole frame through a window.
-    * (Non-orderable value types — e.g. map — fail at analysis time; store
-    * those as `serialized` features.)
+  /** Latest-wins dedup per `(keys, time)`, by the [[Table]]'s layout rule.
+    *
+    * Single-value (`wholeRow = false`): keep the value with max
+    * `created_time` (ties broken by max value — deterministic). Non-null
+    * values are preferred over null ones regardless of version, matching
+    * the reference's `groupby().last()` which skips NaN
+    * (src/qafs/backend/pandas.py:161); emits `keys ++ (time, value,
+    * created_time)`. Whole-row (`wholeRow = true`): the row with max
+    * `created_time` wins all its `values` together; emits `keys ++ time ++
+    * values`.
+    *
+    * Shaped as groupBy + max(struct(...)) so Spark plans a partial
+    * (map-side) aggregate before the shuffle, instead of sorting the whole
+    * frame through a window; per-entity parallelism comes from the
+    * groupBy hash. (Non-orderable value types — e.g. map — fail at
+    * analysis time; store those as `serialized` features.)
+    */
+  private def latest(df: DataFrame, keys: Seq[String], values: Seq[String],
+      wholeRow: Boolean): DataFrame = {
+    val by = (keys :+ TimeCol).map(col)
+    val nonNullFirst = if (wholeRow) Nil else Seq(col(ValueCol).isNotNull.as("__nonnull"))
+    val out = if (wholeRow) values else values :+ CreatedCol
+    df.groupBy(by: _*)
+      .agg(max(struct(nonNullFirst ++ (CreatedCol +: values).map(col): _*)).as("s"))
+      .select(by ++ out.map(c => col(s"s.$c").as(c)): _*)
+  }
+
+  /** A plain feature's latest-version dedup: per `time`, the [[latest]]
+    * single-value rule; emits `(time, value, created_time)`.
     */
   def dedupLatest(df: DataFrame): DataFrame =
-    df.groupBy(col(TimeCol))
-      .agg(max(struct(col(ValueCol).isNotNull.as("__nonnull"),
-        col(CreatedCol), col(ValueCol))).as("s"))
-      .select(col(TimeCol), col("s." + ValueCol).as(ValueCol), col("s." + CreatedCol).as(CreatedCol))
+    latest(df, Nil, Seq(ValueCol), wholeRow = false)
 
   // ---- load = scan → dedup → resample/ffill -------------------------------
 
@@ -347,7 +443,7 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
       how: String = "ffill"): DataFrame = {
     require(how == "ffill" || how == "interp",
       s"load: how must be 'ffill' (as-of) or 'interp' (linear), got '$how'")
-    val scanned = scan(namespace, name, from, to, None, None, timeTravel, scheme,
+    val scanned = scan(namespace, name, from, to, timeTravel, scheme,
       serialized, valueDtype)
     freq match {
       case None => dedupLatest(scanned).select(TimeCol, ValueCol)
@@ -363,9 +459,9 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
         // two, even on the first read. Bounds are semantics (the grid
         // extent) and are recomputed per read; only the cuts — pure
         // load-balancing hints — are memoized.
-        val (deduped, bounds) = (from, to) match {
+        val (deduped, bounds) = clampRange(from, to) match {
           case (Some(a), Some(b)) =>
-            (dedupLatest(scanned), Some((a, if (b.before(a)) a else b)))
+            (dedupLatest(scanned), Some((a, b)))
           case _ =>
             val cached = graft.CacheScope.persist(dedupLatest(scanned))
             val us = unix_micros(col(TimeCol))
@@ -417,14 +513,7 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
 
   /** List hive partition values, lexically sorted. */
   def listPartitions(namespace: String, name: String, reverse: Boolean = false): Seq[String] = {
-    val p = new Path(featurePath(namespace, name))
-    if (!fs.exists(p)) return Nil
-    val parts = fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith(s"$PartCol="))
-      .map(_.stripPrefix(s"$PartCol="))
-      .sorted
+    val parts = partitionValues(featurePath(namespace, name))
     if (reverse) parts.reverse else parts
   }
 
@@ -547,29 +636,8 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
     * parquet column pruning, no N-way join.
     */
   def saveGroup(namespace: String, name: String, df: DataFrame,
-      columns: Seq[String], scheme: PartitionScheme = PartitionScheme.Date): Unit = {
-    val extra = df.columns.toSet -- (Set(TimeCol, CreatedCol) ++ columns)
-    if (extra.nonEmpty)
-      throw new FeatureStoreException(
-        s"unexpected columns ${extra.mkString(",")} saving group $namespace/$name")
-    require(df.columns.contains(TimeCol), s"missing '$TimeCol' column")
-    val missing = columns.filterNot(df.columns.contains)
-    require(missing.isEmpty, s"group columns missing from frame: ${missing.mkString(",")}")
-
-    val coerced = df
-      .withColumn(TimeCol, col(TimeCol).cast(TimestampType))
-      .withColumn(CreatedCol,
-        if (df.columns.contains(CreatedCol))
-          coalesce(col(CreatedCol).cast(TimestampType), current_timestamp())
-        else current_timestamp())
-      .withColumn(PartCol, partitionExpr(scheme, col(TimeCol)))
-    coerced
-      .select((Seq(TimeCol, CreatedCol) ++ columns :+ PartCol).map(col): _*)
-      .repartition(col(PartCol))
-      .write.format(fmt(namespace)).option("compression", "snappy")
-      .partitionBy(PartCol).mode("append")
-      .save(groupPath(namespace, name))
-  }
+      columns: Seq[String], scheme: PartitionScheme = PartitionScheme.Date): Unit =
+    saveKeyedGroup(namespace, name, df, Nil, columns, scheme)
 
   /** Read a column subset of a group with the feature read semantics:
     * time-range + partition pruning, optional time-travel, then latest-ROW
@@ -580,33 +648,8 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
   def loadGroup(namespace: String, name: String, columns: Seq[String],
       from: Option[Timestamp] = None, to: Option[Timestamp] = None,
       timeTravel: Option[String] = None,
-      scheme: PartitionScheme = PartitionScheme.Date): DataFrame = {
-    val path = groupPath(namespace, name)
-    require(columns.nonEmpty, "no columns requested")
-    if (!fs.exists(new Path(path))) {
-      val schema = StructType(
-        StructField(TimeCol, TimestampType) +: columns.map(StructField(_, DoubleType)))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    var df = readFmt(namespace, path)
-    val (f, t) = (from, to) match {
-      case (Some(a), Some(b)) if b.before(a) => (Some(a), Some(a))
-      case other => other
-    }
-    f.foreach(a => df = df.where(col(TimeCol) >= lit(a) &&
-      col(PartCol) >= lit(partitionValue(scheme, a))))
-    t.foreach(b => df = df.where(col(TimeCol) <= lit(b) &&
-      col(PartCol) <= lit(partitionValue(scheme, b))))
-    timeTravel.foreach { tt =>
-      val delta = TimeUtil.parseMicros(tt)
-      df = df.where(unix_micros(col(CreatedCol)) <= unix_micros(col(TimeCol)) + lit(delta))
-    }
-    df.select((Seq(TimeCol, CreatedCol) ++ columns).map(col): _*)
-      .groupBy(col(TimeCol))
-      .agg(max(struct((CreatedCol +: columns).map(col): _*)).as("s"))
-      .select(col(TimeCol) +: columns.map(c => col(s"s.$c").as(c)): _*)
-  }
+      scheme: PartitionScheme = PartitionScheme.Date): DataFrame =
+    loadKeyedGroup(namespace, name, Nil, columns, from, to, timeTravel, scheme)
 
   /** ENTITY-KEYED feature group — [[saveGroup]] with entity key columns:
     * N signals per entity in ONE hive-partitioned table, the wide
@@ -616,26 +659,9 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
   def saveKeyedGroup(namespace: String, name: String, df: DataFrame,
       keys: Seq[String], columns: Seq[String],
       scheme: PartitionScheme = PartitionScheme.Date): Unit = {
-    val extra = df.columns.toSet -- (Set(TimeCol, CreatedCol) ++ keys ++ columns)
-    if (extra.nonEmpty)
-      throw new FeatureStoreException(
-        s"unexpected columns ${extra.mkString(",")} saving keyed group $namespace/$name")
-    require(df.columns.contains(TimeCol), s"missing '$TimeCol' column")
-    val missing = (keys ++ columns).filterNot(df.columns.contains)
-    require(missing.isEmpty, s"keyed group columns missing: ${missing.mkString(",")}")
-    val coerced = df
-      .withColumn(TimeCol, col(TimeCol).cast(TimestampType))
-      .withColumn(CreatedCol,
-        if (df.columns.contains(CreatedCol))
-          coalesce(col(CreatedCol).cast(TimestampType), current_timestamp())
-        else current_timestamp())
-      .withColumn(PartCol, partitionExpr(scheme, col(TimeCol)))
-    coerced
-      .select((keys ++ Seq(TimeCol, CreatedCol) ++ columns :+ PartCol).map(col): _*)
-      .repartition(col(PartCol))
-      .write.format(fmt(namespace)).option("compression", "snappy")
-      .partitionBy(PartCol).mode("append")
-      .save(groupPath(namespace, name))
+    val t = Table(namespace, groupPath(namespace, name), keys, columns, wholeRow = true)
+    requireColumns(t, df, s"group $namespace/$name")
+    write(t, df, scheme)
   }
 
   /** Read a column subset of a keyed group: one pruned scan, then
@@ -648,32 +674,9 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
       columns: Seq[String], from: Option[Timestamp] = None,
       to: Option[Timestamp] = None, timeTravel: Option[String] = None,
       scheme: PartitionScheme = PartitionScheme.Date): DataFrame = {
-    val path = groupPath(namespace, name)
     require(columns.nonEmpty, "no columns requested")
-    if (!fs.exists(new Path(path))) {
-      val schema = StructType(
-        keys.map(StructField(_, LongType)) ++
-          (StructField(TimeCol, TimestampType) +: columns.map(StructField(_, DoubleType))))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    var df = readFmt(namespace, path)
-    val (f, t) = (from, to) match {
-      case (Some(a), Some(b)) if b.before(a) => (Some(a), Some(a))
-      case other => other
-    }
-    f.foreach(a => df = df.where(col(TimeCol) >= lit(a) &&
-      col(PartCol) >= lit(partitionValue(scheme, a))))
-    t.foreach(b => df = df.where(col(TimeCol) <= lit(b) &&
-      col(PartCol) <= lit(partitionValue(scheme, b))))
-    timeTravel.foreach { tt =>
-      val delta = TimeUtil.parseMicros(tt)
-      df = df.where(unix_micros(col(CreatedCol)) <= unix_micros(col(TimeCol)) + lit(delta))
-    }
-    df.select((keys ++ Seq(TimeCol, CreatedCol) ++ columns).map(col): _*)
-      .groupBy((keys :+ TimeCol).map(col): _*)
-      .agg(max(struct((CreatedCol +: columns).map(col): _*)).as("s"))
-      .select((keys :+ TimeCol).map(col) ++ columns.map(c => col(s"s.$c").as(c)): _*)
+    loadTable(Table(namespace, groupPath(namespace, name), keys, columns, wholeRow = true),
+      scheme, from, to, timeTravel)
   }
 
   // ---- entity-keyed features (extension) -----------------------------------
@@ -690,77 +693,40 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
   def saveKeyed(namespace: String, name: String, df: DataFrame, keys: Seq[String],
       scheme: PartitionScheme = PartitionScheme.Date): Unit = {
     require(keys.nonEmpty, "keyed feature needs at least one key column")
-    val extra = df.columns.toSet -- (Set(TimeCol, ValueCol, CreatedCol) ++ keys)
-    if (extra.nonEmpty)
-      throw new FeatureStoreException(
-        s"unexpected columns ${extra.mkString(",")} saving keyed $namespace/$name")
-    require(df.columns.contains(TimeCol), s"missing '$TimeCol' column")
-    require(df.columns.contains(ValueCol), s"missing '$ValueCol' column")
-    val missing = keys.filterNot(df.columns.contains)
-    require(missing.isEmpty, s"key columns missing from frame: ${missing.mkString(",")}")
-
-    val coerced = df
-      .withColumn(TimeCol, col(TimeCol).cast(TimestampType))
-      .withColumn(CreatedCol,
-        if (df.columns.contains(CreatedCol))
-          coalesce(col(CreatedCol).cast(TimestampType), current_timestamp())
-        else current_timestamp())
-      .withColumn(PartCol, partitionExpr(scheme, col(TimeCol)))
-    coerced
-      .select((keys ++ Seq(TimeCol, ValueCol, CreatedCol) :+ PartCol).map(col): _*)
-      .repartition(col(PartCol))
-      .write.format(fmt(namespace)).option("compression", "snappy")
-      .partitionBy(PartCol).mode("append")
-      .save(keyedPath(namespace, name))
+    val t = Table(namespace, keyedPath(namespace, name), keys)
+    requireColumns(t, df, s"keyed $namespace/$name")
+    write(t, df, scheme)
   }
 
   /** Read a keyed feature: time-range + partition pruning + optional
-    * time-travel, then latest-version dedup per (keys, time) — the same
-    * map-side-partial `max(struct)` shape as [[dedupLatest]], sharded
-    * across entities by the groupBy hash. Per-entity parallelism is free;
-    * no single-entity hotspot short of one entity owning most rows.
+    * time-travel, then latest-version dedup per (keys, time) — the
+    * single-value [[latest]] rule, sharded across entities by the groupBy
+    * hash. `emptySchema` types the empty frame a not-yet-written (or
+    * fully expired) feature reads as: the LongType/DoubleType default
+    * makes string-keyed features fail at analysis time when joined
+    * against a spine.
     */
   def loadKeyed(namespace: String, name: String, keys: Seq[String],
       from: Option[Timestamp] = None, to: Option[Timestamp] = None,
       timeTravel: Option[String] = None,
       scheme: PartitionScheme = PartitionScheme.Date,
-      emptySchema: Option[StructType] = None): DataFrame = {
-    val path = keyedPath(namespace, name)
-    if (!fs.exists(new Path(path))) {
-      // not yet written: honor the declared/pinned schema when the caller
-      // knows it — the LongType/DoubleType fallback makes string-keyed
-      // features fail at analysis time when joined against a spine
-      val schema = emptySchema.getOrElse(StructType(
-        keys.map(StructField(_, LongType)) ++
-          Seq(StructField(TimeCol, TimestampType), StructField(ValueCol, DoubleType))))
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    var df = readFmt(namespace, path)
-    val (f, t) = (from, to) match {
-      case (Some(a), Some(b)) if b.before(a) => (Some(a), Some(a))
-      case other => other
-    }
-    f.foreach(a => df = df.where(col(TimeCol) >= lit(a) &&
-      col(PartCol) >= lit(partitionValue(scheme, a))))
-    t.foreach(b => df = df.where(col(TimeCol) <= lit(b) &&
-      col(PartCol) <= lit(partitionValue(scheme, b))))
-    timeTravel.foreach { tt =>
-      val delta = TimeUtil.parseMicros(tt)
-      df = df.where(unix_micros(col(CreatedCol)) <= unix_micros(col(TimeCol)) + lit(delta))
-    }
-    df.groupBy((keys :+ TimeCol).map(col): _*)
-      .agg(max(struct(col(ValueCol).isNotNull.as("__nonnull"),
-        col(CreatedCol), col(ValueCol))).as("s"))
-      .select((keys :+ TimeCol).map(col) :+ col("s." + ValueCol).as(ValueCol): _*)
-  }
+      emptySchema: Option[StructType] = None): DataFrame =
+    loadTable(Table(namespace, keyedPath(namespace, name), keys,
+        types = emptySchema.fold(Map.empty[String, DataType])(
+          _.fields.map(f => f.name -> f.dataType).toMap)),
+      scheme, from, to, timeTravel)
 
   // ---- S4/S5/S6: listing, delete, copy -------------------------------------
 
-  def listStoredFeatures(namespace: String): Seq[String] = {
-    val p = new Path(s"$root/feature/$namespace")
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName).sorted
-  }
+  /** Feature names with stored data in `namespace`, in either single-value
+    * layout (plain or entity-keyed) — the set [[delete]] removes from.
+    */
+  def listStoredFeatures(namespace: String): Seq[String] =
+    Seq("feature", "keyed").flatMap { layout =>
+      val p = new Path(s"$root/$layout/$namespace")
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+    }.distinct.sorted
 
   def delete(namespace: String, name: String): Unit = {
     // a feature's data lives in exactly one of the two layouts — remove both
@@ -770,49 +736,15 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
     }
   }
 
-  /** Retention (TTL) delete: drop every hive partition STRICTLY OLDER than
-    * `cutoff`'s partition — pure directory removal against the partition
-    * listing, no data scan or rewrite at any size (the point of deriving
-    * the partition from the time axis, S2's pruning run in reverse). The
-    * cutoff's own partition survives even when partially expired:
-    * sub-partition retention would mean rewriting files, and a retention
-    * policy that needs sub-day precision should partition sub-day instead.
-    * Returns the dropped partition values. Idempotent; scans after a drop
-    * see the new listing ([[org.apache.spark.sql.catalog.Catalog.refreshByPath]]).
-    */
+  /** Retention (TTL) delete for a plain feature — see [[dropBefore]]. */
   def deleteBefore(namespace: String, name: String, cutoff: Timestamp,
-      scheme: PartitionScheme = PartitionScheme.Date): Seq[String] = {
-    val cutPart = partitionValue(scheme, cutoff)
-    val dropped = listPartitions(namespace, name).filter(_ < cutPart)
-    dropped.foreach { part =>
-      fs.delete(new Path(s"${featurePath(namespace, name)}/$PartCol=$part"), true)
-    }
-    if (dropped.nonEmpty)
-      spark.catalog.refreshByPath(featurePath(namespace, name))
-    dropped
-  }
+      scheme: PartitionScheme = PartitionScheme.Date): Seq[String] =
+    dropBefore(featurePath(namespace, name), cutoff, scheme)
 
-  /** [[deleteBefore]] for the entity-KEYED layout — retention (TTL) as
-    * pure partition-directory removal off the listing, cutoff's own
-    * partition survives, idempotent.
-    */
+  /** [[deleteBefore]] for the entity-KEYED layout. */
   def deleteKeyedBefore(namespace: String, name: String, cutoff: Timestamp,
-      scheme: PartitionScheme = PartitionScheme.Date): Seq[String] = {
-    val cutPart = partitionValue(scheme, cutoff)
-    val base = new Path(keyedPath(namespace, name))
-    val dropped =
-      if (!fs.exists(base)) Nil
-      else fs.listStatus(base).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$PartCol="))
-        .map(_.getPath.getName.stripPrefix(s"$PartCol="))
-        .filter(_ < cutPart).sorted
-    dropped.foreach { part =>
-      fs.delete(new Path(s"${keyedPath(namespace, name)}/$PartCol=$part"), true)
-    }
-    if (dropped.nonEmpty)
-      spark.catalog.refreshByPath(keyedPath(namespace, name))
-    dropped
-  }
+      scheme: PartitionScheme = PartitionScheme.Date): Seq[String] =
+    dropBefore(keyedPath(namespace, name), cutoff, scheme)
 
   /** Copy one feature's data to another feature location (clone support,
     * reference src/qafs/backend/pandas.py:274-296 — overwrite semantics).
@@ -876,11 +808,6 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
   def compactGroup(namespace: String, name: String,
       targetBytes: Long = DefaultCompactTargetBytes): CompactionStats =
     compactHiveDir(groupPath(namespace, name), namespace, targetBytes)
-
-  private def partitionDirs(base: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(base)) Nil
-    else fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$PartCol="))
 
   private def dataFiles(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
     fs.listStatus(dir).toSeq.filter { s =>
@@ -1110,12 +1037,4 @@ object TimeseriesStorage {
       case _: StructType | _: MapType | _: ArrayType => to_json(c)
       case _ => c.cast(StringType)
     }
-
-  def emptyFrame(spark: SparkSession): DataFrame = {
-    val schema = StructType(Seq(
-      StructField(TimeCol, TimestampType),
-      StructField(ValueCol, DoubleType),
-      StructField(CreatedCol, TimestampType)))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
 }

@@ -750,7 +750,7 @@ object Align {
 
   /** [[alignOuterRaw]] over a PRE-STACKED `(time, __f, value,
     * created_time)` frame — the entry point for
-    * [[graft.storage.TimeseriesStorage.scanStacked]]'s one-scan wide
+    * [[graft.storage.TimeseriesStorage.scanStackedWithBounds]]'s one-scan wide
     * export, where the stack comes from a single multi-dir read instead
     * of a per-feature union. `__f` values must be the entries of `names`.
     */

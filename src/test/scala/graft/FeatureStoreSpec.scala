@@ -271,6 +271,13 @@ class FeatureStoreSpec extends SparkTestBase {
     // delete with data
     fs.deleteFeature("cl/src", deleteData = true)
     assert(fs.storage.listStoredFeatures("cl").isEmpty)
+    // a keyed feature's orphaned data is cleaned too
+    import spark.implicits._
+    fs.createKeyedFeature("cl/k", Seq("uid"))
+    fs.saveKeyed("cl/k", Seq((1L, ts("2021-01-01"), 1.0)).toDF("uid", "time", "value"))
+    fs.deleteFeature("cl/k", deleteData = false)
+    assert(fs.cleanNamespace("cl") == Seq("k"))
+    assert(!new java.io.File(fs.storage.keyedPath("cl", "k")).exists)
   }
 
   test("loadFeatures aligns mixed-frequency series with ffill (reference resample golden)") {
@@ -355,6 +362,13 @@ class FeatureStoreSpec extends SparkTestBase {
     // one partial hash aggregate, never a window sort
     val plan = fs.loadKeyedLatest("o/f").queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"latest must not window-sort:\n$plan")
+    // compacting a keyed feature rewrites its keyed layout, and only that
+    fs.saveKeyed("o/f", Seq((1L, ts("2021-01-05"), 6.0, ts("2021-01-06")))
+      .toDF("uid", "time", "value", "created_time"))
+    assert(fs.compactFeature("o/f").partitionsCompacted == 1)
+    assert(fs.loadKeyedLatest("o/f").collect().map(r => r.getLong(0) -> r.getDouble(2))
+      .toMap == Map(1L -> 6.0, 2L -> 3.0))
+    assert(!new java.io.File(fs.storage.featurePath("o", "f")).exists)
   }
 
   test("profileFeature: per-bucket counts + exact-decimal sums + envelopes") {

@@ -172,6 +172,10 @@ class StorageSpec extends SparkTestBase {
       st.saveGroup("ns", "g", v1.withColumn("junk", lit(1)), Seq("a", "b")))
     // missing group loads empty
     assert(st.loadGroup("ns", "ghost", Seq("x")).isEmpty)
+    // so does a group directory with no partitions left (plain and keyed)
+    new java.io.File(st.groupPath("ns", "hollow")).mkdirs()
+    assert(st.loadGroup("ns", "hollow", Seq("x")).isEmpty)
+    assert(st.loadKeyedGroup("ns", "hollow", Seq("uid"), Seq("x")).isEmpty)
   }
 
   test("feature group: time-range and time-travel compose") {
@@ -343,6 +347,11 @@ class StorageSpec extends SparkTestBase {
     assert(left == Set(ts("2021-01-02"), ts("2021-01-03")))
     assert(st.deleteKeyedBefore("ns", "kt",
       java.sql.Timestamp.valueOf("2021-01-02 12:00:00")).isEmpty)
+    // everything expired -> keyed feature reads empty, like the plain layout
+    assert(st.deleteKeyedBefore("ns", "kt",
+      java.sql.Timestamp.valueOf("2022-01-01 00:00:00")) ==
+      Seq("2021-01-02", "2021-01-03"))
+    assert(st.loadKeyed("ns", "kt", Seq("uid")).count() == 0)
     // a never-written keyed feature deletes to nothing, loudly not at all
     assert(st.deleteKeyedBefore("ns", "nope",
       java.sql.Timestamp.valueOf("2022-01-01 00:00:00")).isEmpty)

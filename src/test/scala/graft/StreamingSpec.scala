@@ -611,5 +611,7 @@ class StreamingSpec extends SparkTestBase {
       assert(files.length <= 2,
         s"${d.getName}: ${files.length} files survive compactEvery=2")
     }
+    // a plain feature's compaction never touches the keyed layout
+    assert(!new java.io.File(s"${fs.storage.root}/keyed").exists)
   }
 }
