@@ -2,8 +2,11 @@ package graft
 
 import graft.api.FeatureStore
 import graft.catalog.NamespaceDef
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 import scala.collection.concurrent.TrieMap
 
@@ -138,6 +141,42 @@ object Fixtures {
   private val streamed = TrieMap[String, Unit]()
   private val windowed = TrieMap[String, String]()
 
+  /** Wipes `base`, lands each frame as ONE file `base/src/batch_<i>.parquet`
+    * and returns that dir as a stream paced one file per micro-batch
+    * ([[graft.streaming.StreamingOps.pacedFileSource]]), so the frames
+    * drain in order as separate micro-batches — AvailableNow honors the
+    * pacing. Distinct ascending mtimes pin the file source's processing
+    * order. `schema` is the stream's read schema.
+    */
+  private def orderedFileStream(spark: SparkSession, base: String,
+      schema: StructType, frames: Seq[DataFrame]): DataFrame = {
+    val (src, stage) = (new Path(s"$base/src"), new Path(s"$base/stage"))
+    val hfs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    hfs.delete(new Path(base), true)
+    hfs.mkdirs(src)
+    frames.zipWithIndex.foreach { case (df, i) =>
+      val st = new Path(stage, i.toString)
+      df.coalesce(1).write.mode("overwrite").parquet(st.toString)
+      val part = hfs.listStatus(st).find(_.getPath.getName.endsWith(".parquet")).get.getPath
+      val dst = new Path(src, s"batch_$i.parquet")
+      hfs.rename(part, dst)
+      hfs.setTimes(dst, 1000000L * (i + 1), -1)
+    }
+    hfs.delete(stage, true)
+    graft.streaming.StreamingOps.pacedFileSource(spark, src.toString, schema,
+      maxFilesPerTrigger = 1)
+  }
+
+  /** The corpus's (doc_id, text) rows matching `where`, as an
+    * [[orderedFileStream]] of three micro-batches split on doc_id % 3.
+    */
+  private def docsByMod3(spark: SparkSession, sfDir: String, base: String,
+      where: Column = lit(true)): DataFrame = {
+    val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text")).where(where)
+    orderedFileStream(spark, base, StructType.fromDDL("doc_id LONG, text STRING"),
+      (0 until 3).map(m => d.where(col("doc_id") % 3 === m)))
+  }
+
   /** Events parquet as a bounded stream (same ns→micros handling as
     * [[Tables.events]]).
     */
@@ -174,7 +213,8 @@ object Fixtures {
       val src = eventStream(spark, sfDir)
         .where(col("event_type") === "click")
         .select(col("ts").as("time"), col("value"), col("ts").as("created_time"))
-      val q = graft.streaming.StreamingOps.ingestAvailableNow(fs, src, "events/stream_click", cp)
+      val q = graft.streaming.StreamingOps.ingest(fs, src, "events/stream_click", cp,
+        Trigger.AvailableNow())
       q.awaitTermination()
     })
     fs
@@ -202,8 +242,8 @@ object Fixtures {
       val schema = spark.read.parquet(srcDir).schema
       val src = graft.streaming.StreamingOps.pacedFileSource(
         spark, srcDir, schema, maxFilesPerTrigger = 1)
-      val q = graft.streaming.StreamingOps.ingestAvailableNow(
-        fs, src, "events/stream_click_c", cp, compactEvery = 2)
+      val q = graft.streaming.StreamingOps.ingest(
+        fs, src, "events/stream_click_c", cp, Trigger.AvailableNow(), compactEvery = 2)
       q.awaitTermination()
       "done"
     })
@@ -257,15 +297,8 @@ object Fixtures {
     */
   def sessionizedMbPath(spark: SparkSession, sfDir: String): String =
     sessionizedMb.getOrElseUpdate(sfDir, {
-      import org.apache.spark.sql.streaming.Trigger
       val base = s"${tmpRoot}/smb_${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      val (src, out, cp, stage) = (s"$base/src", s"$base/out", s"$base/cp", s"$base/stage")
-      val hfs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (hfs.exists(new org.apache.hadoop.fs.Path(base)))
-        hfs.delete(new org.apache.hadoop.fs.Path(base), true)
-      hfs.mkdirs(new org.apache.hadoop.fs.Path(src))
-
+      val (out, cp) = (s"$base/out", s"$base/cp")
       val ev = Tables.events(spark, sfDir).select(col("user_id"), col("ts"), col("value"))
       val mrow = ev.agg(expr("percentile_approx(unix_micros(ts), 0.5, 1000)").as("m"),
         max(unix_micros(col("ts"))).as("mx")).head()
@@ -276,28 +309,13 @@ object Fixtures {
           .select(col("user_id"), timestamp_micros(col("us")).as("ts"),
             lit(0.0).as("value"))
       }
-      val files = Seq(
-        ev.where(unix_micros(col("ts")) <= m),
-        ev.where(unix_micros(col("ts")) > m),
-        sentinel(-1L, mx + 10L * 86400000000L),
-        sentinel(-2L, mx + 20L * 86400000000L))
-      files.zipWithIndex.foreach { case (df, i) =>
-        val st = s"$stage/$i"
-        df.coalesce(1).write.mode("overwrite").parquet(st)
-        val part = hfs.listStatus(new org.apache.hadoop.fs.Path(st))
-          .find(_.getPath.getName.endsWith(".parquet")).get.getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$src/batch_$i.parquet")
-        hfs.rename(part, dst)
-        // distinct ascending mtimes pin the file-source processing order
-        hfs.setTimes(dst, 1000000L * (i + 1), -1)
-      }
-      hfs.delete(new org.apache.hadoop.fs.Path(stage), true)
-
       import spark.implicits._
-      val stream = spark.readStream
-        .schema("user_id LONG, ts TIMESTAMP, value DOUBLE")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+      val stream = orderedFileStream(spark, base,
+        StructType.fromDDL("user_id LONG, ts TIMESTAMP, value DOUBLE"), Seq(
+          ev.where(unix_micros(col("ts")) <= m),
+          ev.where(unix_micros(col("ts")) > m),
+          sentinel(-1L, mx + 10L * 86400000000L),
+          sentinel(-2L, mx + 20L * 86400000000L)))
         .withWatermark("ts", "0 seconds")
         .as[graft.streaming.StreamingOps.SessionEvent]
       val q = graft.streaming.StreamingOps.sessionizeStream(stream, gapMinutes = 30)
@@ -504,42 +522,23 @@ object Fixtures {
 
   /** Z-layout table maintained by the STREAMING path: the events-derived
     * (event_id, x, y) rows drain in 3 cold-start micro-batches through
-    * [[graft.streaming.StreamingOps.zLayoutAvailableNow]] — the
+    * [[graft.streaming.StreamingOps.zLayout]] — the
     * `stream_zorder` gate's pruned read over the result must equal the
     * one-shot full-scan filter.
     */
   def streamZLayoutPath(spark: SparkSession, sfDir: String): String =
     streamZLay.getOrElseUpdate(sfDir, {
       val base = s"${tmpRoot}/szl_${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      val (src, table, cp, stage) =
-        (s"$base/src", s"$base/table", s"$base/cp", s"$base/stage")
-      val hfs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (hfs.exists(new org.apache.hadoop.fs.Path(base)))
-        hfs.delete(new org.apache.hadoop.fs.Path(base), true)
-      hfs.mkdirs(new org.apache.hadoop.fs.Path(src))
+      val (table, cp) = (s"$base/table", s"$base/cp")
       val ev = Tables.events(spark, sfDir).select(
         col("event_id"),
         (col("user_id") % 256).as("x"),
         floor(col("value")).cast("bigint").as("y"))
-      (0 until 3).foreach { i =>
-        val st = s"$stage/$i"
-        ev.where(col("event_id") % 3 === i).coalesce(1)
-          .write.mode("overwrite").parquet(st)
-        val part = hfs.listStatus(new org.apache.hadoop.fs.Path(st))
-          .find(_.getPath.getName.endsWith(".parquet")).get.getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$src/batch_$i.parquet")
-        hfs.rename(part, dst)
-        hfs.setTimes(dst, 1000000L * (i + 1), -1)
-      }
-      hfs.delete(new org.apache.hadoop.fs.Path(stage), true)
-      val stream = spark.readStream
-        .schema("event_id LONG, x LONG, y LONG")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-      graft.streaming.StreamingOps.zLayoutAvailableNow(
-        stream, Seq("x", "y"), table, cp, nFiles = 8, bits = 9)
-        .awaitTermination()
+      val stream = orderedFileStream(spark, base,
+        StructType.fromDDL("event_id LONG, x LONG, y LONG"),
+        (0 until 3).map(i => ev.where(col("event_id") % 3 === i)))
+      graft.streaming.StreamingOps.zLayout(stream, Seq("x", "y"), table, cp,
+        Trigger.AvailableNow(), nFiles = 8, bits = 9).awaitTermination()
       table
     })
 
@@ -607,38 +606,20 @@ object Fixtures {
   def streamScdPath(spark: SparkSession, sfDir: String): String =
     streamScd.getOrElseUpdate(sfDir, {
       val base = s"${tmpRoot}/sscd_${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      val (src, store0, cp, stage) =
-        (s"$base/src", s"$base/store", s"$base/cp", s"$base/stage")
-      val hfs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (hfs.exists(new org.apache.hadoop.fs.Path(base)))
-        hfs.delete(new org.apache.hadoop.fs.Path(base), true)
-      hfs.mkdirs(new org.apache.hadoop.fs.Path(src))
+      val (store0, cp) = (s"$base/store", s"$base/cp")
       val ev = Tables.events(spark, sfDir)
         .select(col("user_id"), col("ts"), col("event_type"), col("event_id"))
       val cuts = Seq(
         ("1970-01-01 00:00:00", "2024-01-11 00:00:00"),
         ("2024-01-11 00:00:00", "2024-01-21 00:00:00"),
         ("2024-01-21 00:00:00", "2100-01-01 00:00:00"))
-      cuts.zipWithIndex.foreach { case ((f, t), i) =>
-        val st = s"$stage/$i"
+      val stream = orderedFileStream(spark, base, ev.schema, cuts.map { case (f, t) =>
         ev.where(col("ts") >= lit(java.sql.Timestamp.valueOf(f)) &&
-            col("ts") < lit(java.sql.Timestamp.valueOf(t)))
-          .coalesce(1).write.mode("overwrite").parquet(st)
-        val part = hfs.listStatus(new org.apache.hadoop.fs.Path(st))
-          .find(_.getPath.getName.endsWith(".parquet")).get.getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$src/batch_$i.parquet")
-        hfs.rename(part, dst)
-        hfs.setTimes(dst, 1000000L * (i + 1), -1)
-      }
-      hfs.delete(new org.apache.hadoop.fs.Path(stage), true)
-      val stream = spark.readStream
-        .schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-      graft.streaming.StreamingOps.scdAvailableNow(
+          col("ts") < lit(java.sql.Timestamp.valueOf(t)))
+      })
+      graft.streaming.StreamingOps.scd(
         stream, "user_id", "ts", Seq("event_type"), Seq("event_id"),
-        store0, cp).awaitTermination()
+        store0, cp, Trigger.AvailableNow()).awaitTermination()
       store0
     })
 
@@ -668,35 +649,16 @@ object Fixtures {
   def streamDriftPath(spark: SparkSession, sfDir: String): String =
     streamDrift.getOrElseUpdate(sfDir, {
       val base = s"${tmpRoot}/sdr_${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      val (src, cur, cp, stage) =
-        (s"$base/src", s"$base/cur", s"$base/cp", s"$base/stage")
-      val hfs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (hfs.exists(new org.apache.hadoop.fs.Path(base)))
-        hfs.delete(new org.apache.hadoop.fs.Path(base), true)
-      hfs.mkdirs(new org.apache.hadoop.fs.Path(src))
+      val (cur, cp) = (s"$base/cur", s"$base/cp")
       val ref = histStorePath(spark, sfDir)
       val curRows = store(spark, sfDir).storage.load("events", "click",
         from = Some(java.sql.Timestamp.valueOf("2024-01-10 00:00:00")),
         to = Some(java.sql.Timestamp.valueOf("2024-01-31 00:00:00")))
         .select(col("value"), pmod(xxhash64(col("time")), lit(3)).as("k"))
-      (0 until 3).foreach { i =>
-        val st = s"$stage/$i"
-        curRows.where(col("k") === i).select(col("value")).coalesce(1)
-          .write.mode("overwrite").parquet(st)
-        val part = hfs.listStatus(new org.apache.hadoop.fs.Path(st))
-          .find(_.getPath.getName.endsWith(".parquet")).get.getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$src/batch_$i.parquet")
-        hfs.rename(part, dst)
-        hfs.setTimes(dst, 1000000L * (i + 1), -1)
-      }
-      hfs.delete(new org.apache.hadoop.fs.Path(stage), true)
-      val stream = spark.readStream
-        .schema("value DOUBLE")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-      graft.streaming.StreamingOps.histAvailableNow(
-        stream, "value", ref, cur, cp).awaitTermination()
+      val stream = orderedFileStream(spark, base, StructType.fromDDL("value DOUBLE"),
+        (0 until 3).map(i => curRows.where(col("k") === i).select(col("value"))))
+      graft.streaming.StreamingOps.hist(
+        stream, "value", ref, cur, cp, Trigger.AvailableNow()).awaitTermination()
       cur
     })
 
@@ -761,7 +723,7 @@ object Fixtures {
 
   /** Postings index materialized through the STREAMING maintenance path:
     * documents split into three id-striped files, drained one file per
-    * micro-batch through [[graft.streaming.StreamingOps.indexAvailableNow]]
+    * micro-batch through [[graft.streaming.StreamingOps.index]]
     * (one batch dir per micro-batch), then COMPACTED to a fresh
     * single-batch index — the gate probing it must equal the whole-corpus
     * scorer, proving batch accumulation, df/N additivity and compaction
@@ -771,13 +733,10 @@ object Fixtures {
     streamPix.getOrElseUpdate(sfDir, {
       val base = s"${tmpRoot}/spx_${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
       val d = Tables.documents(spark, sfDir)
-      (0 until 3).foreach(m => d.where(col("doc_id") % 3 === m)
-        .repartition(1).write.mode("append").parquet(s"$base/src"))
-      val schema = spark.read.parquet(s"$base/src").schema
-      val stream = graft.streaming.StreamingOps.pacedFileSource(
-        spark, s"$base/src", schema, maxFilesPerTrigger = 1)
-      val q = graft.streaming.StreamingOps.indexAvailableNow(
-        stream, "doc_id", "text", s"$base/pix", s"$base/ckpt")
+      val stream = orderedFileStream(spark, base, d.schema,
+        (0 until 3).map(m => d.where(col("doc_id") % 3 === m)))
+      val q = graft.streaming.StreamingOps.index(
+        stream, "doc_id", "text", s"$base/pix", s"$base/ckpt", Trigger.AvailableNow())
       // a silent timeout would compact a PARTIAL index and surface as a
       // baffling gate mismatch — fail here instead
       require(q.awaitTermination(180000), "streamed index did not drain")
@@ -791,7 +750,7 @@ object Fixtures {
   /** PQ index materialized through the STREAMING maintenance path: the
     * codebooks train on the base corpus (vec_id < 350), the remaining
     * vectors arrive as three id-striped files drained one per micro-batch
-    * through [[graft.streaming.StreamingOps.annIndexAvailableNow]] — each
+    * through [[graft.streaming.StreamingOps.annIndex]] — each
     * batch encodes under the FROZEN codebooks into its own `batch=` dir.
     * The gate probing it replays the same construction in SQL (training
     * restricted to the base, encoding over everything), proving frozen-
@@ -801,16 +760,13 @@ object Fixtures {
     streamPq.getOrElseUpdate(sfDir, {
       val base = s"${tmpRoot}/spq_${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
       val emb = Tables.embeddings(spark, sfDir)
+      val stream = orderedFileStream(spark, base, emb.schema, (0 until 3).map(m =>
+        emb.where(col("vec_id") >= 350 && col("vec_id") % 3 === m)))
       graft.operators.SimilarityOps.buildPqIndex(
         emb.where(col("vec_id") < 350), "vec_id", "embedding",
         s"$base/pq", m = 4, ksub = 8, refineIters = 1)
-      (0 until 3).foreach(m => emb.where(col("vec_id") >= 350 && col("vec_id") % 3 === m)
-        .repartition(1).write.mode("append").parquet(s"$base/src"))
-      val schema = spark.read.parquet(s"$base/src").schema
-      val stream = graft.streaming.StreamingOps.pacedFileSource(
-        spark, s"$base/src", schema, maxFilesPerTrigger = 1)
-      val q = graft.streaming.StreamingOps.annIndexAvailableNow(
-        stream, "vec_id", "embedding", s"$base/pq", s"$base/ckpt")
+      val q = graft.streaming.StreamingOps.annIndex(
+        stream, "vec_id", "embedding", s"$base/pq", s"$base/ckpt", Trigger.AvailableNow())
       require(q.awaitTermination(180000), "streamed PQ index did not drain")
       // gate probes the COMPACTED index (the postings-fixture pattern):
       // batch accumulation AND compaction must both preserve the answer
@@ -821,16 +777,6 @@ object Fixtures {
 
   private val incDedupMb = TrieMap[String, String]()
 
-  /** TRUE multi-micro-batch incremental dedup materialized once per
-    * (JVM, sf): a store is built from docs < 250, docs >= 250 are split
-    * into three source FILES (distinct mtimes pin processing order) and
-    * streamed with maxFilesPerTrigger=1 under AvailableNow through
-    * [[graft.streaming.StreamingOps.dedupIncrementalAvailableNow]] — each
-    * micro-batch probes the store and then appends its own signatures, so
-    * cross-batch pairs (an early doc duplicated by a later one) must be
-    * found by the LATER batch against the grown store. The drained pair
-    * set must equal the one-shot dedup_incremental oracle.
-    */
   private val streamClusters = TrieMap[String, String]()
 
   /** Streaming cluster maintenance driven to completion: the WHOLE corpus
@@ -841,34 +787,10 @@ object Fixtures {
   def streamClustersPath(spark: SparkSession, sfDir: String): String =
     streamClusters.getOrElseUpdate(sfDir, {
       val base = s"${tmpRoot}/scl_${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      val (src, cp, store, labels, stage) =
-        (s"$base/src", s"$base/cp", s"$base/store", s"$base/labels", s"$base/stage")
-      val hfs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (hfs.exists(new org.apache.hadoop.fs.Path(base)))
-        hfs.delete(new org.apache.hadoop.fs.Path(base), true)
-      hfs.mkdirs(new org.apache.hadoop.fs.Path(src))
-      val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-      val files = Seq(
-        d.where(col("doc_id") % 3 === 0),
-        d.where(col("doc_id") % 3 === 1),
-        d.where(col("doc_id") % 3 === 2))
-      files.zipWithIndex.foreach { case (df, i) =>
-        val st = s"$stage/$i"
-        df.coalesce(1).write.mode("overwrite").parquet(st)
-        val part = hfs.listStatus(new org.apache.hadoop.fs.Path(st))
-          .find(_.getPath.getName.endsWith(".parquet")).get.getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$src/batch_$i.parquet")
-        hfs.rename(part, dst)
-        hfs.setTimes(dst, 1000000L * (i + 1), -1)
-      }
-      hfs.delete(new org.apache.hadoop.fs.Path(stage), true)
-      val stream = spark.readStream
-        .schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-      graft.streaming.StreamingOps.clustersAvailableNow(
-        stream, "doc_id", "text", store, labels, cp).awaitTermination()
+      val (cp, store, labels) = (s"$base/cp", s"$base/store", s"$base/labels")
+      val stream = docsByMod3(spark, sfDir, base)
+      graft.streaming.StreamingOps.clusters(stream, "doc_id", "text", store, labels, cp,
+        Trigger.AvailableNow()).awaitTermination()
       labels
     })
 
@@ -884,34 +806,10 @@ object Fixtures {
   def streamWinnowPath(spark: SparkSession, sfDir: String): String =
     streamWinnow.getOrElseUpdate(sfDir, {
       val base = s"${tmpRoot}/swn_${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      val (src, out, cp, store, stage) =
-        (s"$base/src", s"$base/out", s"$base/cp", s"$base/store", s"$base/stage")
-      val hfs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (hfs.exists(new org.apache.hadoop.fs.Path(base)))
-        hfs.delete(new org.apache.hadoop.fs.Path(base), true)
-      hfs.mkdirs(new org.apache.hadoop.fs.Path(src))
-      val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-      val files = Seq(
-        d.where(col("doc_id") % 3 === 0),
-        d.where(col("doc_id") % 3 === 1),
-        d.where(col("doc_id") % 3 === 2))
-      files.zipWithIndex.foreach { case (df, i) =>
-        val st = s"$stage/$i"
-        df.coalesce(1).write.mode("overwrite").parquet(st)
-        val part = hfs.listStatus(new org.apache.hadoop.fs.Path(st))
-          .find(_.getPath.getName.endsWith(".parquet")).get.getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$src/batch_$i.parquet")
-        hfs.rename(part, dst)
-        hfs.setTimes(dst, 1000000L * (i + 1), -1)
-      }
-      hfs.delete(new org.apache.hadoop.fs.Path(stage), true)
-      val stream = spark.readStream
-        .schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-      graft.streaming.StreamingOps.winnowAvailableNow(
-        stream, "doc_id", "text", store, out, cp).awaitTermination()
+      val (out, cp, store) = (s"$base/out", s"$base/cp", s"$base/store")
+      val stream = docsByMod3(spark, sfDir, base)
+      graft.streaming.StreamingOps.winnow(stream, "doc_id", "text", store, out, cp,
+        Trigger.AvailableNow()).awaitTermination()
       out
     })
 
@@ -925,36 +823,13 @@ object Fixtures {
   def streamEmbNearDupPath(spark: SparkSession, sfDir: String): String =
     streamEmb.getOrElseUpdate(sfDir, {
       val base = s"${tmpRoot}/sem_${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      val (src, out, cp, store, stage) =
-        (s"$base/src", s"$base/out", s"$base/cp", s"$base/store", s"$base/stage")
-      val hfs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (hfs.exists(new org.apache.hadoop.fs.Path(base)))
-        hfs.delete(new org.apache.hadoop.fs.Path(base), true)
-      hfs.mkdirs(new org.apache.hadoop.fs.Path(src))
+      val (out, cp, store) = (s"$base/out", s"$base/cp", s"$base/store")
       val e = Tables.embeddings(spark, sfDir).where(col("vec_id") < 500)
         .select(col("vec_id"), col("embedding"))
-      val files = Seq(
-        e.where(col("vec_id") % 3 === 0),
-        e.where(col("vec_id") % 3 === 1),
-        e.where(col("vec_id") % 3 === 2))
-      files.zipWithIndex.foreach { case (df, i) =>
-        val st = s"$stage/$i"
-        df.coalesce(1).write.mode("overwrite").parquet(st)
-        val part = hfs.listStatus(new org.apache.hadoop.fs.Path(st))
-          .find(_.getPath.getName.endsWith(".parquet")).get.getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$src/batch_$i.parquet")
-        hfs.rename(part, dst)
-        hfs.setTimes(dst, 1000000L * (i + 1), -1)
-      }
-      hfs.delete(new org.apache.hadoop.fs.Path(stage), true)
-      val stream = spark.readStream
-        .schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-      graft.streaming.StreamingOps.embNearDupAvailableNow(
-        stream, "vec_id", "embedding", store, out, cp,
-        minCosine = 0.4).awaitTermination()
+      val stream = orderedFileStream(spark, base, e.schema,
+        (0 until 3).map(m => e.where(col("vec_id") % 3 === m)))
+      graft.streaming.StreamingOps.embNearDup(stream, "vec_id", "embedding", store, out,
+        cp, Trigger.AvailableNow(), minCosine = 0.4).awaitTermination()
       out
     })
 
@@ -970,75 +845,33 @@ object Fixtures {
   def streamBoilerplatePath(spark: SparkSession, sfDir: String): String =
     streamBp.getOrElseUpdate(sfDir, {
       val base = s"${tmpRoot}/sbp_${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      val (src, out, cp, census, stage) =
-        (s"$base/src", s"$base/out", s"$base/cp", s"$base/census", s"$base/stage")
-      val hfs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (hfs.exists(new org.apache.hadoop.fs.Path(base)))
-        hfs.delete(new org.apache.hadoop.fs.Path(base), true)
-      hfs.mkdirs(new org.apache.hadoop.fs.Path(src))
-      val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-      val files = Seq(
-        d.where(col("doc_id") % 3 === 0),
-        d.where(col("doc_id") % 3 === 1),
-        d.where(col("doc_id") % 3 === 2))
-      files.zipWithIndex.foreach { case (df, i) =>
-        val st = s"$stage/$i"
-        df.coalesce(1).write.mode("overwrite").parquet(st)
-        val part = hfs.listStatus(new org.apache.hadoop.fs.Path(st))
-          .find(_.getPath.getName.endsWith(".parquet")).get.getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$src/batch_$i.parquet")
-        hfs.rename(part, dst)
-        hfs.setTimes(dst, 1000000L * (i + 1), -1)
-      }
-      hfs.delete(new org.apache.hadoop.fs.Path(stage), true)
-      val stream = spark.readStream
-        .schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-      graft.streaming.StreamingOps.boilerplateAvailableNow(
-        stream, "doc_id", "text", census, out, cp,
-        minCount = 50, delim = " ").awaitTermination()
+      val (out, cp, census) = (s"$base/out", s"$base/cp", s"$base/census")
+      val stream = docsByMod3(spark, sfDir, base)
+      graft.streaming.StreamingOps.boilerplate(stream, "doc_id", "text", census, out, cp,
+        Trigger.AvailableNow(), minCount = 50, delim = " ").awaitTermination()
       out
     })
 
+  /** TRUE multi-micro-batch incremental dedup materialized once per
+    * (JVM, sf): a store is built from docs < 250, docs >= 250 are split
+    * into three source FILES (distinct mtimes pin processing order) and
+    * streamed with maxFilesPerTrigger=1 under AvailableNow through
+    * [[graft.streaming.StreamingOps.dedupIncremental]] — each
+    * micro-batch probes the store and then appends its own signatures, so
+    * cross-batch pairs (an early doc duplicated by a later one) must be
+    * found by the LATER batch against the grown store. The drained pair
+    * set must equal the one-shot dedup_incremental oracle.
+    */
   def incrementalDedupMbPath(spark: SparkSession, sfDir: String): String =
     incDedupMb.getOrElseUpdate(sfDir, {
-      import org.apache.spark.sql.streaming.Trigger
       val base = s"${tmpRoot}/idm_${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      val (src, out, cp, store, stage) =
-        (s"$base/src", s"$base/out", s"$base/cp", s"$base/store", s"$base/stage")
-      val hfs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (hfs.exists(new org.apache.hadoop.fs.Path(base)))
-        hfs.delete(new org.apache.hadoop.fs.Path(base), true)
-      hfs.mkdirs(new org.apache.hadoop.fs.Path(src))
-
+      val (out, cp, store) = (s"$base/out", s"$base/cp", s"$base/store")
       val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+      val stream = docsByMod3(spark, sfDir, base, col("doc_id") >= 250)
       graft.operators.DedupOps.buildMinhashStore(
         d.where(col("doc_id") < 250), "doc_id", "text", store)
-      val newDocs = d.where(col("doc_id") >= 250)
-      val files = Seq(
-        newDocs.where(col("doc_id") % 3 === 0),
-        newDocs.where(col("doc_id") % 3 === 1),
-        newDocs.where(col("doc_id") % 3 === 2))
-      files.zipWithIndex.foreach { case (df, i) =>
-        val st = s"$stage/$i"
-        df.coalesce(1).write.mode("overwrite").parquet(st)
-        val part = hfs.listStatus(new org.apache.hadoop.fs.Path(st))
-          .find(_.getPath.getName.endsWith(".parquet")).get.getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$src/batch_$i.parquet")
-        hfs.rename(part, dst)
-        hfs.setTimes(dst, 1000000L * (i + 1), -1)
-      }
-      hfs.delete(new org.apache.hadoop.fs.Path(stage), true)
-
-      val stream = spark.readStream
-        .schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-      val q = graft.streaming.StreamingOps.dedupIncrementalAvailableNow(
-        stream, "doc_id", "text", store, out, cp)
+      val q = graft.streaming.StreamingOps.dedupIncremental(
+        stream, "doc_id", "text", store, out, cp, Trigger.AvailableNow())
       q.awaitTermination()
       out
     })
@@ -1051,51 +884,30 @@ object Fixtures {
     * three source files by ID RANGE — batch order equals id order, so
     * first-seen-wins equals the corpus-wide min-id canonical the oracle
     * computes — and streamed one file per trigger through
-    * [[graft.streaming.StreamingOps.curateAvailableNow]] against the
+    * [[graft.streaming.StreamingOps.curate]] against the
     * benchmark split (doc_id % 17 == 0). Returns the kept-docs output dir.
     */
   def curateStreamMbPath(spark: SparkSession, sfDir: String): String =
     curateMb.getOrElseUpdate(sfDir, {
       val base = s"${tmpRoot}/csm_${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      val (src, out, cp, store, stage) =
-        (s"$base/src", s"$base/out", s"$base/cp", s"$base/store", s"$base/stage")
-      val hfs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (hfs.exists(new org.apache.hadoop.fs.Path(base)))
-        hfs.delete(new org.apache.hadoop.fs.Path(base), true)
-      hfs.mkdirs(new org.apache.hadoop.fs.Path(src))
-
+      val (out, cp, store) = (s"$base/out", s"$base/cp", s"$base/store")
       val d = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text"), col("lang"))
-      graft.operators.DedupOps.buildFingerprintStore(
-        d.where(col("doc_id") < 250 && col("doc_id") % 17 =!= 0),
-        "doc_id", "text", store)
       val newDocs = d.where(col("doc_id") >= 250 && col("doc_id") % 17 =!= 0)
       val bounds = newDocs.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
       val cut1 = lo + (hi - lo) / 3; val cut2 = lo + 2 * (hi - lo) / 3
-      val files = Seq(
-        newDocs.where(col("doc_id") <= cut1),
-        newDocs.where(col("doc_id") > cut1 && col("doc_id") <= cut2),
-        newDocs.where(col("doc_id") > cut2))
-      files.zipWithIndex.foreach { case (df, i) =>
-        val st = s"$stage/$i"
-        df.coalesce(1).write.mode("overwrite").parquet(st)
-        val part = hfs.listStatus(new org.apache.hadoop.fs.Path(st))
-          .find(_.getPath.getName.endsWith(".parquet")).get.getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$src/batch_$i.parquet")
-        hfs.rename(part, dst)
-        hfs.setTimes(dst, 1000000L * (i + 1), -1)
-      }
-      hfs.delete(new org.apache.hadoop.fs.Path(stage), true)
-
-      val stream = spark.readStream
-        .schema("doc_id LONG, text STRING, lang STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-      val q = graft.streaming.StreamingOps.curateAvailableNow(
+      val stream = orderedFileStream(spark, base,
+        StructType.fromDDL("doc_id LONG, text STRING, lang STRING"), Seq(
+          newDocs.where(col("doc_id") <= cut1),
+          newDocs.where(col("doc_id") > cut1 && col("doc_id") <= cut2),
+          newDocs.where(col("doc_id") > cut2)))
+      graft.operators.DedupOps.buildFingerprintStore(
+        d.where(col("doc_id") < 250 && col("doc_id") % 17 =!= 0),
+        "doc_id", "text", store)
+      val q = graft.streaming.StreamingOps.curate(
         stream, Tables.documents(spark, sfDir).where(col("doc_id") % 17 === 0),
-        "doc_id", "text", "lang", store, out, cp)
+        "doc_id", "text", "lang", store, out, cp, Trigger.AvailableNow())
       q.awaitTermination()
       out
     })

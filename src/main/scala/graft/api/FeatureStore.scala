@@ -117,7 +117,10 @@ class FeatureStore(
     if (catalog.getFeature(tns, tn).isDefined)
       throw new FeatureStoreException(s"clone target exists: $to")
     catalog.createFeature(src.copy(namespace = tns, name = tn, version = 1))
-    if (src.transform.isEmpty) storage.copy(fns, fn, tns, tn)
+    if (src.transform.isEmpty)
+      storage.copy(fns, fn, tns, tn,
+        src.meta.get(FeatureStore.EntityKeysMeta).fold(Seq.empty[String])(_.split(",").toSeq),
+        src.partitionScheme)
   }
 
   /** Small-file compaction for one feature's stored data — the store

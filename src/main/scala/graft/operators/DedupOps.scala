@@ -1456,7 +1456,7 @@ object DedupOps {
   }
 
   /** Compact a many-batch winnow store (a long-running [[graft.streaming
-    * .StreamingOps.winnowAvailableNow]] tail appends one batch dir per
+    * .StreamingOps.winnow]] tail appends one batch dir per
     * micro-batch) into a fresh single-batch store at `dstPath` without
     * re-fingerprinting any text: fps and sizes are disjoint-id unions
     * (rewritten under one `batch=base`), meta copies verbatim. Same

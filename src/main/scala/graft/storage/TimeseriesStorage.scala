@@ -746,16 +746,19 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
       scheme: PartitionScheme = PartitionScheme.Date): Seq[String] =
     dropBefore(keyedPath(namespace, name), cutoff, scheme)
 
-  /** Copy one feature's data to another feature location (clone support,
-    * reference src/qafs/backend/pandas.py:274-296 — overwrite semantics).
+  /** Copy one feature's stored rows, every version, to another feature
+    * location (clone support, reference src/qafs/backend/pandas.py:274-296
+    * — overwrite semantics): the entity-keyed table when `keys` is
+    * non-empty, the plain one otherwise. A feature with no data copies
+    * nothing.
     */
-  def copy(fromNs: String, fromName: String, toNs: String, toName: String): Unit = {
-    val src = featurePath(fromNs, fromName)
-    if (fs.exists(new Path(src)))
-      readFmt(fromNs, src).write
-        .format(fmt(toNs)).option("compression", "snappy")
-        .partitionBy(PartCol).mode("overwrite")
-        .save(featurePath(toNs, toName))
+  def copy(fromNs: String, fromName: String, toNs: String, toName: String,
+      keys: Seq[String] = Nil, scheme: PartitionScheme = PartitionScheme.Date): Unit = {
+    def table(ns: String, n: String) =
+      if (keys.isEmpty) Table(ns, featurePath(ns, n)) else Table(ns, keyedPath(ns, n), keys)
+    val from = table(fromNs, fromName)
+    if (fs.exists(new Path(from.dir)))
+      write(table(toNs, toName), read(from, scheme, None, None, None), scheme, "overwrite")
   }
 
   // ---- small-file compaction (store maintenance) ----------------------------

@@ -1,6 +1,10 @@
 package graft.streaming
 
+import graft.CacheScope
+import graft.StoreCommit
 import graft.api.FeatureStore
+import graft.operators.{CurationOps, DedupOps, LayoutOps, SearchOps, SimilarityOps}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -12,15 +16,29 @@ import java.sql.Timestamp
   * append + created_time versioning is a batch approximation of an upsert
   * stream; these operators make that stream real:
   *
-  *  - [[StreamingOps.ingestAvailableNow]]: stream → the exact batch write
-  *    path (quality gate included) via foreachBatch, so batch and streaming
+  *  - [[StreamingOps.ingest]]: stream → the exact batch write path
+  *    (quality gate included) via foreachBatch, so batch and streaming
   *    ingest produce byte-identical storage.
+  *  - one store maintainer per persisted-store family
+  *    ([[StreamingOps.dedupIncremental]], [[StreamingOps.embNearDup]],
+  *    [[StreamingOps.winnow]], [[StreamingOps.boilerplate]],
+  *    [[StreamingOps.clusters]], [[StreamingOps.index]],
+  *    [[StreamingOps.annIndex]], [[StreamingOps.curate]],
+  *    [[StreamingOps.zLayout]], [[StreamingOps.scd]],
+  *    [[StreamingOps.hist]]): each runs its batch probe/append once per
+  *    micro-batch under the `b<id>` batch token.
   *  - [[StreamingOps.windowedCounts]]: watermarked tumbling-window agg.
   *  - [[StreamingOps.dedupedStream]]: watermark-bounded streaming dedup —
   *    the streaming analogue of the read-time latest-version dedup.
   *  - [[StreamingOps.sessionizeStateful]]: custom state machine via
   *    flatMapGroupsWithState (session windows with an inactivity gap);
   *    [[StreamingOps.sessionizeBatch]] is the batch-equivalent oracle path.
+  *
+  * Every ingest and store maintainer takes the caller's `Trigger`:
+  * `Trigger.AvailableNow()` drains the source then stops (deterministic
+  * catch-up), `Trigger.ProcessingTime(interval)` keeps a live tail running.
+  * Both run the same per-micro-batch code, and each micro-batch's tracked
+  * operator caches are released when it ends, also when it fails.
   */
 object StreamingOps {
 
@@ -37,10 +55,57 @@ object StreamingOps {
     t
   }
 
+  /** The one micro-batch driver under every ingest and store maintainer:
+    * runs `body(batch, token)` for each NON-EMPTY micro-batch, where
+    * `token` = `b<batch id>` names the batch's own store dirs (a replayed
+    * batch reuses its id, so its writes overwrite instead of duplicating).
+    * Caches the body tracks through [[graft.CacheScope]] are released when
+    * the batch ends — on failure too, so a restarted live tail does not
+    * pin one frame per failed batch — while the application's own caches
+    * survive. `afterBatch` runs for every micro-batch, empty ones included.
+    */
+  private def eachBatch(stream: DataFrame, checkpoint: String, trigger: Trigger,
+      afterBatch: Long => Unit = _ => ())(
+      body: (DataFrame, String) => Unit): StreamingQuery =
+    stream.writeStream
+      .trigger(trigger)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        if (!batch.isEmpty) {
+          val scope = CacheScope.snapshot()
+          try body(batch, s"b$bid") finally CacheScope.releaseNewSince(scope)
+        }
+        afterBatch(bid)
+      }
+      .start()
+
+  /** The committed batches of `store` other than `token`, or None when
+    * there are none. Committed-read: only batches whose commit marker
+    * landed are probed, minus a replayed batch's own dir — so this doubles
+    * as the cold-start test, and a store root holding only `_commits` or
+    * only this batch's crashed dir bootstraps empty instead of wedging on
+    * schema inference.
+    */
+  private def committedOthers(spark: SparkSession, store: String,
+      token: String): Option[DataFrame] =
+    if (StoreCommit.visibleTokens(spark, store).exists(_ != token))
+      Some(StoreCommit.read(spark, store).where(col("batch") =!= token))
+    else None
+
+  /** Whether `path` exists: the cold-start test of the stores whose first
+    * batch builds them (a meta sidecar or the store root itself).
+    */
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   /** Stream a (time,value,...) frame into a feature through the full batch
     * save path — validation, coercion, partitioning, append — one batch per
-    * micro-batch. AvailableNow drains the source then stops, giving
-    * deterministic catch-up ingest; swap the trigger for continuous ingest.
+    * micro-batch. An entity-keyed feature (catalog entry carrying
+    * [[graft.api.FeatureStore.EntityKeysMeta]]) takes (keys... + time +
+    * value) rows through [[graft.api.FeatureStore.saveKeyed]]; any other
+    * feature goes through [[graft.api.FeatureStore.saveDf]].
     *
     * `compactEvery` > 0 runs the store-maintenance rewrite
     * ([[graft.api.FeatureStore.compactFeature]]) every that-many
@@ -52,24 +117,24 @@ object StreamingOps {
     * it (the batch save is an append; compaction only rewrites files).
     * 0 disables (the default — maintenance cadence is a deployment
     * decision; AvailableNow callers often prefer one compaction after the
-    * drain instead).
+    * drain instead). Pair a live tail with [[pacedFileSource]] to bound
+    * the per-trigger batch size.
     */
-  def ingestAvailableNow(fs: FeatureStore, stream: DataFrame, feature: String,
-      checkpoint: String, compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) fs.saveDf(batch, name = Some(feature))
-        // cadence check OUTSIDE the emptiness guard: an empty micro-batch
-        // landing exactly on the boundary must not silently skip a
-        // maintenance cycle (compaction of an already-compact store is a
-        // listing-only no-op, so firing on an empty trigger is free)
-        if (compactEvery > 0 && (bid + 1) % compactEvery == 0) {
-          fs.compactFeature(feature); ()
-        }
-      }
-      .start()
+  def ingest(fs: FeatureStore, stream: DataFrame, feature: String,
+      checkpoint: String, trigger: Trigger, compactEvery: Int = 0): StreamingQuery =
+    eachBatch(stream, checkpoint, trigger,
+      // cadence check OUTSIDE the emptiness guard: an empty micro-batch
+      // landing exactly on the boundary must not silently skip a
+      // maintenance cycle (compaction of an already-compact store is a
+      // listing-only no-op, so firing on an empty trigger is free)
+      afterBatch = bid => if (compactEvery > 0 && (bid + 1) % compactEvery == 0) {
+        fs.compactFeature(feature); ()
+      }) { (batch, _) =>
+      val (ns, n) = graft.catalog.Catalog.splitName(feature)
+      if (fs.catalog.getFeature(ns, n).exists(_.meta.contains(FeatureStore.EntityKeysMeta)))
+        fs.saveKeyed(feature, batch)
+      else fs.saveDf(batch, name = Some(feature))
+    }
 
   /** Paced file-stream source: bounds every micro-batch to
     * `maxFilesPerTrigger` files, so a catch-up ingest over a deep backlog
@@ -89,42 +154,25 @@ object StreamingOps {
       .load(path)
   }
 
-  /** Continuous ingest: same exact batch write path as
-    * [[ingestAvailableNow]] but on a ProcessingTime trigger, for a live
-    * source that never drains. Pair with [[pacedFileSource]] to bound the
-    * per-trigger batch size.
+  /** The minhash store's per-batch step, shared by [[dedupIncremental]]
+    * and [[clusters]]: signatures are computed ONCE per batch for both the
+    * probe and the store append; the batch's near-dup pairs against every
+    * other committed batch go to `usePairs`, and only THEN do the batch's
+    * own signatures land as `storePath/batch=<token>` — so later batches
+    * pair against this one, and a cold-start store probes as empty.
     */
-  def ingestProcessingTime(fs: FeatureStore, stream: DataFrame, feature: String,
-      checkpoint: String, interval: String = "30 seconds",
-      compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.ProcessingTime(interval))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) fs.saveDf(batch, name = Some(feature))
-        // cadence check OUTSIDE the emptiness guard: an empty micro-batch
-        // landing exactly on the boundary must not silently skip a
-        // maintenance cycle (compaction of an already-compact store is a
-        // listing-only no-op, so firing on an empty trigger is free)
-        if (compactEvery > 0 && (bid + 1) % compactEvery == 0) {
-          fs.compactFeature(feature); ()
-        }
-      }
-      .start()
-
-  /** Stream a (keys... + time + value) frame into an entity-keyed feature
-    * through the batch keyed save path — the per-entity twin of
-    * [[ingestAvailableNow]].
-    */
-  def ingestKeyedAvailableNow(fs: FeatureStore, stream: DataFrame, feature: String,
-      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) fs.saveKeyed(feature, batch)
-      }
-      .start()
+  private def minhashStep(batch: DataFrame, token: String, idCol: String,
+      textCol: String, storePath: String, shingleK: Int, bands: Int,
+      rowsPerBand: Int, thresholdNum: Int, thresholdDen: Int, maxBucket: Int)(
+      usePairs: DataFrame => Unit): Unit = {
+    val fresh = CacheScope.persist(DedupOps
+      .sigAndHashes(batch, idCol, textCol, shingleK, bands * rowsPerBand))
+    val old = committedOthers(batch.sparkSession, storePath, token)
+      .getOrElse(fresh.limit(0))
+    usePairs(DedupOps.incrementalPairsFromSigs(fresh, old, bands, rowsPerBand,
+      thresholdNum, thresholdDen, maxBucket))
+    DedupOps.writeMinhashStreamBatch(fresh, storePath, token, bands * rowsPerBand)
+  }
 
   /** Continuous-crawl dedup: probe each micro-batch of new documents
     * against the persisted minhash store, write discovered pairs to
@@ -133,88 +181,30 @@ object StreamingOps {
     * ones as well as the base corpus. Any near-dup pair is discovered
     * exactly once (when its later member's batch is probed), so the
     * drained pair set equals the one-shot batch probe of the whole stream.
-    * AvailableNow + a paced source gives deterministic catch-up; swap the
-    * trigger for a live tail.
+    * AvailableNow + a paced source gives deterministic catch-up; a
+    * ProcessingTime trigger keeps a live tail running.
     *
     * Retry-safe: both writes are per-batch-dir OVERWRITES keyed by the
     * micro-batch id (a replayed batch rewrites its own dirs instead of
     * appending duplicates), and the probe EXCLUDES the batch's own store
     * dir (present when the crash landed between the store write and the
     * checkpoint commit) so a replay never pairs a doc with its own
-    * half-committed signatures. Signatures are computed ONCE per batch and
-    * shared by the probe and the store write; the batch's tracked operator
-    * caches are released before the next micro-batch (a live tail would
-    * otherwise accumulate one persisted frame per batch forever).
+    * half-committed signatures. Cold start (no
+    * [[graft.operators.DedupOps.buildMinhashStore]] base yet) probes an
+    * empty store: the first batch finds only its own internal pairs and
+    * seeds the store for later batches.
     */
-  def dedupIncrementalAvailableNow(stream: DataFrame, idCol: String,
+  def dedupIncremental(stream: DataFrame, idCol: String,
       textCol: String, storePath: String, pairsOut: String,
-      checkpoint: String, shingleK: Int = 3, bands: Int = 32,
+      checkpoint: String, trigger: Trigger, shingleK: Int = 3, bands: Int = 32,
       rowsPerBand: Int = 4, thresholdNum: Int = 1, thresholdDen: Int = 2,
       maxBucket: Int = 1000): StreamingQuery =
-    dedupIncremental(stream, idCol, textCol, storePath, pairsOut, checkpoint,
-      Trigger.AvailableNow(), shingleK, bands, rowsPerBand, thresholdNum,
-      thresholdDen, maxBucket)
-
-  /** [[dedupIncrementalAvailableNow]] as a LIVE TAIL: same per-micro-batch
-    * probe-then-append semantics under a ProcessingTime trigger — the query
-    * keeps running and dedups new crawl files as they land. The per-batch
-    * scoped cache release is what makes this safe to run indefinitely
-    * (each batch's persisted signature/candidate frames are dropped before
-    * the next batch; without the scope a live tail accumulates one pinned
-    * frame per batch forever).
-    */
-  def dedupIncrementalProcessingTime(stream: DataFrame, idCol: String,
-      textCol: String, storePath: String, pairsOut: String,
-      checkpoint: String, interval: String = "1 second", shingleK: Int = 3,
-      bands: Int = 32, rowsPerBand: Int = 4, thresholdNum: Int = 1,
-      thresholdDen: Int = 2, maxBucket: Int = 1000): StreamingQuery =
-    dedupIncremental(stream, idCol, textCol, storePath, pairsOut, checkpoint,
-      Trigger.ProcessingTime(interval), shingleK, bands, rowsPerBand,
-      thresholdNum, thresholdDen, maxBucket)
-
-  private def dedupIncremental(stream: DataFrame, idCol: String,
-      textCol: String, storePath: String, pairsOut: String,
-      checkpoint: String, trigger: Trigger, shingleK: Int, bands: Int,
-      rowsPerBand: Int, thresholdNum: Int, thresholdDen: Int,
-      maxBucket: Int): StreamingQuery =
-    stream.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          // scoped release: only the caches THIS batch creates are dropped
-          // at the end — a live-tail driver's own operator caches survive
-          val scope = graft.CacheScope.snapshot()
-          val fresh = graft.CacheScope.persist(graft.operators.DedupOps
-            .sigAndHashes(batch, idCol, textCol, shingleK, bands * rowsPerBand))
-          // cold start (no [[DedupOps.buildMinhashStore]] base yet): bootstrap
-          // from an empty store-shaped frame instead of failing on the read —
-          // the first batch then finds only its own internal pairs and seeds
-          // the store for later batches
-          // committed-read: probe only batches whose commit marker landed
-          // (minus a replayed batch's own dir) — visibleTokens doubles as
-          // the cold-start test, so a store root holding only _commits or
-          // only this batch's crashed dir bootstraps empty instead of
-          // wedging on schema inference
-          val others = graft.StoreCommit.visibleTokens(spark, storePath)
-            .filter(_ != s"b$bid")
-          val old =
-            if (others.nonEmpty)
-              graft.StoreCommit.read(spark, storePath)
-                .where(col("batch") =!= s"b$bid")
-            else fresh.limit(0)
-          graft.operators.DedupOps
-            .incrementalPairsFromSigs(fresh, old, bands, rowsPerBand,
-              thresholdNum, thresholdDen, maxBucket)
-            .write.mode("overwrite").parquet(s"$pairsOut/batch=b$bid")
-          graft.operators.DedupOps.writeMinhashStreamBatch(fresh, storePath,
-            s"b$bid", bands * rowsPerBand)
-          graft.CacheScope.releaseNewSince(scope)
-          ()
-        }
+    eachBatch(stream, checkpoint, trigger) { (batch, token) =>
+      minhashStep(batch, token, idCol, textCol, storePath, shingleK, bands,
+          rowsPerBand, thresholdNum, thresholdDen, maxBucket) { pairs =>
+        pairs.write.mode("overwrite").parquet(s"$pairsOut/batch=$token")
       }
-      .start()
+    }
 
   /** Streaming EMBEDDING near-dup maintenance: each micro-batch finds its
     * exact cosine pairs against the persisted vector store
@@ -225,54 +215,26 @@ object StreamingOps {
     * own store dir before any read, so its prior vectors never pair
     * against itself. Cold start seeds the store from batch one.
     */
-  def embNearDupAvailableNow(stream: DataFrame, idCol: String,
-      vecCol: String, storePath: String, pairsOut: String,
-      checkpoint: String, minCosine: Double): StreamingQuery =
-    embNearDupStream(stream, idCol, vecCol, storePath, pairsOut, checkpoint,
-      Trigger.AvailableNow(), minCosine)
-
-  /** [[embNearDupAvailableNow]] as a LIVE TAIL (ProcessingTime trigger). */
-  def embNearDupProcessingTime(stream: DataFrame, idCol: String,
-      vecCol: String, storePath: String, pairsOut: String,
-      checkpoint: String, interval: String = "1 second",
-      minCosine: Double = 0.8): StreamingQuery =
-    embNearDupStream(stream, idCol, vecCol, storePath, pairsOut, checkpoint,
-      Trigger.ProcessingTime(interval), minCosine)
-
-  private def embNearDupStream(stream: DataFrame, idCol: String,
+  def embNearDup(stream: DataFrame, idCol: String,
       vecCol: String, storePath: String, pairsOut: String,
       checkpoint: String, trigger: Trigger, minCosine: Double): StreamingQuery =
-    stream.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val scope = graft.CacheScope.snapshot()
-          // drop a replayed batch's own half-committed store dir BEFORE
-          // the probe reads the store
-          graft.StoreCommit.dropBatch(spark, storePath, s"b$bid")
-          // cold start is decided by OTHER COMMITTED batch dirs, not bare
-          // dir existence: a batch-0 crash-retry leaves storePath present
-          // but empty after its own dir is dropped, and reading it would
-          // throw schema inference and wedge the stream permanently
-          val hasOthers = graft.StoreCommit.visibleTokens(spark, storePath)
-            .exists(_ != s"b$bid")
-          val pairs =
-            if (hasOthers)
-              graft.operators.SimilarityOps.incrementalCosinePairs(
-                batch, idCol, vecCol, storePath, minCosine)
-            else
-              graft.operators.SimilarityOps.cosineNearDupPairs(
-                batch, idCol, vecCol, minCosine)
-          pairs.write.mode("overwrite").parquet(s"$pairsOut/batch=b$bid")
-          graft.operators.SimilarityOps.appendEmbStore(
-            batch, idCol, vecCol, storePath, s"b$bid")
-          graft.CacheScope.releaseNewSince(scope)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint, trigger) { (batch, token) =>
+      val spark = batch.sparkSession
+      // drop a replayed batch's own half-committed store dir BEFORE
+      // the probe reads the store
+      StoreCommit.dropBatch(spark, storePath, token)
+      // cold start is decided by OTHER COMMITTED batch dirs, not bare
+      // dir existence: a batch-0 crash-retry leaves storePath present
+      // but empty after its own dir is dropped, and reading it would
+      // throw schema inference and wedge the stream permanently
+      val pairs =
+        if (StoreCommit.visibleTokens(spark, storePath).exists(_ != token))
+          SimilarityOps.incrementalCosinePairs(batch, idCol, vecCol, storePath, minCosine)
+        else
+          SimilarityOps.cosineNearDupPairs(batch, idCol, vecCol, minCosine)
+      pairs.write.mode("overwrite").parquet(s"$pairsOut/batch=$token")
+      SimilarityOps.appendEmbStore(batch, idCol, vecCol, storePath, token)
+    }
 
   /** Streaming winnow-store maintenance — the MOSS/containment member of
     * the streaming dedup family: each micro-batch probes the persisted
@@ -289,50 +251,20 @@ object StreamingOps {
     * fingerprint crosses the cap mid-stream; at the default cap that needs
     * a 1000-doc boilerplate run, which the batch path would cut too).
     */
-  def winnowAvailableNow(stream: DataFrame, idCol: String, textCol: String,
+  def winnow(stream: DataFrame, idCol: String, textCol: String,
       storePath: String, pairsOut: String, checkpoint: String,
-      k: Int = 4, w: Int = 5, minShared: Int = 2,
+      trigger: Trigger, k: Int = 4, w: Int = 5, minShared: Int = 2,
       maxDocFreq: Int = 1000): StreamingQuery =
-    winnowStream(stream, idCol, textCol, storePath, pairsOut, checkpoint,
-      Trigger.AvailableNow(), k, w, minShared, maxDocFreq)
-
-  /** [[winnowAvailableNow]] as a LIVE TAIL (ProcessingTime trigger); the
-    * per-batch scoped cache release keeps an indefinite tail safe. */
-  def winnowProcessingTime(stream: DataFrame, idCol: String, textCol: String,
-      storePath: String, pairsOut: String, checkpoint: String,
-      interval: String = "1 second", k: Int = 4, w: Int = 5,
-      minShared: Int = 2, maxDocFreq: Int = 1000): StreamingQuery =
-    winnowStream(stream, idCol, textCol, storePath, pairsOut, checkpoint,
-      Trigger.ProcessingTime(interval), k, w, minShared, maxDocFreq)
-
-  private def winnowStream(stream: DataFrame, idCol: String, textCol: String,
-      storePath: String, pairsOut: String, checkpoint: String,
-      trigger: Trigger, k: Int, w: Int, minShared: Int,
-      maxDocFreq: Int): StreamingQuery =
-    stream.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val scope = graft.CacheScope.snapshot()
-          val mp = new org.apache.hadoop.fs.Path(s"$storePath/meta")
-          val pairs =
-            if (mp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(mp))
-              graft.operators.DedupOps.incrementalWinnowingPairs(
-                batch, idCol, textCol, storePath, k, w, minShared, maxDocFreq,
-                excludeBatch = Some(s"b$bid"))
-            else
-              graft.operators.DedupOps.winnowingPairs(
-                batch, idCol, textCol, k, w, minShared, maxDocFreq)
-          pairs.write.mode("overwrite").parquet(s"$pairsOut/batch=b$bid")
-          graft.operators.DedupOps.appendWinnowStore(
-            batch, idCol, textCol, storePath, k, w, s"b$bid")
-          graft.CacheScope.releaseNewSince(scope)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint, trigger) { (batch, token) =>
+      val pairs =
+        if (exists(batch.sparkSession, s"$storePath/meta"))
+          DedupOps.incrementalWinnowingPairs(batch, idCol, textCol, storePath,
+            k, w, minShared, maxDocFreq, excludeBatch = Some(token))
+        else
+          DedupOps.winnowingPairs(batch, idCol, textCol, k, w, minShared, maxDocFreq)
+      pairs.write.mode("overwrite").parquet(s"$pairsOut/batch=$token")
+      DedupOps.appendWinnowStore(batch, idCol, textCol, storePath, k, w, token)
+    }
 
   /** Streaming BOILERPLATE-census maintenance: each micro-batch is
     * stripped of lines the persisted census
@@ -344,46 +276,19 @@ object StreamingOps {
     * the census). Replayed batches overwrite their own census dir (the
     * additive sum never double-counts) and their output dir.
     */
-  def boilerplateAvailableNow(stream: DataFrame, idCol: String,
+  def boilerplate(stream: DataFrame, idCol: String,
       textCol: String, censusPath: String, cleanOut: String,
-      checkpoint: String, minCount: Long = 2,
+      checkpoint: String, trigger: Trigger, minCount: Long = 2,
       delim: String = "\n"): StreamingQuery =
-    boilerplateStream(stream, idCol, textCol, censusPath, cleanOut,
-      checkpoint, Trigger.AvailableNow(), minCount, delim)
-
-  /** [[boilerplateAvailableNow]] as a LIVE TAIL (ProcessingTime trigger);
-    * per-batch scoped cache release keeps an indefinite tail safe. */
-  def boilerplateProcessingTime(stream: DataFrame, idCol: String,
-      textCol: String, censusPath: String, cleanOut: String,
-      checkpoint: String, interval: String = "1 second", minCount: Long = 2,
-      delim: String = "\n"): StreamingQuery =
-    boilerplateStream(stream, idCol, textCol, censusPath, cleanOut,
-      checkpoint, Trigger.ProcessingTime(interval), minCount, delim)
-
-  private def boilerplateStream(stream: DataFrame, idCol: String,
-      textCol: String, censusPath: String, cleanOut: String,
-      checkpoint: String, trigger: Trigger, minCount: Long,
-      delim: String): StreamingQuery =
-    stream.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val scope = graft.CacheScope.snapshot()
-          // excludeBatch drops the batch's OWN census dir from the strip:
-          // a crash between the append below and the checkpoint commit
-          // would otherwise let a replayed batch's own counts strip it
-          graft.operators.DedupOps.removeFrequentLinesStoredExcluding(
-              batch, idCol, textCol, censusPath, minCount, delim,
-              excludeBatch = Some(s"b$bid"))
-            .write.mode("overwrite").parquet(s"$cleanOut/batch=b$bid")
-          graft.operators.DedupOps.appendLineStore(
-            batch, idCol, textCol, censusPath, delim, s"b$bid")
-          graft.CacheScope.releaseNewSince(scope)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint, trigger) { (batch, token) =>
+      // excludeBatch drops the batch's OWN census dir from the strip:
+      // a crash between the append below and the checkpoint commit
+      // would otherwise let a replayed batch's own counts strip it
+      DedupOps.removeFrequentLinesStoredExcluding(batch, idCol, textCol,
+          censusPath, minCount, delim, excludeBatch = Some(token))
+        .write.mode("overwrite").parquet(s"$cleanOut/batch=$token")
+      DedupOps.appendLineStore(batch, idCol, textCol, censusPath, delim, token)
+    }
 
   /** Streaming CLUSTER maintenance — the label-store capstone of the
     * incremental dedup family: every micro-batch probes the minhash store
@@ -397,158 +302,60 @@ object StreamingOps {
     * its own signature batch and label batch (exactly-once labels as long
     * as the replay is the most recent batch, the foreachBatch retry case).
     */
-  def clustersAvailableNow(stream: DataFrame, idCol: String, textCol: String,
+  def clusters(stream: DataFrame, idCol: String, textCol: String,
       storePath: String, labelPath: String, checkpoint: String,
-      shingleK: Int = 3, bands: Int = 32, rowsPerBand: Int = 4,
+      trigger: Trigger, shingleK: Int = 3, bands: Int = 32, rowsPerBand: Int = 4,
       thresholdNum: Int = 1, thresholdDen: Int = 2,
       maxBucket: Int = 1000): StreamingQuery =
-    clustersStream(stream, idCol, textCol, storePath, labelPath, checkpoint,
-      Trigger.AvailableNow(), shingleK, bands, rowsPerBand, thresholdNum,
-      thresholdDen, maxBucket)
-
-  /** [[clustersAvailableNow]] as a LIVE TAIL (ProcessingTime trigger):
-    * cluster labels stay current as new crawl files land. Per-batch scoped
-    * cache release keeps an indefinite tail safe, as in the other tails.
-    */
-  def clustersProcessingTime(stream: DataFrame, idCol: String, textCol: String,
-      storePath: String, labelPath: String, checkpoint: String,
-      interval: String = "1 second", shingleK: Int = 3, bands: Int = 32,
-      rowsPerBand: Int = 4, thresholdNum: Int = 1, thresholdDen: Int = 2,
-      maxBucket: Int = 1000): StreamingQuery =
-    clustersStream(stream, idCol, textCol, storePath, labelPath, checkpoint,
-      Trigger.ProcessingTime(interval), shingleK, bands, rowsPerBand,
-      thresholdNum, thresholdDen, maxBucket)
-
-  private def clustersStream(stream: DataFrame, idCol: String, textCol: String,
-      storePath: String, labelPath: String, checkpoint: String,
-      trigger: Trigger, shingleK: Int, bands: Int, rowsPerBand: Int,
-      thresholdNum: Int, thresholdDen: Int, maxBucket: Int): StreamingQuery =
-    stream.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val scope = graft.CacheScope.snapshot()
-          val fresh = graft.CacheScope.persist(graft.operators.DedupOps
-            .sigAndHashes(batch, idCol, textCol, shingleK, bands * rowsPerBand))
-          // committed-read: probe only batches whose commit marker landed
-          // (minus a replayed batch's own dir) — visibleTokens doubles as
-          // the cold-start test, so a store root holding only _commits or
-          // only this batch's crashed dir bootstraps empty instead of
-          // wedging on schema inference
-          val others = graft.StoreCommit.visibleTokens(spark, storePath)
-            .filter(_ != s"b$bid")
-          val old =
-            if (others.nonEmpty)
-              graft.StoreCommit.read(spark, storePath)
-                .where(col("batch") =!= s"b$bid")
-            else fresh.limit(0)
-          val pairs = graft.operators.DedupOps
-            .incrementalPairsFromSigs(fresh, old, bands, rowsPerBand,
-              thresholdNum, thresholdDen, maxBucket)
-            .select(col("id_a"), col("id_b"))
-          // label-store cold start: an empty base batch types the store
-          // from the batch's id column; later updates shadow it
-          val lp = new org.apache.hadoop.fs.Path(labelPath)
-          if (!lp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lp))
-            graft.operators.DedupOps.writeStoreBatch(
-              batch.select(col(idCol).as("id"), col(idCol).as("component"),
-                lit(0L).as("seq")).limit(0), labelPath, "base")
-          // an empty pair batch has nothing to fold (and CC over an empty
-          // edge set is degenerate); the skip replays identically
-          if (!pairs.isEmpty)
-            graft.operators.DedupOps.updateClusterStore(
-              pairs, "id_a", "id_b", labelPath, s"b$bid")
-          graft.operators.DedupOps.writeMinhashStreamBatch(fresh, storePath,
-            s"b$bid", bands * rowsPerBand)
-          graft.CacheScope.releaseNewSince(scope)
-          ()
-        }
+    eachBatch(stream, checkpoint, trigger) { (batch, token) =>
+      minhashStep(batch, token, idCol, textCol, storePath, shingleK, bands,
+          rowsPerBand, thresholdNum, thresholdDen, maxBucket) { found =>
+        val pairs = found.select(col("id_a"), col("id_b"))
+        // label-store cold start: an empty base batch types the store
+        // from the batch's id column; later updates shadow it
+        if (!exists(batch.sparkSession, labelPath))
+          DedupOps.writeStoreBatch(
+            batch.select(col(idCol).as("id"), col(idCol).as("component"),
+              lit(0L).as("seq")).limit(0), labelPath, "base")
+        // an empty pair batch has nothing to fold (and CC over an empty
+        // edge set is degenerate); the skip replays identically
+        if (!pairs.isEmpty)
+          DedupOps.updateClusterStore(pairs, "id_a", "id_b", labelPath, token)
       }
-      .start()
+    }
 
   /** Streaming search-index maintenance — the postings-store twin of
-    * [[dedupIncrementalAvailableNow]]: every micro-batch of new documents
+    * [[dedupIncremental]]: every micro-batch of new documents
     * appends to the persisted postings index
     * ([[graft.operators.SearchOps.appendPostingsIndex]]) under the
     * micro-batch id as its batch token, so a replayed batch OVERWRITES its
     * own dirs (index ingest stays effectively exactly-once) and a probe
     * between any two batches sees consistent additive df/N sidecars.
     * Batch ids must be new to the index — crawls assign fresh doc ids;
-    * dedup upstream (e.g. [[curateAvailableNow]]) before indexing.
+    * dedup upstream (e.g. [[curate]]) before indexing. A live tail should
+    * compact periodically ([[graft.operators.SearchOps.compactPostingsIndex]])
+    * as the batch-dir count grows.
     */
-  def indexAvailableNow(stream: DataFrame, idCol: String, textCol: String,
-      path: String, checkpoint: String): StreamingQuery =
-    indexStream(stream, idCol, textCol, path, checkpoint,
-      Trigger.AvailableNow())
-
-  /** [[indexAvailableNow]] as a LIVE TAIL (ProcessingTime trigger): the
-    * index keeps absorbing new crawl files as they land; compact
-    * periodically ([[graft.operators.SearchOps.compactPostingsIndex]])
-    * when the batch-dir count grows. Per-batch scoped cache release keeps
-    * an indefinite tail safe, as in the dedup/curation tails.
-    */
-  def indexProcessingTime(stream: DataFrame, idCol: String, textCol: String,
-      path: String, checkpoint: String,
-      interval: String = "1 second"): StreamingQuery =
-    indexStream(stream, idCol, textCol, path, checkpoint,
-      Trigger.ProcessingTime(interval))
-
-  private def indexStream(stream: DataFrame, idCol: String, textCol: String,
+  def index(stream: DataFrame, idCol: String, textCol: String,
       path: String, checkpoint: String, trigger: Trigger): StreamingQuery =
-    stream.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val scope = graft.CacheScope.snapshot()
-          graft.operators.SearchOps.appendPostingsIndex(
-            batch, idCol, textCol, path, s"b$bid")
-          graft.CacheScope.releaseNewSince(scope)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint, trigger) { (batch, token) =>
+      SearchOps.appendPostingsIndex(batch, idCol, textCol, path, token)
+    }
 
   /** Streaming ANN-index maintenance: each micro-batch of new vectors is
     * encoded under the PERSISTED PQ index's frozen codebooks and landed as
     * a replay-idempotent `batch=b<id>` code dir
     * ([[graft.operators.SimilarityOps.appendPqIndex]]) — the vector-store
-    * analogue of [[indexAvailableNow]]. Codebooks never retrain in-stream
+    * analogue of [[index]]. Codebooks never retrain in-stream
     * (that is a rebuild's job); probes see every drained batch. The id
     * clash check stays ON: it excludes the batch's own token, so replays
     * are idempotent while genuine duplicate ids still fail loudly.
     */
-  def annIndexAvailableNow(stream: DataFrame, idCol: String, vecCol: String,
-      path: String, checkpoint: String): StreamingQuery =
-    annIndexStream(stream, idCol, vecCol, path, checkpoint,
-      Trigger.AvailableNow())
-
-  /** [[annIndexAvailableNow]] as a LIVE TAIL (ProcessingTime trigger) for
-    * a continuously-growing embedding corpus.
-    */
-  def annIndexProcessingTime(stream: DataFrame, idCol: String, vecCol: String,
-      path: String, checkpoint: String,
-      interval: String = "1 second"): StreamingQuery =
-    annIndexStream(stream, idCol, vecCol, path, checkpoint,
-      Trigger.ProcessingTime(interval))
-
-  private def annIndexStream(stream: DataFrame, idCol: String, vecCol: String,
+  def annIndex(stream: DataFrame, idCol: String, vecCol: String,
       path: String, checkpoint: String, trigger: Trigger): StreamingQuery =
-    stream.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val scope = graft.CacheScope.snapshot()
-          graft.operators.SimilarityOps.appendPqIndex(
-            batch, idCol, vecCol, path, s"b$bid")
-          graft.CacheScope.releaseNewSince(scope)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint, trigger) { (batch, token) =>
+      SimilarityOps.appendPqIndex(batch, idCol, vecCol, path, token)
+    }
 
   /** Streaming curation — the crawl-to-kept-corpus pipeline as a stream:
     * each micro-batch of documents is (1) exact-deduped against the
@@ -562,10 +369,10 @@ object StreamingOps {
     * doc whose earlier copy was dropped on quality/contamination fails
     * the same cuts itself.
     *
-    * Retry-safe like [[dedupIncrementalAvailableNow]]: both writes are
+    * Retry-safe like [[dedupIncremental]]: both writes are
     * per-batch-dir overwrites keyed by the micro-batch id, the probe
-    * excludes the batch's own store dir, fingerprints are computed once
-    * per batch, and the batch's tracked caches are scope-released.
+    * excludes the batch's own store dir, and fingerprints are computed
+    * once per batch.
     *
     * Scale: the store probe prunes store rows map-side by the batch's
     * broadcast fingerprint set (probe cost ∝ batch + matches, not
@@ -574,62 +381,30 @@ object StreamingOps {
     * frame; [[graft.operators.CurationOps.ngramOverlap]]'s char-bound
     * guard inside curateKeep decides its join side as usual.
     */
-  def curateAvailableNow(stream: DataFrame, bench: DataFrame, idCol: String,
+  def curate(stream: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, langCol: String, storePath: String, keptOut: String,
-      checkpoint: String, k: Int = 4, minTokens: Long = 20,
+      checkpoint: String, trigger: Trigger, k: Int = 4, minTokens: Long = 20,
       maxTopTokenFrac: Double = 0.12): StreamingQuery =
-    curateStream(stream, bench, idCol, textCol, langCol, storePath, keptOut,
-      checkpoint, Trigger.AvailableNow(), k, minTokens, maxTopTokenFrac)
-
-  /** [[curateAvailableNow]] as a live tail (ProcessingTime trigger) — the
-    * per-batch scoped cache release makes it safe to run indefinitely.
-    */
-  def curateProcessingTime(stream: DataFrame, bench: DataFrame, idCol: String,
-      textCol: String, langCol: String, storePath: String, keptOut: String,
-      checkpoint: String, interval: String = "1 second", k: Int = 4,
-      minTokens: Long = 20, maxTopTokenFrac: Double = 0.12): StreamingQuery =
-    curateStream(stream, bench, idCol, textCol, langCol, storePath, keptOut,
-      checkpoint, Trigger.ProcessingTime(interval), k, minTokens,
-      maxTopTokenFrac)
-
-  private def curateStream(stream: DataFrame, bench: DataFrame, idCol: String,
-      textCol: String, langCol: String, storePath: String, keptOut: String,
-      checkpoint: String, trigger: Trigger, k: Int, minTokens: Long,
-      maxTopTokenFrac: Double): StreamingQuery =
-    stream.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val scope = graft.CacheScope.snapshot()
-          val withFp = graft.CacheScope.persist(batch.withColumn("__fp",
-            graft.operators.TextOps.fingerprint(col(textCol))))
-          val others = graft.StoreCommit.visibleTokens(spark, storePath)
-            .filter(_ != s"b$bid")
-          val survivors =
-            if (others.nonEmpty) {
-              val old = graft.StoreCommit.read(spark, storePath)
-                .where(col("batch") =!= s"b$bid")
-              val hits = old
-                .join(broadcast(withFp.select(col("__fp").as("fp")).distinct()),
-                  Seq("fp"), "left_semi")
-                .select(col("fp").as("__fp")).distinct()
-              withFp.join(broadcast(hits), Seq("__fp"), "left_anti")
-            } else withFp
-          val kept = graft.CacheScope.persist(
-            graft.operators.CurationOps.curateKeep(survivors.drop("__fp"),
-              bench, idCol, textCol, langCol, k, minTokens, maxTopTokenFrac))
-          kept.write.mode("overwrite").parquet(s"$keptOut/batch=b$bid")
-          graft.operators.DedupOps.writeStoreBatch(
-            withFp.join(kept.select(col(idCol)), Seq(idCol), "left_semi")
-              .select(col(idCol).as("id"), col("__fp").as("fp")),
-            storePath, s"b$bid")
-          graft.CacheScope.releaseNewSince(scope)
-          ()
+    eachBatch(stream, checkpoint, trigger) { (batch, token) =>
+      val withFp = CacheScope.persist(batch.withColumn("__fp",
+        graft.operators.TextOps.fingerprint(col(textCol))))
+      val survivors = committedOthers(batch.sparkSession, storePath, token)
+        .fold(withFp) { old =>
+          val hits = old
+            .join(broadcast(withFp.select(col("__fp").as("fp")).distinct()),
+              Seq("fp"), "left_semi")
+            .select(col("fp").as("__fp")).distinct()
+          withFp.join(broadcast(hits), Seq("__fp"), "left_anti")
         }
-      }
-      .start()
+      val kept = CacheScope.persist(CurationOps.curateKeep(survivors.drop("__fp"),
+        bench, idCol, textCol, langCol, k, minTokens, maxTopTokenFrac))
+      kept.write.mode("overwrite").parquet(s"$keptOut/batch=$token")
+      DedupOps.writeStoreBatch(
+        withFp.join(kept.select(col(idCol)), Seq(idCol), "left_semi")
+          .select(col(idCol).as("id"), col("__fp").as("fp")),
+        storePath, token)
+    }
+
 
   /** Watermarked tumbling-window counts/sums per key. In append mode only
     * watermark-closed windows emit; `complete` emits everything (used by the
@@ -735,6 +510,7 @@ object StreamingOps {
       }
   }
 
+
   /** Streaming z-layout maintenance: each micro-batch lands as its own
     * batch-locally-clustered, manifested batch of the
     * [[graft.operators.LayoutOps]] table (token `b<id>`). The manifest
@@ -748,42 +524,15 @@ object StreamingOps {
     * ([[graft.operators.LayoutOps.compactZOrdered]]) — pruning is exact
     * regardless, append-heavy tables just skip fewer files.
     */
-  def zLayoutAvailableNow(stream: DataFrame, zCols: Seq[String],
-      tablePath: String, checkpoint: String, nFiles: Int = 16,
+  def zLayout(stream: DataFrame, zCols: Seq[String],
+      tablePath: String, checkpoint: String, trigger: Trigger, nFiles: Int = 16,
       bits: Int = 21): StreamingQuery =
-    zLayoutStream(stream, zCols, tablePath, checkpoint,
-      Trigger.AvailableNow(), nFiles, bits)
-
-  /** [[zLayoutAvailableNow]] as a LIVE TAIL (ProcessingTime trigger);
-    * per-batch scoped cache release keeps an indefinite tail safe. */
-  def zLayoutProcessingTime(stream: DataFrame, zCols: Seq[String],
-      tablePath: String, checkpoint: String, interval: String = "1 second",
-      nFiles: Int = 16, bits: Int = 21): StreamingQuery =
-    zLayoutStream(stream, zCols, tablePath, checkpoint,
-      Trigger.ProcessingTime(interval), nFiles, bits)
-
-  private def zLayoutStream(stream: DataFrame, zCols: Seq[String],
-      tablePath: String, checkpoint: String, trigger: Trigger,
-      nFiles: Int, bits: Int): StreamingQuery =
-    stream.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val scope = graft.CacheScope.snapshot()
-          val mp = new org.apache.hadoop.fs.Path(s"$tablePath/_layout_meta")
-          if (mp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(mp))
-            graft.operators.LayoutOps.appendZOrdered(
-              batch, zCols, tablePath, s"b$bid", nFiles)
-          else
-            graft.operators.LayoutOps.writeZOrdered(
-              batch, zCols, tablePath, nFiles, bits, batchToken = s"b$bid")
-          graft.CacheScope.releaseNewSince(scope)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint, trigger) { (batch, token) =>
+      if (exists(batch.sparkSession, s"$tablePath/_layout_meta"))
+        LayoutOps.appendZOrdered(batch, zCols, tablePath, token, nFiles)
+      else
+        LayoutOps.writeZOrdered(batch, zCols, tablePath, nFiles, bits, batchToken = token)
+    }
 
   /** Streaming SCD2 maintenance: each micro-batch of observations folds
     * into the persisted dimension-history store
@@ -796,40 +545,15 @@ object StreamingOps {
     * two micro-batches the resolved view IS the one-shot change capture
     * of everything seen so far.
     */
-  def scdAvailableNow(stream: DataFrame, entityCol: String, timeCol: String,
-      attrCols: Seq[String], tieCols: Seq[String], storePath: String,
-      checkpoint: String): StreamingQuery =
-    scdStream(stream, entityCol, timeCol, attrCols, tieCols, storePath,
-      checkpoint, Trigger.AvailableNow())
-
-  /** [[scdAvailableNow]] as a LIVE TAIL (ProcessingTime trigger). */
-  def scdProcessingTime(stream: DataFrame, entityCol: String, timeCol: String,
-      attrCols: Seq[String], tieCols: Seq[String], storePath: String,
-      checkpoint: String, interval: String = "1 second"): StreamingQuery =
-    scdStream(stream, entityCol, timeCol, attrCols, tieCols, storePath,
-      checkpoint, Trigger.ProcessingTime(interval))
-
-  private def scdStream(stream: DataFrame, entityCol: String, timeCol: String,
+  def scd(stream: DataFrame, entityCol: String, timeCol: String,
       attrCols: Seq[String], tieCols: Seq[String], storePath: String,
       checkpoint: String, trigger: Trigger): StreamingQuery =
-    stream.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val scope = graft.CacheScope.snapshot()
-          val mp = new org.apache.hadoop.fs.Path(s"$storePath/meta")
-          if (mp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(mp))
-            graft.ts.Scd.updateScdStore(batch, storePath, s"b$bid")
-          else
-            graft.ts.Scd.buildScdStore(batch, entityCol, timeCol, attrCols,
-              tieCols, storePath)
-          graft.CacheScope.releaseNewSince(scope)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint, trigger) { (batch, token) =>
+      if (exists(batch.sparkSession, s"$storePath/meta"))
+        graft.ts.Scd.updateScdStore(batch, storePath, token)
+      else
+        graft.ts.Scd.buildScdStore(batch, entityCol, timeCol, attrCols, tieCols, storePath)
+    }
 
   /** Streaming drift-histogram maintenance: each micro-batch of
     * CURRENT-window observations bins under the REFERENCE store's frozen
@@ -841,45 +565,26 @@ object StreamingOps {
     * ref + current into the same integer-ppm report as
     * [[graft.api.FeatureStore.profileDrift]].
     */
-  def histAvailableNow(stream: DataFrame, valueCol: String, refPath: String,
-      curPath: String, checkpoint: String): StreamingQuery =
-    histStream(stream, valueCol, refPath, curPath, checkpoint,
-      Trigger.AvailableNow())
-
-  /** [[histAvailableNow]] as a LIVE TAIL (ProcessingTime trigger). */
-  def histProcessingTime(stream: DataFrame, valueCol: String, refPath: String,
-      curPath: String, checkpoint: String,
-      interval: String = "1 second"): StreamingQuery =
-    histStream(stream, valueCol, refPath, curPath, checkpoint,
-      Trigger.ProcessingTime(interval))
-
-  private def histStream(stream: DataFrame, valueCol: String, refPath: String,
+  def hist(stream: DataFrame, valueCol: String, refPath: String,
       curPath: String, checkpoint: String, trigger: Trigger): StreamingQuery = {
     val meta = stream.sparkSession.read.parquet(s"$refPath/meta").head()
     val (lo, hi, bins) = (meta.getDouble(0), meta.getDouble(1), meta.getInt(2))
     val width = (hi - lo) / bins
-    stream.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val bin = least(greatest(
-            floor((col(valueCol) - lit(lo)) / lit(width)).cast("bigint"),
-            lit(0L)), lit((bins - 1).toLong))
-          // null/NaN dropped, never silently binned into bin 0 (matches
-          // the batch-side FeatureStore binning sites); store MUTATOR ⇒
-          // StoreLock like the rest of the persisted-store family
-          graft.StoreLock.withLock(batch.sparkSession, curPath) {
-            batch.where(col(valueCol).isNotNull && !isnan(col(valueCol)))
-              .select(bin.as("bin"))
-              .groupBy(col("bin")).agg(count(lit(1)).as("n"))
-              .coalesce(1)
-              .write.mode("overwrite").parquet(s"$curPath/hist/batch=b$bid")
-          }
-          ()
-        }
+    eachBatch(stream, checkpoint, trigger) { (batch, token) =>
+      val bin = least(greatest(
+        floor((col(valueCol) - lit(lo)) / lit(width)).cast("bigint"),
+        lit(0L)), lit((bins - 1).toLong))
+      // null/NaN dropped, never silently binned into bin 0 (matches
+      // the batch-side FeatureStore binning sites); store MUTATOR ⇒
+      // StoreLock like the rest of the persisted-store family
+      graft.StoreLock.withLock(batch.sparkSession, curPath) {
+        batch.where(col(valueCol).isNotNull && !isnan(col(valueCol)))
+          .select(bin.as("bin"))
+          .groupBy(col("bin")).agg(count(lit(1)).as("n"))
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$curPath/hist/batch=$token")
       }
-      .start()
+    }
   }
 
   /** The drift report from a frozen reference store + a stream-maintained

@@ -275,6 +275,9 @@ class FeatureStoreSpec extends SparkTestBase {
     import spark.implicits._
     fs.createKeyedFeature("cl/k", Seq("uid"))
     fs.saveKeyed("cl/k", Seq((1L, ts("2021-01-01"), 1.0)).toDF("uid", "time", "value"))
+    // cloning a keyed feature copies its keyed data, not just the entry
+    fs.cloneFeature("cl/k", "cl/k2")
+    assert(fs.loadKeyed("cl/k2").count() == 1)
     fs.deleteFeature("cl/k", deleteData = false)
     assert(fs.cleanNamespace("cl") == Seq("k"))
     assert(!new java.io.File(fs.storage.keyedPath("cl", "k")).exists)

@@ -3,6 +3,7 @@ package graft
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import java.sql.Timestamp
 
@@ -80,8 +81,8 @@ class StreamingSpec extends SparkTestBase {
     val mem = MemoryStream[(Long, Timestamp, Double)]
     mem.addData((1L, ts("2021-01-01"), 1.0), (2L, ts("2021-01-01"), 2.0))
     mem.addData((1L, ts("2021-01-02"), 3.0))
-    val q = StreamingOps.ingestKeyedAvailableNow(fs,
-      mem.toDF().toDF("uid", "time", "value"), "ks/v", tmpDir("kcp"))
+    val q = StreamingOps.ingest(fs,
+      mem.toDF().toDF("uid", "time", "value"), "ks/v", tmpDir("kcp"), Trigger.AvailableNow())
     q.awaitTermination()
     val got = fs.loadKeyed("ks/v").collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getDouble(2))).toSet
@@ -116,8 +117,8 @@ class StreamingSpec extends SparkTestBase {
     val schema = spark.read.parquet(src).schema
     val stream = graft.streaming.StreamingOps.pacedFileSource(
       spark, src, schema, maxFilesPerTrigger = 1)
-    val q = graft.streaming.StreamingOps.ingestAvailableNow(
-      fs, stream, "p/v", s"$root/ckpt")
+    val q = graft.streaming.StreamingOps.ingest(
+      fs, stream, "p/v", s"$root/ckpt", Trigger.AvailableNow())
     q.awaitTermination(120000)
     // pacing: the 3-file backlog drained across >= 3 micro-batches, and the
     // stored result equals what one unpaced batch write would produce
@@ -140,8 +141,8 @@ class StreamingSpec extends SparkTestBase {
     val schema = spark.read.parquet(src).schema
     val stream = graft.streaming.StreamingOps.pacedFileSource(
       spark, src, schema, maxFilesPerTrigger = 1)
-    val q = graft.streaming.StreamingOps.ingestProcessingTime(
-      fs, stream, "pt/v", s"$root/ckpt", interval = "1 second")
+    val q = graft.streaming.StreamingOps.ingest(
+      fs, stream, "pt/v", s"$root/ckpt", Trigger.ProcessingTime("1 second"))
     q.processAllAvailable() // drain the backlog deterministically
     // a live tail: new file arrives while the query keeps running
     seriesDf(Seq(("2021-02-03", 3.0))).repartition(1)
@@ -198,8 +199,8 @@ class StreamingSpec extends SparkTestBase {
     // the half-committed own dir of the crashed first attempt
     e.limit(5).write.parquet(s"$store/batch=b0")
     val stream = spark.readStream.schema(e.schema).parquet(src)
-    graft.streaming.StreamingOps.embNearDupAvailableNow(
-      stream, "vec_id", "embedding", store, out, cp, minCosine = 0.4)
+    graft.streaming.StreamingOps.embNearDup(
+      stream, "vec_id", "embedding", store, out, cp, Trigger.AvailableNow(), minCosine = 0.4)
       .awaitTermination()
     // drained pairs == the one-shot batch pairs (cold start, no self-pairs)
     val got = spark.read.parquet(out)
@@ -231,8 +232,9 @@ class StreamingSpec extends SparkTestBase {
     val stream = graft.streaming.StreamingOps.pacedFileSource(
       spark, src, schema, maxFilesPerTrigger = 1)
     val baseline = graft.CacheScope.trackedCount
-    val q = graft.streaming.StreamingOps.dedupIncrementalProcessingTime(
-      stream, "doc_id", "text", store, s"$root/pairs", s"$root/ckpt")
+    val q = graft.streaming.StreamingOps.dedupIncremental(
+      stream, "doc_id", "text", store, s"$root/pairs", s"$root/ckpt",
+      Trigger.ProcessingTime("1 second"))
     q.processAllAvailable()
     // live tail: a new crawl file lands while the query keeps running
     d.where(col("doc_id") >= 420).repartition(1)
@@ -256,6 +258,28 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamed == oneShot)
     graft.CacheScope.release()
+  }
+
+  test("a failing micro-batch releases the caches it created") {
+    val root = tmpDir("failbatch")
+    val d = Tables.documents(spark, dir)
+    // store signatures at the default 32 bands x 4 rows = 128 hashes
+    graft.operators.DedupOps.buildMinhashStore(
+      d.where(col("doc_id") < 250), "doc_id", "text", s"$root/store")
+    val src = s"$root/src"
+    d.where(col("doc_id") >= 250).repartition(1).write.parquet(src)
+    val stream = StreamingOps.pacedFileSource(spark, src,
+      spark.read.parquet(src).schema, maxFilesPerTrigger = 1)
+    val baseline = graft.CacheScope.trackedCount
+    // a 16 x 4 probe fails the store's signature-length check AFTER the
+    // batch persisted its own signatures
+    val q = StreamingOps.dedupIncremental(stream, "doc_id", "text",
+      s"$root/store", s"$root/pairs", s"$root/ckpt", Trigger.AvailableNow(),
+      bands = 16)
+    val e = intercept[StreamingQueryException](q.awaitTermination())
+    assert(e.getMessage.contains("signature length"), e.getMessage)
+    assert(graft.CacheScope.trackedCount == baseline,
+      "a failed micro-batch must not leave its caches tracked")
   }
 
   test("micro-batched incremental dedup == one-shot probe, incl. cross-batch pairs") {
@@ -322,8 +346,8 @@ class StreamingSpec extends SparkTestBase {
     val schema = spark.read.parquet(src).schema
     val stream = graft.streaming.StreamingOps.pacedFileSource(
       spark, src, schema, maxFilesPerTrigger = 1)
-    val q = graft.streaming.StreamingOps.indexAvailableNow(
-      stream, "doc_id", "text", s"$root/pix", s"$root/ckpt")
+    val q = graft.streaming.StreamingOps.index(
+      stream, "doc_id", "text", s"$root/pix", s"$root/ckpt", Trigger.AvailableNow())
     q.awaitTermination(120000)
     assert(q.recentProgress.count(_.numInputRows > 0) >= 3)
     val terms = Seq("dup", "spark", "query")
@@ -349,8 +373,8 @@ class StreamingSpec extends SparkTestBase {
     val stream = graft.streaming.StreamingOps.pacedFileSource(
       spark, src, schema, maxFilesPerTrigger = 1)
     val baseline = graft.CacheScope.trackedCount
-    val q = graft.streaming.StreamingOps.indexProcessingTime(
-      stream, "doc_id", "text", s"$root/pix", s"$root/ckpt")
+    val q = graft.streaming.StreamingOps.index(
+      stream, "doc_id", "text", s"$root/pix", s"$root/ckpt", Trigger.ProcessingTime("1 second"))
     q.processAllAvailable()
     // a new crawl file lands while the query keeps running
     d.where(col("doc_id") >= 400).repartition(1).write.mode("append").parquet(src)
@@ -379,8 +403,9 @@ class StreamingSpec extends SparkTestBase {
     val stream = graft.streaming.StreamingOps.pacedFileSource(
       spark, src, schema, maxFilesPerTrigger = 1)
     val baseline = graft.CacheScope.trackedCount
-    val q = graft.streaming.StreamingOps.winnowProcessingTime(
-      stream, "doc_id", "text", s"$root/store", s"$root/out", s"$root/ckpt")
+    val q = graft.streaming.StreamingOps.winnow(
+      stream, "doc_id", "text", s"$root/store", s"$root/out", s"$root/ckpt",
+      Trigger.ProcessingTime("1 second"))
     q.processAllAvailable()
     // a new crawl file lands while the query keeps running
     d.where(col("doc_id") >= 400).repartition(1).write.mode("append").parquet(src)
@@ -416,8 +441,8 @@ class StreamingSpec extends SparkTestBase {
     val schema = spark.read.parquet(src).schema
     val stream = graft.streaming.StreamingOps.pacedFileSource(
       spark, src, schema, maxFilesPerTrigger = 1)
-    val q = graft.streaming.StreamingOps.annIndexAvailableNow(
-      stream, "vec_id", "embedding", s"$root/pq", s"$root/ckpt")
+    val q = graft.streaming.StreamingOps.annIndex(
+      stream, "vec_id", "embedding", s"$root/pq", s"$root/ckpt", Trigger.AvailableNow())
     assert(q.awaitTermination(120000))
     assert(q.recentProgress.count(_.numInputRows > 0) >= 3)
     // frozen codebooks make encoding batch-split-invariant: the streamed
@@ -478,8 +503,9 @@ class StreamingSpec extends SparkTestBase {
     val stream = graft.streaming.StreamingOps.pacedFileSource(
       spark, src, schema, maxFilesPerTrigger = 1)
     val baseline = graft.CacheScope.trackedCount
-    val q = graft.streaming.StreamingOps.clustersProcessingTime(
-      stream, "doc_id", "text", s"$root/store", s"$root/labels", s"$root/ckpt")
+    val q = graft.streaming.StreamingOps.clusters(
+      stream, "doc_id", "text", s"$root/store", s"$root/labels", s"$root/ckpt",
+      Trigger.ProcessingTime("1 second"))
     q.processAllAvailable()
     // live tail: the rest of the corpus lands while the query runs
     d.where(col("doc_id") >= 250).repartition(1)
@@ -508,8 +534,8 @@ class StreamingSpec extends SparkTestBase {
     val stream = StreamingOps.pacedFileSource(spark, src, schema,
       maxFilesPerTrigger = 1)
     val baseline = graft.CacheScope.trackedCount
-    val q = StreamingOps.zLayoutProcessingTime(stream, Seq("x", "y"),
-      s"$root/table", s"$root/ckpt", nFiles = 4, bits = 8)
+    val q = StreamingOps.zLayout(stream, Seq("x", "y"),
+      s"$root/table", s"$root/ckpt", Trigger.ProcessingTime("1 second"), nFiles = 4, bits = 8)
     q.processAllAvailable()
     // live tail: more data lands while the query runs
     mk(3000L, 5000L).repartition(1).write.mode("append").parquet(src)
@@ -539,8 +565,8 @@ class StreamingSpec extends SparkTestBase {
     val stream = StreamingOps.pacedFileSource(spark, src, schema,
       maxFilesPerTrigger = 1)
     val baseline = graft.CacheScope.trackedCount
-    val q = StreamingOps.scdProcessingTime(stream, "ent", "t", Seq("attr"),
-      Seq("seq_id"), s"$root/store", s"$root/ckpt")
+    val q = StreamingOps.scd(stream, "ent", "t", Seq("attr"),
+      Seq("seq_id"), s"$root/store", s"$root/ckpt", Trigger.ProcessingTime("1 second"))
     q.processAllAvailable()
     // live tail: later observations land while the query runs (ids
     // strictly increasing -> per-entity times strictly increasing, the
@@ -592,10 +618,10 @@ class StreamingSpec extends SparkTestBase {
     rows.toDF("time", "value", "created_time").repartition(4)
       .write.mode("overwrite").parquet(srcDir)
     val schema = spark.read.parquet(srcDir).schema
-    val q = graft.streaming.StreamingOps.ingestAvailableNow(fs,
+    val q = graft.streaming.StreamingOps.ingest(fs,
       graft.streaming.StreamingOps.pacedFileSource(spark, srcDir, schema,
         maxFilesPerTrigger = 1),
-      "s/f", s"$root/cp", compactEvery = 2)
+      "s/f", s"$root/cp", Trigger.AvailableNow(), compactEvery = 2)
     q.awaitTermination()
     // every (time, created_time, value) version survives the mid-stream
     // compactions
