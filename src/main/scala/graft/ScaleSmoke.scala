@@ -142,7 +142,8 @@ object ScaleSmoke {
       val spine = spark.range(100000).select(
         timestamp_micros(lit(1609459200000000L) + col("id") * 630000000L).as("time"),
         col("id").as("k"))
-      Align.asOfJoin(spine, "time", Seq("f" -> st.load("scale", "f"))).count()
+      Align.pointInTime(spine, Align.alignOuter("time", Seq("f" -> st.load("scale", "f")),
+        doFfill = false), Nil, "time", Seq("f")).count()
     }
     time("as-of join of 10M-point spine (bucketed, shuffle-bounded)") {
       // spine AND data both large: the union still goes through ONE
@@ -151,7 +152,8 @@ object ScaleSmoke {
       val spine = spark.range(10000000).select(
         timestamp_micros(lit(1609459200000000L) + col("id") * 6300000L).as("time"),
         col("id").as("k"))
-      val out = Align.asOfJoin(spine, "time", Seq("f" -> st.load("scale", "f")))
+      val out = Align.pointInTime(spine, Align.alignOuter("time",
+        Seq("f" -> st.load("scale", "f")), doFfill = false), Nil, "time", Seq("f"))
       out.count()
       val plan = out.queryExecution.executedPlan.toString
       require(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),

@@ -1502,8 +1502,8 @@ object SparkEntry {
         expr("timestamp '2024-01-01 00:00:00' + make_interval(0,0,0,0,cast(id*7 as int),0,0)")
           .as("time"),
         col("id").as("spine_id"))
-      Fixtures.store(s, dir).loadFeaturesAsOfInterp(spine,
-        Seq("events/click", "events/purchase"))
+      Fixtures.store(s, dir).loadFeaturesAsOf(spine,
+        Seq("events/click", "events/purchase"), how = "interp")
     }),
 
     // the same spine under a 12h staleness bound: a carry older than 12h
@@ -1524,7 +1524,7 @@ object SparkEntry {
         .select(col("user_id"), col("ts").as("time"), col("event_id"))
       val clicks = ev.where(col("event_type") === "click")
         .select(col("user_id"), col("ts").as("time"), col("value").as("last_click"))
-      ts.Align.asOfJoinKeyed(spine, clicks, Seq("user_id"), "time", Seq("last_click"))
+      ts.Align.pointInTime(spine, clicks, Seq("user_id"), "time", Seq("last_click"))
     }),
 
     // entity-keyed feature: per-(user, time) latest-version dedup load

@@ -427,15 +427,27 @@ class FeatureStore(
 
   /** Point-in-time correct load: for every row of an arbitrary `spine`
     * frame (a `time` column + any payload columns, e.g. label events),
-    * attach each requested feature's last value as of that row's time —
-    * the training-set constructor. `timeTravel` composes: "as of spine
-    * time, knowing only what had arrived by event-time+Δ".
+    * attach each requested feature's value as of that row's time — the
+    * training-set constructor ([[graft.ts.Align.pointInTime]] over the
+    * outer-aligned features). `how = "ffill"` serves the last value
+    * at-or-before the instant, optionally bounded by a staleness
+    * `tolerance`; `how = "interp"` interpolates linearly between the
+    * feature's neighboring observations — for continuous signals where a
+    * carry would serve stale state as fact — exact at observation
+    * instants, null outside a feature's span, DOUBLE out. `timeTravel`
+    * composes: "as of spine time, knowing only what had arrived by
+    * event-time+Δ".
     */
   def loadFeaturesAsOf(spine: DataFrame, names: Seq[String],
       timeTravel: Option[String] = None,
       defaultNamespace: Option[String] = None,
-      tolerance: Option[String] = None): DataFrame = {
+      tolerance: Option[String] = None,
+      how: String = "ffill"): DataFrame = {
     require(names.nonEmpty, "no features requested")
+    require(how == "ffill" || how == "interp",
+      s"loadFeaturesAsOf: how must be 'ffill' or 'interp', got '$how'")
+    require(how == "ffill" || tolerance.isEmpty,
+      "loadFeaturesAsOf: a tolerance applies to how = 'ffill' only")
     val memo = scala.collection.mutable.Map[String, DataFrame]()
     val frames = names.map { q =>
       val (ns, n) = Catalog.splitName(q, defaultNamespace)
@@ -447,38 +459,22 @@ class FeatureStore(
     // reuses cuts quantiled over the previous spine — safe (cuts are
     // balance hints; a radically different spine just rebalances worse
     // until the memo is refreshed by a new store instance)
-    val cuts = Some(cutsMemoFor(
-      s"asof|${tolerance.getOrElse("")}|${frames.map(_._1).mkString(",")}|$timeTravel"))
-    tolerance match {
-      case Some(t) =>
-        val tol = TimeUtil.parseMicros(t)
-        require(tol >= 0, s"loadFeaturesAsOf: tolerance must be >= 0, got '$t'")
-        Align.asOfJoinTolerance(spine, TimeCol, frames, tol, memo = cuts)
-      case None => Align.asOfJoin(spine, TimeCol, frames, memo = cuts)
-    }
+    val set = frames.map(_._1).mkString(",")
+    val key =
+      if (how == "interp") s"asofinterp|$set|$timeTravel"
+      else s"asof|${tolerance.getOrElse("")}|$set|$timeTravel"
+    Align.pointInTime(spine, Align.alignOuter(TimeCol, frames, doFfill = false), Nil,
+      TimeCol, frames.map(_._1), if (how == "interp") Align.Interp else Align.Backward,
+      tolerance.map(parseTolerance("loadFeaturesAsOf", _)), Some(cutsMemoFor(key)))
   }
 
-  /** [[loadFeaturesAsOf]]'s INTERPOLATION twin: each spine row gets every
-    * requested feature linearly interpolated between that feature's
-    * neighboring observations around the spine instant
-    * ([[graft.ts.Align.asOfJoinInterp]]) — the training-set constructor
-    * for continuous signals where an as-of carry would serve stale state
-    * as fact. Exact at observation instants, null outside a feature's
-    * span; feature columns come back DOUBLE.
+  /** A staleness/lookahead bound in micros: matches farther than it
+    * serve null, never silently stale.
     */
-  def loadFeaturesAsOfInterp(spine: DataFrame, names: Seq[String],
-      timeTravel: Option[String] = None,
-      defaultNamespace: Option[String] = None): DataFrame = {
-    require(names.nonEmpty, "no features requested")
-    val memo = scala.collection.mutable.Map[String, DataFrame]()
-    val frames = names.map { q =>
-      val (ns, n) = Catalog.splitName(q, defaultNamespace)
-      val f = catalog.getFeature(ns, n)
-        .getOrElse(throw new MissingFeatureException(s"no feature: $ns/$n"))
-      s"$ns/$n" -> loadOne(f, None, None, None, timeTravel, Set.empty, memo)
-    }
-    val key = s"asofinterp|${frames.map(_._1).mkString(",")}|$timeTravel"
-    Align.asOfJoinInterp(spine, TimeCol, frames, memo = Some(cutsMemoFor(key)))
+  private def parseTolerance(caller: String, t: String): Long = {
+    val v = TimeUtil.parseMicros(t)
+    require(v >= 0, s"$caller: tolerance must be >= 0, got '$t'")
+    v
   }
 
   /** Recursive, cycle-checked feature load (T2 — reference
@@ -651,7 +647,7 @@ class FeatureStore(
       columns: Seq[String] = Nil,
       timeTravel: Option[String] = None): DataFrame = {
     val (keys, cols, data) = readKeyedGroup(qualified, columns, None, None, timeTravel)
-    Align.asOfJoinKeyed(spine, data, keys, TimeCol, cols)
+    Align.pointInTime(spine, data, keys, TimeCol, cols)
   }
 
   private def keyedGroupKeys(g: GroupDef, qualified: String): Seq[String] =
@@ -909,27 +905,24 @@ class FeatureStore(
   }
 
   /** Point-in-time per-entity join: each spine row (keys..., time, payload)
-    * gets the feature's last value for the SAME entity at-or-before its
-    * time — the per-entity training-set constructor
-    * ([[graft.ts.Align.asOfJoinKeyed]] over the stored feature).
+    * gets the feature's value for the SAME entity per `direction` —
+    * `backward` (last at-or-before, the default), `forward` (first
+    * at-or-after) or `nearest` (ties backward) — optionally bounded by
+    * `tolerance` ([[graft.ts.Align.pointInTime]] over the stored feature).
     */
   def loadKeyedAsOf(spine: DataFrame, qualified: String,
       as: Option[String] = None, timeTravel: Option[String] = None,
       tolerance: Option[String] = None,
       direction: String = "backward"): DataFrame = {
+    val mode = Map("backward" -> Align.Backward, "forward" -> Align.Forward,
+      "nearest" -> Align.Nearest).get(direction)
+    require(mode.isDefined, s"direction must be backward/forward/nearest, got '$direction'")
     val (ns, n) = Catalog.splitName(qualified)
     val keys = keyedKeys(ns, n)
-    val data = loadKeyed(qualified, timeTravel = timeTravel)
-      .withColumnRenamed(ValueCol, as.getOrElse(s"$ns/$n"))
-    val vc = Seq(as.getOrElse(s"$ns/$n"))
-    // tolerance = staleness (backward) / lookahead (forward) bound:
-    // matches farther than the bound serve null, never silently stale
-    val tol = tolerance.map { t =>
-      val v = TimeUtil.parseMicros(t)
-      require(v >= 0, s"loadKeyedAsOf: tolerance must be >= 0, got '$t'")
-      v
-    }
-    Align.asOfJoinKeyedDirection(spine, data, keys, TimeCol, vc, direction, tol)
+    val vc = as.getOrElse(s"$ns/$n")
+    val data = loadKeyed(qualified, timeTravel = timeTravel).withColumnRenamed(ValueCol, vc)
+    Align.pointInTime(spine, data, keys, TimeCol, Seq(vc), mode.get,
+      tolerance.map(parseTolerance("loadKeyedAsOf", _)))
   }
 
   /** Multi-feature ENTITY-KEYED point-in-time retrieval — THE online/
@@ -940,7 +933,7 @@ class FeatureStore(
     * keyed on the same entity columns (checked loudly — silently joining
     * on different entities is a wrong-training-set generator).
     *
-    * Plan shape: one [[graft.ts.Align.asOfJoinKeyedDirection]] stage per
+    * Plan shape: one [[graft.ts.Align.pointInTime]] stage per
     * feature folded over the spine — every stage partitions its window
     * by the SAME entity keys, so parallelism stays per-entity throughout
     * and no stage widens beyond spine + that feature's rows. N is
@@ -981,15 +974,11 @@ class FeatureStore(
     val (ns, n) = Catalog.splitName(qualified)
     val keys = keyedKeys(ns, n)
     val data = loadKeyed(qualified, timeTravel = timeTravel)
-    val f = TimeUtil.parseTimestamp(from); val t = TimeUtil.parseTimestamp(to)
-    val step = TimeUtil.parseMicros(freq)
-    require(step > 0, "resample frequency must be positive")
-    def us(x: Timestamp): Long = x.getTime / 1000 * 1000000L + x.getNanos / 1000
-    val grid = spark.range(0, (us(t) - us(f)) / step + 1)
-      .select(timestamp_micros(lit(us(f)) + col("id") * lit(step)).as(TimeCol))
+    val grid = Align.grid(spark, TimeUtil.parseTimestamp(from),
+      TimeUtil.parseTimestamp(to), TimeUtil.parseMicros(freq), TimeCol)
     val spine = data.select(keys.map(col): _*).distinct().crossJoin(grid)
-    if (how == "interp") Align.interpJoinKeyed(spine, data, keys, TimeCol, Seq(ValueCol))
-    else Align.asOfJoinKeyed(spine, data, keys, TimeCol, Seq(ValueCol))
+    Align.pointInTime(spine, data, keys, TimeCol, Seq(ValueCol),
+      if (how == "interp") Align.Interp else Align.Backward)
   }
 
   // ---- SQL surface ------------------------------------------------------------

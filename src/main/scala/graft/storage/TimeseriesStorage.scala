@@ -476,14 +476,10 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
         }
         bounds match {
           case None => deduped.select(TimeCol, ValueCol) // empty feature
-          case Some((a, b)) if how == "interp" =>
-            Align.resampleInterp(deduped.select(TimeCol, ValueCol), TimeCol, Seq(ValueCol),
-              a, b, TimeUtil.parseMicros(fr), memo = Some(memo))
-              .select(TimeCol, ValueCol)
           case Some((a, b)) =>
-            Align.resampleFfill(deduped.select(TimeCol, ValueCol), TimeCol, Seq(ValueCol),
-              a, b, TimeUtil.parseMicros(fr), memo = Some(memo))
-              .select(TimeCol, ValueCol)
+            Align.pointInTime(Align.grid(spark, a, b, TimeUtil.parseMicros(fr), TimeCol),
+              deduped, Nil, TimeCol, Seq(ValueCol),
+              if (how == "interp") Align.Interp else Align.Backward, memo = Some(memo))
         }
     }
   }

@@ -4,6 +4,7 @@ import graft.CacheScope
 import graft.StoreCommit
 import graft.api.FeatureStore
 import graft.operators.{CurationOps, DedupOps, LayoutOps, SearchOps, SimilarityOps}
+import graft.ts.TimeUtil
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -46,14 +47,6 @@ object StreamingOps {
   case class Session(user_id: Long, session_start: Timestamp, session_end: Timestamp,
       n_events: Long)
   case class SessionState(start: Long, end: Long, n: Long) // micros (encoder codegen needs public access)
-
-  // Timestamp <-> microseconds without precision loss (getTime alone is ms)
-  private def toMicros(t: Timestamp): Long = t.getTime / 1000 * 1000000L + t.getNanos / 1000
-  private def fromMicros(us: Long): Timestamp = {
-    val t = new Timestamp(us / 1000000 * 1000)
-    t.setNanos(((us % 1000000) * 1000).toInt)
-    t
-  }
 
   /** The one micro-batch driver under every ingest and store maintainer:
     * runs `body(batch, token)` for each NON-EMPTY micro-batch, where
@@ -444,16 +437,16 @@ object StreamingOps {
         (uid: Long, it: Iterator[SessionEvent], state: GroupState[SessionState]) =>
           // batch execution hands each key its full iterator once; sort by
           // event time and cut sessions at inactivity gaps
-          val sorted = it.toSeq.sortBy(e => toMicros(e.ts))
+          val sorted = it.toSeq.sortBy(e => TimeUtil.micros(e.ts))
           val out = scala.collection.mutable.ArrayBuffer[Session]()
           var cur: Option[SessionState] = state.getOption
           sorted.foreach { e =>
-            val t = toMicros(e.ts)
+            val t = TimeUtil.micros(e.ts)
             cur match {
               case Some(s) if t - s.end <= gapUs =>
                 cur = Some(SessionState(s.start, t, s.n + 1))
               case Some(s) =>
-                out += Session(uid, fromMicros(s.start), fromMicros(s.end), s.n)
+                out += Session(uid, TimeUtil.timestamp(s.start), TimeUtil.timestamp(s.end), s.n)
                 cur = Some(SessionState(t, t, 1))
               case None =>
                 cur = Some(SessionState(t, t, 1))
@@ -461,7 +454,8 @@ object StreamingOps {
           }
           // bounded input: flush the open session; on a real stream a
           // timeout would close it instead
-          cur.foreach(s => out += Session(uid, fromMicros(s.start), fromMicros(s.end), s.n))
+          cur.foreach(s => out += Session(uid, TimeUtil.timestamp(s.start),
+            TimeUtil.timestamp(s.end), s.n))
           state.remove()
           out.iterator
       }
@@ -484,18 +478,19 @@ object StreamingOps {
             // watermark passed end+gap: the open session is final
             val s = state.get
             state.remove()
-            Iterator.single(Session(uid, fromMicros(s.start), fromMicros(s.end), s.n))
+            Iterator.single(Session(uid, TimeUtil.timestamp(s.start),
+              TimeUtil.timestamp(s.end), s.n))
           } else {
-            val sorted = it.toSeq.sortBy(e => toMicros(e.ts))
+            val sorted = it.toSeq.sortBy(e => TimeUtil.micros(e.ts))
             val out = scala.collection.mutable.ArrayBuffer[Session]()
             var cur: Option[SessionState] = state.getOption
             sorted.foreach { e =>
-              val t = toMicros(e.ts)
+              val t = TimeUtil.micros(e.ts)
               cur match {
                 case Some(s) if t - s.end <= gapUs =>
                   cur = Some(SessionState(s.start, t, s.n + 1))
                 case Some(s) =>
-                  out += Session(uid, fromMicros(s.start), fromMicros(s.end), s.n)
+                  out += Session(uid, TimeUtil.timestamp(s.start), TimeUtil.timestamp(s.end), s.n)
                   cur = Some(SessionState(t, t, 1))
                 case None =>
                   cur = Some(SessionState(t, t, 1))

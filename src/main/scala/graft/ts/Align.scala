@@ -1,8 +1,10 @@
 package graft.ts
 
+import java.sql.Timestamp
+
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Time-axis operators: forward-fill, resample-to-grid, multi-series align.
   * These implement the reference's R1/R2 operators (reference
@@ -33,434 +35,129 @@ object Align {
       if (cuts.isEmpty) cuts = Some(cs.distinct.sorted)
   }
 
-  /** Forward-fill (LOCF) of `valueCols` ordered by `timeCol`.
-    *
-    * A naive `Window.orderBy(time)` with no partitioning pulls the whole
-    * dataset through ONE task — correct at 60k rows, dead at 100 TB. This is
-    * the classic two-pass parallel prefix ("scan") shape instead:
-    *
-    *  1. quantile-bucket rows by time into `buckets` partitions (one shuffle);
-    *  2. forward-fill *within* each bucket via a per-bucket window;
-    *  3. take each bucket's final row (its carry-out — after step 2 that row
-    *     holds the bucket's last non-null for every column), a tiny
-    *     `buckets`-row aggregate collected to the driver;
-    *  4. prefix-scan the carries on the driver and broadcast-join the
-    *     carry-in back, coalescing leading nulls.
-    *
-    * Cost: one shuffle + one broadcast of O(buckets) rows, any data size.
+  /** Forward-fill (LOCF) of `valueCols` ordered by `timeCol` — [[biFill]]
+    * with no backward columns: the two-pass parallel prefix ("scan")
+    * shape instead of a `Window.orderBy(time)` that pulls the whole
+    * dataset through ONE task (correct at 60k rows, dead at 100 TB).
+    * Rows tied on `timeCol` fill in no defined order among themselves.
     */
   def ffill(df: DataFrame, timeCol: String, valueCols: Seq[String],
       buckets: Int = 0, memo: Option[CutsMemo] = None): DataFrame =
-    ffillOrdered(df, timeCol, Seq(col(timeCol)), valueCols, buckets, memo)
+    biFill(df, timeCol, None, valueCols, Nil, buckets, memo)
 
-  /** Resample onto a regular grid with as-of (last-known-value) semantics —
-    * the reference's spine + merge + ffill + right-join (reference
-    * src/qafs/backend/pandas.py:163-172). Grid rows only are returned; the
-    * value at grid time g is the last data value with time <= g.
+  /** Which observation a [[pointInTime]] join serves at a spine instant. */
+  sealed trait Mode
+  /** The last observation at-or-before the instant (as-of / LOCF). */
+  case object Backward extends Mode
+  /** The first observation at-or-after it (label lookahead). */
+  case object Forward extends Mode
+  /** Whichever of the two is closer in time; a tie goes backward
+    * (deterministic; pandas merge_asof leaves it unspecified). */
+  case object Nearest extends Mode
+  /** v0 + (v1−v0)·(g−t0)/(t1−t0) between the two; exact at an
+    * observation, null outside the observed span, DOUBLE out. */
+  case object Interp extends Mode
+
+  /** A regular `[from, to]` grid of `freqMicros` steps as a one-column
+    * `timeCol` spine — what [[pointInTime]] resamples onto.
     */
-  def resampleFfill(df: DataFrame, timeCol: String, valueCols: Seq[String],
-      from: java.sql.Timestamp, to: java.sql.Timestamp, freqMicros: Long,
-      memo: Option[CutsMemo] = None): DataFrame = {
+  def grid(spark: SparkSession, from: Timestamp, to: Timestamp,
+      freqMicros: Long, timeCol: String): DataFrame = {
     require(freqMicros > 0, "resample frequency must be positive")
-    val spark = df.sparkSession
-    val spine = spark.range(0, (micros(to) - micros(from)) / freqMicros + 1)
-      .select(timestamp_micros(lit(micros(from)) + col("id") * lit(freqMicros)).as(timeCol))
-      .withColumn("__spine", lit(1))
-    val data = df.select((col(timeCol) +: valueCols.map(col)): _*)
-      .withColumn("__spine", lit(0))
-    // union with a tag; data rows sort before spine rows at equal time via the
-    // window's secondary key, so an observation AT the grid instant is seen.
-    val unioned = spine.select((col(timeCol) +: valueCols.map(c => lit(null).cast(
-        df.schema(c).dataType).as(c)) :+ col("__spine")): _*)
-      .unionByName(data)
-    val filled = ffillOrdered(unioned, timeCol, Seq(col(timeCol), col("__spine")), valueCols,
-      memo = memo)
-    filled.where(col("__spine") === 1).drop("__spine")
+    val lo = TimeUtil.micros(from)
+    spark.range(0, (TimeUtil.micros(to) - lo) / freqMicros + 1)
+      .select(timestamp_micros(lit(lo) + col("id") * lit(freqMicros)).as(timeCol))
   }
 
-  /** Resample onto a regular grid with LINEAR-INTERPOLATION semantics — the
-    * other classic grid fill next to [[resampleFfill]]'s as-of: the value
-    * at grid time g is v0 + (v1−v0)·(g−t0)/(t1−t0) between the last
-    * observation (t0,v0) ≤ g and the first (t1,v1) ≥ g; an observation AT
-    * the grid instant is returned exactly; grid points before the first or
-    * after the last observation are null (no extrapolation — trailing
-    * holds are what the ffill flavor is for). Interpolated columns come
-    * back as DOUBLE.
+  /** Point-in-time join: each `spine` row (keys…, time, payload…) gets,
+    * per value column of `data` (keys…, time, values…), the observation of
+    * the SAME keys that `mode` picks around the spine instant — the
+    * training-set constructor ("what was known at each label event") and,
+    * on a [[grid]] spine, the resampler (the reference's spine + merge +
+    * ffill + right-join, src/qafs/backend/pandas.py:163-172). Output is
+    * `keys…, time, payload…, values…`. An observation AT the spine instant
+    * is seen from both directions. `tolerance` (micros; pandas merge_asof's,
+    * and the serving-freshness contract) nulls a match farther than the
+    * bound in the chosen direction's distance — an entity that stopped
+    * emitting is not served its last value forever. N unkeyed frames are
+    * first outer-aligned with `alignOuter(…, doFfill = false)`.
     *
-    * Scale shape: ONE fused bidirectional quantile-bucketed prefix scan
-    * ([[biFill]]) — the forward direction carries each column's last
-    * (t, v) observation struct, the backward one the next — one cache,
-    * one carries aggregate, one bucket exchange with two window sorts,
-    * and the interpolation projects in place (no fwd⋈bwd grid join). No
-    * global-sort window at any size, same as every time-axis operator
-    * here. The (time, __spine) secondary order — ascending forward,
-    * descending backward — makes an observation AT the grid instant
-    * visible from both directions, so t0 == t1 == g there.
+    * One union of the tagged spine and data, one fill, one projection:
+    *  - empty `keys`: the quantile-bucketed prefix scan ([[biFill]], tie on
+    *    the spine flag) — one shuffle of |spine| + |data| rows whatever
+    *    the size, never a global-sort window (a 10M-row spine is gated in
+    *    ScaleSmoke with the plan asserted bucket-partitioned);
+    *  - keys: both windows partition by the keys, so parallelism comes per
+    *    entity; a single hot entity degrades to its row count — salt the
+    *    key upstream if one dominates.
+    * Only the directions `mode` reads are filled, each carrying every
+    * column's (t, v) observation struct; the projection picks per mode.
+    * `memo` holds the bucket cuts of the unkeyed scan, so it takes no keys.
     */
-  def resampleInterp(df: DataFrame, timeCol: String, valueCols: Seq[String],
-      from: java.sql.Timestamp, to: java.sql.Timestamp, freqMicros: Long,
-      memo: Option[CutsMemo] = None): DataFrame = {
-    require(freqMicros > 0, "resample frequency must be positive")
-    val spark = df.sparkSession
+  def pointInTime(spine: DataFrame, data: DataFrame, keys: Seq[String],
+      timeCol: String, valueCols: Seq[String], mode: Mode = Backward,
+      tolerance: Option[Long] = None, memo: Option[CutsMemo] = None): DataFrame = {
+    require(tolerance.forall(_ >= 0), "tolerance must be >= 0")
+    require(mode != Interp || tolerance.isEmpty, "Interp takes no tolerance")
+    require(keys.isEmpty || memo.isEmpty, "a cuts memo serves only the unkeyed scan")
+    val head = keys.map(col) :+ col(timeCol)
+    val payload = spine.columns.toSeq
+      .filterNot(c => c == timeCol || keys.contains(c)).map(col)
+    val unioned = spine.select(head ++ payload: _*).withColumn("__spine", lit(1))
+      .unionByName(data.select(head ++ valueCols.map(col): _*)
+        .withColumn("__spine", lit(0)), allowMissingColumns = true)
+    val fwd = if (mode == Forward) Nil else valueCols.map(c => s"__p_$c")
+    val bwd = if (mode == Backward) Nil else valueCols.map(c => s"__n_$c")
+    val seeded = observations(unioned, timeCol, valueCols, col("__spine") === 0,
+      fwd.nonEmpty, bwd.nonEmpty)
+    val filled =
+      if (keys.isEmpty) biFill(seeded, timeCol, Some("__spine"), fwd, bwd, memo = memo)
+      else windowFill(seeded, keys.map(col), timeCol, Some("__spine"), fwd, bwd)
     val us = unix_micros(col(timeCol))
-    val spine = spark.range(0, (micros(to) - micros(from)) / freqMicros + 1)
-      .select(timestamp_micros(lit(micros(from)) + col("id") * lit(freqMicros)).as(timeCol))
-      .withColumn("__spine", lit(1))
-    val data = df.select((col(timeCol) +: valueCols.map(col)): _*)
-      .withColumn("__spine", lit(0))
-    val unioned = spine.select((col(timeCol) +: valueCols.map(c => lit(null).cast(
-        df.schema(c).dataType).as(c)) :+ col("__spine")): _*)
-      .unionByName(data)
-    // per-column observation structs: only DATA rows carry (t, v)
-    val seeded = unioned.select(
-      col(timeCol) +: col("__spine") +: valueCols.flatMap { c =>
-        val obs = when(col("__spine") === 0 && col(c).isNotNull,
-          struct(us.as("t"), col(c).as("v")))
-        Seq(obs.as(s"__p_$c"), obs.as(s"__n_$c"))
+    val tol = lit(tolerance.getOrElse(Long.MaxValue))
+    val out = valueCols.map { c =>
+      val p = col(s"__p_$c"); val n = col(s"__n_$c")
+      val back = when(p.isNotNull && us - p.getField("t") <= tol, p.getField("v"))
+      val ahead = when(n.isNotNull && n.getField("t") - us <= tol, n.getField("v"))
+      (mode match {
+        case Backward => back
+        case Forward => ahead
+        case Nearest =>
+          when(p.isNull || (n.isNotNull &&
+            n.getField("t") - us < us - p.getField("t")), ahead).otherwise(back)
+        case Interp => interpolate(p, n, us)
+      }).as(c)
+    }
+    filled.where(col("__spine") === 1).select(head ++ payload ++ out: _*)
+  }
+
+  /** `df` with each value column replaced by its (t, v) observation struct
+    * — null where `observed` is false or the value is null — as a `__p_`
+    * copy for the forward carry and/or a `__n_` copy for the backward one.
+    * One select, never a per-column `withColumn` fold: a fold nests one
+    * Project per column, and at export width (1000+ features) the
+    * analyzer recurses that plan into StackOverflow.
+    */
+  private def observations(df: DataFrame, timeCol: String, valueCols: Seq[String],
+      observed: Column, fwd: Boolean, bwd: Boolean): DataFrame = {
+    val us = unix_micros(col(timeCol))
+    df.select(df.columns.toSeq.filterNot(valueCols.contains).map(col) ++
+      valueCols.flatMap { c =>
+        val obs = when(observed && col(c).isNotNull, struct(us.as("t"), col(c).as("v")))
+        (if (fwd) Seq(obs.as(s"__p_$c")) else Nil) ++ (if (bwd) Seq(obs.as(s"__n_$c")) else Nil)
       }: _*)
-    val both = biFill(seeded, timeCol, Some("__spine"),
-      valueCols.map(c => s"__p_$c"), valueCols.map(c => s"__n_$c"),
-      memo = memo)
-    val g = unix_micros(col(timeCol))
-    val outCols = valueCols.map { c =>
-      val p = col(s"__p_$c"); val n = col(s"__n_$c")
-      val t0 = p.getField("t"); val v0 = p.getField("v").cast("double")
-      val t1 = n.getField("t"); val v1 = n.getField("v").cast("double")
-      when(p.isNull || n.isNull, lit(null).cast("double"))
-        .when(t1 === t0, v0)
-        .otherwise(v0 + (v1 - v0) *
-          ((g - t0).cast("double") / (t1 - t0).cast("double"))).as(c)
-    }
-    both.where(col("__spine") === 1)
-      .select((col(timeCol) +: outCols): _*)
   }
 
-  /** Point-in-time (as-of) join of N value frames onto an ARBITRARY spine of
-    * timestamps: each spine row gets, per frame, the last value with
-    * data-time <= spine-time (inclusive). The training-set constructor —
-    * "what was known at each observation instant" — generalizing
-    * [[resampleFfill]]'s regular grid to any spine (e.g. label events).
-    *
-    * One plan: wide outer-align (no ffill) → union spine → single
-    * multi-column bucketed ffill ordered by (time, is_spine) → keep spine
-    * rows. Spine's extra columns ride along untouched.
-    *
-    * Scale: the union rides [[ffillOrdered]]'s quantile-bucketed two-pass
-    * prefix scan — one shuffle of |spine| + Σ|data| rows, per-bucket
-    * windows, an O(buckets) driver carry — so a huge spine costs the same
-    * shape as huge data (a 10M-row spine is gated in ScaleSmoke with the
-    * plan asserted bucket-partitioned). There is no global-sort window at
-    * any size; if one keyed entity dominates instead, that is
-    * [[asOfJoinKeyed]]'s documented salt-upstream case.
+  /** Linear interpolation at `g` between the previous observation struct
+    * `p` = (t0, v0) and the next `n` = (t1, v1): exact when both are the
+    * same observation, null when either side is missing (no extrapolation).
     */
-  def asOfJoin(spine: DataFrame, timeCol: String,
-      frames: Seq[(String, DataFrame)], memo: Option[CutsMemo] = None): DataFrame = {
-    require(frames.nonEmpty, "asOfJoin needs at least one frame")
-    val wide = alignOuter(timeCol, frames, doFfill = false)
-    val names = frames.map(_._1)
-    val spineCols = spine.columns.filterNot(_ == timeCol).toSeq
-    val spineTagged = spine
-      .select((col(timeCol) +: spineCols.map(col)): _*)
-      .withColumn("__spine", lit(1))
-    val dataTagged = wide
-      .select((col(timeCol) +: names.map(col)): _*)
-      .withColumn("__spine", lit(0))
-    // unionByName with missing columns nulled on both sides
-    val unioned = spineTagged.unionByName(dataTagged, allowMissingColumns = true)
-    val filled = ffillOrdered(unioned, timeCol, Seq(col(timeCol), col("__spine")), names,
-      memo = memo)
-    filled.where(col("__spine") === 1).drop("__spine")
-  }
-
-  /** [[asOfJoin]] with a STALENESS BOUND — the unkeyed twin of
-    * [[asOfJoinKeyedTolerance]] (pandas merge_asof `tolerance`): each
-    * spine row receives a frame's last value only while that observation
-    * is at most `toleranceMicros` old at the spine instant; older carries
-    * come back null instead of serving arbitrarily stale state. Same
-    * bucketed prefix-scan shape — the carried cell is the (t, v)
-    * observation struct and the age check is a map-side projection.
-    */
-  def asOfJoinTolerance(spine: DataFrame, timeCol: String,
-      frames: Seq[(String, DataFrame)], toleranceMicros: Long,
-      memo: Option[CutsMemo] = None): DataFrame = {
-    require(frames.nonEmpty, "asOfJoinTolerance needs at least one frame")
-    require(toleranceMicros >= 0, "tolerance must be >= 0")
-    val wide = alignOuter(timeCol, frames, doFfill = false)
-    val names = frames.map(_._1)
-    val spineCols = spine.columns.filterNot(_ == timeCol).toSeq
-    val us = unix_micros(col(timeCol))
-    val spineTagged = spine
-      .select((col(timeCol) +: spineCols.map(col)): _*)
-      .withColumn("__spine", lit(1))
-    val dataTagged = wide
-      .select((col(timeCol) +: names.map(col)): _*)
-      .withColumn("__spine", lit(0))
-    val unioned = spineTagged.unionByName(dataTagged, allowMissingColumns = true)
-    val seeded = names.foldLeft(unioned) { (d, c) =>
-      d.withColumn(s"__p_$c",
-        when(col("__spine") === 0 && col(c).isNotNull,
-          struct(us.as("t"), col(c).as("v"))))
-    }
-    val filled = ffillOrdered(seeded, timeCol,
-      Seq(col(timeCol), col("__spine")), names.map(c => s"__p_$c"), memo = memo)
-    val outCols = names.map { c =>
-      val p = col(s"__p_$c")
-      when(p.isNotNull && us - p.getField("t") <= toleranceMicros,
-        p.getField("v")).as(c)
-    }
-    filled.where(col("__spine") === 1)
-      .select((col(timeCol) +: spineCols.map(col)) ++ outCols: _*)
-  }
-
-  /** Entity-keyed as-of join: for each spine row (keys..., time, payload),
-    * attach the last `valueCols` values from `data` with the SAME keys and
-    * data-time <= spine-time. The per-entity flavor of [[asOfJoin]] —
-    * parallelism comes free from partitioning the window by the keys
-    * (millions of entities = millions of independent partitions; no
-    * bucket/carry machinery needed). A single hot entity degrades to that
-    * entity's row count — salt the key upstream if one entity dominates.
-    */
-  def asOfJoinKeyed(spine: DataFrame, data: DataFrame, keys: Seq[String],
-      timeCol: String, valueCols: Seq[String]): DataFrame = {
-    val spineCols = spine.columns.filterNot(c => c == timeCol || keys.contains(c)).toSeq
-    val spineTagged = spine.withColumn("__spine", lit(1))
-    val dataTagged = data
-      .select((keys.map(col) :+ col(timeCol)) ++ valueCols.map(col): _*)
-      .withColumn("__spine", lit(0))
-    val unioned = spineTagged.unionByName(dataTagged, allowMissingColumns = true)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(timeCol), col("__spine"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val filled = valueCols.foldLeft(unioned) { (d, c) =>
-      d.withColumn(c, last(col(c), ignoreNulls = true).over(w))
-    }
-    filled.where(col("__spine") === 1).drop("__spine")
-      .select((keys.map(col) :+ col(timeCol)) ++ spineCols.map(col) ++ valueCols.map(col): _*)
-  }
-
-  /** [[asOfJoinKeyed]] with a STALENESS BOUND (pandas merge_asof's
-    * `tolerance`, and the online-serving freshness contract every feature
-    * platform enforces): a spine row only receives its entity's last
-    * observation if that observation is at most `toleranceMicros` old —
-    * older carries come back null instead of silently serving stale state
-    * (an entity that stopped emitting keeps its last value FOREVER under
-    * plain as-of; a model served that value months later is being fed a
-    * ghost). Same window shape — the carry is the (t, v) observation
-    * struct and the age check is a map-side projection on extraction, so
-    * the cost over the unbounded form is one struct per value column.
-    */
-  def asOfJoinKeyedTolerance(spine: DataFrame, data: DataFrame,
-      keys: Seq[String], timeCol: String, valueCols: Seq[String],
-      toleranceMicros: Long): DataFrame = {
-    require(toleranceMicros >= 0, "tolerance must be >= 0")
-    val spineCols = spine.columns.filterNot(c => c == timeCol || keys.contains(c)).toSeq
-    val us = unix_micros(col(timeCol))
-    val spineTagged = spine.withColumn("__spine", lit(1))
-    val dataTagged = data
-      .select((keys.map(col) :+ col(timeCol)) ++ valueCols.map(col): _*)
-      .withColumn("__spine", lit(0))
-    val unioned = spineTagged.unionByName(dataTagged, allowMissingColumns = true)
-    val withObs = valueCols.foldLeft(unioned) { (d, c) =>
-      d.withColumn(s"__o_$c",
-        when(col("__spine") === 0 && col(c).isNotNull,
-          struct(us.as("t"), col(c).as("v"))))
-    }
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(timeCol), col("__spine"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val filled = valueCols.foldLeft(withObs) { (d, c) =>
-      d.withColumn(s"__p_$c", last(col(s"__o_$c"), ignoreNulls = true).over(w))
-    }
-    val outCols = valueCols.map { c =>
-      val p = col(s"__p_$c")
-      when(p.isNotNull && us - p.getField("t") <= toleranceMicros,
-        p.getField("v")).as(c)
-    }
-    filled.where(col("__spine") === 1)
-      .select((keys.map(col) :+ col(timeCol)) ++ spineCols.map(col) ++ outCols: _*)
-  }
-
-  /** LINEAR-INTERPOLATION join onto an ARBITRARY spine — the interp twin
-    * of [[asOfJoin]] ([[resampleInterp]] generalizes the regular grid the
-    * same way): each spine row gets, per frame, the linear interpolation
-    * between that frame's neighboring observations around the spine
-    * instant — exact at observation instants, null outside the frame's
-    * span, DOUBLE out. The "features at label times" constructor when the
-    * signal is continuous (sensor readings, prices) and a stale LOCF
-    * carry would bias the training set.
-    *
-    * Scale shape: the [[alignOuter]] stack + the spine union ride ONE
-    * fused bidirectional quantile-bucketed prefix scan ([[biFill]]:
-    * forward last-obs struct, backward next-obs — one cache, one carries
-    * aggregate, one bucket exchange) — spine rows carry a tag through the
-    * pass and filter out at the end; no grid join, no global-sort window.
-    * The (time, __spine) tie order — data before spine forward, spine
-    * before data backward — makes an observation AT a spine instant
-    * visible from both directions.
-    */
-  def asOfJoinInterp(spine: DataFrame, timeCol: String,
-      frames: Seq[(String, DataFrame)],
-      memo: Option[CutsMemo] = None): DataFrame = {
-    require(frames.nonEmpty, "asOfJoinInterp needs at least one frame")
-    val names = frames.map(_._1)
-    val wide = alignOuter(timeCol, frames, doFfill = false)
-    val spineCols = spine.columns.filterNot(_ == timeCol).toSeq
-    val us = unix_micros(col(timeCol))
-    val spineTagged = spine
-      .select((col(timeCol) +: spineCols.map(col)): _*)
-      .withColumn("__spine", lit(1))
-    val dataTagged = wide
-      .select((col(timeCol) +: names.map(col)): _*)
-      .withColumn("__spine", lit(0))
-    val unioned = spineTagged.unionByName(dataTagged, allowMissingColumns = true)
-    val seeded = names.foldLeft(unioned) { (d, c) =>
-      val obs = when(col("__spine") === 0 && col(c).isNotNull,
-        struct(us.as("t"), col(c).as("v")))
-      d.withColumn(s"__p_$c", obs).withColumn(s"__n_$c", obs)
-    }
-    val both = biFill(seeded, timeCol, Some("__spine"),
-      names.map(c => s"__p_$c"), names.map(c => s"__n_$c"), memo = memo)
-    val g = unix_micros(col(timeCol))
-    val outCols = names.map { c =>
-      val p = col(s"__p_$c"); val n = col(s"__n_$c")
-      val t0 = p.getField("t"); val v0 = p.getField("v").cast("double")
-      val t1 = n.getField("t"); val v1 = n.getField("v").cast("double")
-      when(p.isNull || n.isNull, lit(null).cast("double"))
-        .when(t1 === t0, v0)
-        .otherwise(v0 + (v1 - v0) *
-          ((g - t0).cast("double") / (t1 - t0).cast("double"))).as(c)
-    }
-    both.where(col("__spine") === 1)
-      .select((col(timeCol) +: spineCols.map(col)) ++ outCols: _*)
-  }
-
-  /** [[asOfJoinKeyed]] generalized to pandas merge_asof's three
-    * DIRECTIONS, with an optional staleness/lookahead bound:
-    * `backward` = last observation at-or-before the spine instant (the
-    * as-of default), `forward` = FIRST observation at-or-after it (label
-    * lookahead joins: "the next reading after the event"), `nearest` =
-    * whichever of the two is closer in time, ties to the backward side
-    * (deterministic; pandas leaves the tie unspecified). With
-    * `toleranceMicros`, a match farther than the bound (in the chosen
-    * direction's distance) serves null.
-    *
-    * Same one-window-per-direction shape as [[interpJoinKeyed]]: the
-    * carry is the (t, v) observation struct, both windows partition by
-    * the keys (parallelism per entity), and an observation AT the spine
-    * instant is visible from both sides — so `nearest` returns it
-    * exactly and `forward`'s distance there is 0.
-    */
-  def asOfJoinKeyedDirection(spine: DataFrame, data: DataFrame,
-      keys: Seq[String], timeCol: String, valueCols: Seq[String],
-      direction: String = "backward",
-      toleranceMicros: Option[Long] = None): DataFrame = {
-    require(Set("backward", "forward", "nearest")(direction),
-      s"direction must be backward/forward/nearest, got '$direction'")
-    require(toleranceMicros.forall(_ >= 0), "tolerance must be >= 0")
-    (direction, toleranceMicros) match {
-      // the plain windows are cheaper than struct carries — keep them
-      case ("backward", None) =>
-        asOfJoinKeyed(spine, data, keys, timeCol, valueCols)
-      case ("backward", Some(t)) =>
-        asOfJoinKeyedTolerance(spine, data, keys, timeCol, valueCols, t)
-      case _ =>
-        val spineCols = spine.columns
-          .filterNot(c => c == timeCol || keys.contains(c)).toSeq
-        val us = unix_micros(col(timeCol))
-        val spineTagged = spine.withColumn("__spine", lit(1))
-        val dataTagged = data
-          .select((keys.map(col) :+ col(timeCol)) ++ valueCols.map(col): _*)
-          .withColumn("__spine", lit(0))
-        val unioned = spineTagged.unionByName(dataTagged, allowMissingColumns = true)
-        val withObs = valueCols.foldLeft(unioned) { (d, c) =>
-          d.withColumn(s"__o_$c",
-            when(col("__spine") === 0 && col(c).isNotNull,
-              struct(us.as("t"), col(c).as("v"))))
-        }
-        val wFwd = Window.partitionBy(keys.map(col): _*)
-          .orderBy(col(timeCol), col("__spine"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wBwd = Window.partitionBy(keys.map(col): _*)
-          .orderBy(col(timeCol), col("__spine").desc)
-          .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        val filled = valueCols.foldLeft(withObs) { (d, c) =>
-          d.withColumn(s"__p_$c", last(col(s"__o_$c"), ignoreNulls = true).over(wFwd))
-            .withColumn(s"__n_$c", first(col(s"__o_$c"), ignoreNulls = true).over(wBwd))
-        }
-        val tol = toleranceMicros.map(lit(_)).getOrElse(lit(Long.MaxValue))
-        val outCols = valueCols.map { c =>
-          val p = col(s"__p_$c"); val n = col(s"__n_$c")
-          val db = us - p.getField("t") // backward distance (>= 0)
-          val df = n.getField("t") - us // forward distance (>= 0)
-          val chosen = direction match {
-            case "forward" => when(n.isNotNull && df <= tol, n.getField("v"))
-            case "nearest" =>
-              when(p.isNull && n.isNull, lit(null))
-                .when(p.isNull, when(df <= tol, n.getField("v")))
-                .when(n.isNull, when(db <= tol, p.getField("v")))
-                // tie (df == db) goes backward — the when's strict <
-                .when(df < db, when(df <= tol, n.getField("v")))
-                .otherwise(when(db <= tol, p.getField("v")))
-          }
-          chosen.as(c)
-        }
-        filled.where(col("__spine") === 1)
-          .select((keys.map(col) :+ col(timeCol)) ++ spineCols.map(col) ++ outCols: _*)
-    }
-  }
-
-  /** Entity-keyed LINEAR-INTERPOLATION join — [[asOfJoinKeyed]]'s interp
-    * twin, with [[resampleInterp]]'s semantics per entity: each spine row
-    * gets v0 + (v1−v0)·(g−t0)/(t1−t0) between its key's neighboring
-    * observations; exact at hits, null before the key's first / after its
-    * last observation; interpolated columns come back DOUBLE.
-    *
-    * Parallelism comes free from partitioning both windows by the keys
-    * (as in the as-of flavor); the backward neighbor is the same window
-    * with a following frame and tie order flipped so an observation AT
-    * the spine instant is visible from both sides. A single hot entity
-    * degrades to its row count — salt upstream if one dominates.
-    */
-  def interpJoinKeyed(spine: DataFrame, data: DataFrame, keys: Seq[String],
-      timeCol: String, valueCols: Seq[String]): DataFrame = {
-    val spineCols = spine.columns.filterNot(c => c == timeCol || keys.contains(c)).toSeq
-    val us = unix_micros(col(timeCol))
-    val spineTagged = spine.withColumn("__spine", lit(1))
-    val dataTagged = data
-      .select((keys.map(col) :+ col(timeCol)) ++ valueCols.map(col): _*)
-      .withColumn("__spine", lit(0))
-    val unioned = spineTagged.unionByName(dataTagged, allowMissingColumns = true)
-    val withObs = valueCols.foldLeft(unioned) { (d, c) =>
-      d.withColumn(s"__o_$c",
-        when(col("__spine") === 0 && col(c).isNotNull,
-          struct(us.as("t"), col(c).as("v"))))
-    }
-    // forward: data sorts before spine at equal time (flag asc), frame up
-    // to current; backward: spine before data at equal time (flag desc),
-    // frame from current — both directions see an observation AT the
-    // spine instant, so t0 == t1 == g there
-    val wFwd = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(timeCol), col("__spine"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wBwd = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(timeCol), col("__spine").desc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val filled = valueCols.foldLeft(withObs) { (d, c) =>
-      d.withColumn(s"__p_$c", last(col(s"__o_$c"), ignoreNulls = true).over(wFwd))
-        .withColumn(s"__n_$c", first(col(s"__o_$c"), ignoreNulls = true).over(wBwd))
-    }
-    val g = us
-    val outCols = valueCols.map { c =>
-      val p = col(s"__p_$c"); val n = col(s"__n_$c")
-      val t0 = p.getField("t"); val v0 = p.getField("v").cast("double")
-      val t1 = n.getField("t"); val v1 = n.getField("v").cast("double")
-      when(p.isNull || n.isNull, lit(null).cast("double"))
-        .when(t1 === t0, v0)
-        .otherwise(v0 + (v1 - v0) *
-          ((g - t0).cast("double") / (t1 - t0).cast("double"))).as(c)
-    }
-    filled.where(col("__spine") === 1)
-      .select((keys.map(col) :+ col(timeCol)) ++ spineCols.map(col) ++ outCols: _*)
+  private def interpolate(p: Column, n: Column, g: Column): Column = {
+    val t0 = p.getField("t"); val v0 = p.getField("v").cast("double")
+    val t1 = n.getField("t"); val v1 = n.getField("v").cast("double")
+    when(p.isNull || n.isNull, lit(null).cast("double"))
+      .when(t1 === t0, v0)
+      .otherwise(v0 + (v1 - v0) * ((g - t0).cast("double") / (t1 - t0).cast("double")))
   }
 
   /** Bucket boundaries from approximate time QUANTILES, not uniform range
@@ -499,88 +196,31 @@ object Align {
       .otherwise(bucketOf)
   }
 
-  /** Generalized bucketed forward-fill with a compound ordering (e.g.
-    * `(time, is_spine)` so data rows precede spine rows at equal
-    * timestamps). The two-pass parallel-prefix shape, ENTIRELY in one
-    * Catalyst plan:
+  /** One-pass BIDIRECTIONAL bucketed fill: `fwdCols` forward-fill (LOCF)
+    * and `bwdCols` backward-fill (NOCB, reading direction reversed) — the
+    * two-pass parallel-prefix shape, ENTIRELY in one Catalyst plan:
     *
     *  1. persist the input (MEMORY_AND_DISK — released by CacheScope), so
     *     the carries and fill subtrees evaluate the upstream ONCE;
     *  2. QUANTILE-bucket rows by time ([[bucketCuts]] — a driver action
-    *     only on a memo miss); carry-out per bucket is a plain aggregation
-    *     — `max(struct(order..., c))` over non-null rows — NOT a window;
-    *  3. carry-IN of bucket b = last non-null carry-out over buckets < b:
-    *     a prefix window over the O(buckets)-row aggregate (single
-    *     partition of ≈#parallelism rows — trivially small), BROADCAST
-    *     back and coalesced under the intra-bucket window fill.
+    *     only on a memo miss); each bucket's carry-outs for both directions
+    *     are ONE plain aggregation — `max`/`min(struct(order…, c))` over
+    *     non-null rows — NOT a window;
+    *  3. carry-IN of bucket b = last non-null carry-out over buckets < b
+    *     (first over buckets > b backward): a prefix window over the
+    *     O(buckets)-row aggregate (single partition of ≈#parallelism rows —
+    *     trivially small), BROADCAST back and coalesced under the
+    *     intra-bucket window fill ([[windowFill]]: two window sorts over
+    *     ONE bucket-key exchange).
     *
-    * The prefix scan used to be a driver-side collect + loop; in-plan it
-    * costs the same tiny rows but ZERO extra driver actions — on a memo
+    * In-plan, the prefix scan costs ZERO extra driver actions: on a memo
     * hit the whole fill is ONE action (the consumer's), which at the
-    * ~0.2-0.3 s-per-action local floor is the difference between a
-    * 0.3 s and a 0.9 s feature-store read, and on a real cluster removes
-    * two plan→schedule→collect round-trips per read.
-    *
-    * Cost at any data size: one upstream evaluation + one bucket-key
-    * shuffle + one broadcast of #buckets rows.
-    */
-  private def ffillOrdered(df: DataFrame, timeCol: String, order: Seq[Column],
-      valueCols: Seq[String], buckets: Int = 0,
-      memo: Option[CutsMemo] = None): DataFrame = {
-    if (valueCols.isEmpty) return df
-    val spark = df.sparkSession
-    val nb = if (buckets > 0) buckets else spark.sparkContext.defaultParallelism
-    // tracked persist: released in bulk by graft.CacheScope.release() (the
-    // ContextCleaner otherwise reclaims it only once the plan is unreachable)
-    val cached = graft.CacheScope.persist(df)
-    val us = unix_micros(col(timeCol))
-    val cuts = bucketCuts(cached, us, nb, memo) match {
-      case None => cached.unpersist(false); return df // empty input
-      case Some(cs) => cs
-    }
-    val withB = cached.withColumn("__b", bucketCol(us, cuts, timeCol))
-
-    // carry-out per bucket per column: the column value on the last
-    // (by `order`) row where it is non-null — an aggregation, not a window
-    val carryAggs = valueCols.map { c =>
-      max(when(col(c).isNotNull, struct((order :+ col(c).as("__v")): _*))).as(s"__s_$c")
-    }
-    val carries = withB.groupBy(col("__b")).agg(carryAggs.head, carryAggs.tail: _*)
-    // in-plan prefix scan over ≤ #buckets rows (the single-partition window
-    // is exactly the right tool at this cardinality)
-    val wPrev = Window.orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carryIn = carries.select(
-      col("__b") +: valueCols.map(c =>
-        last(col(s"__s_$c"), ignoreNulls = true).over(wPrev)
-          .getField("__v").as(s"__carry_$c")): _*)
-
-    // intra-bucket fill + broadcast carry-in coalesce. ONE select per
-    // step, not a per-column withColumn fold: a fold nests one Project
-    // node per column, and at export width (1000+ features) the analyzer
-    // recurses a 1000-deep plan into StackOverflow before the optimizer
-    // would ever collapse it.
-    val w = Window.partitionBy(col("__b")).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val vset = valueCols.toSet
-    val filled = withB.select(withB.columns.toSeq.map { c =>
-      if (vset(c)) last(col(c), ignoreNulls = true).over(w).as(c) else col(c)
-    }: _*)
-    val joined = filled.join(broadcast(carryIn), Seq("__b"), "left")
-    joined.select(filled.columns.toSeq.filter(_ != "__b").map { c =>
-      if (vset(c)) coalesce(col(c), col(s"__carry_$c")).as(c) else col(c)
-    }: _*)
-  }
-
-  /** One-pass BIDIRECTIONAL bucketed fill: `fwdCols` forward-fill (LOCF)
-    * and `bwdCols` backward-fill (NOCB, reading direction reversed) over
-    * the SAME quantile bucketing — one cache, ONE carries aggregate
-    * computing both directions' bucket edges, one bucket-key exchange
-    * carrying two window sorts, and both carry-ins from the same
-    * broadcast. Replaces the old chained two-pass shape (two caches, two
-    * cuts jobs, two carry collects, and — on the grid path — a fwd⋈bwd
-    * join); the fusion is what VERDICT r6 priced as the remaining
-    * read-path action count.
+    * ~0.2-0.3 s-per-action local floor is the difference between a 0.3 s
+    * and a 0.9 s feature-store read, and on a real cluster removes two
+    * plan→schedule→collect round-trips per read. Cost at any data size:
+    * one upstream evaluation + one bucket-key shuffle + one broadcast of
+    * #buckets rows. Each step is one select, so the plan depth does not
+    * grow with the column count.
     *
     * `tie` (the spine flag) breaks equal-time order: ascending on the
     * forward axis (data rows sort before spine rows, so a spine row sees
@@ -592,8 +232,11 @@ object Align {
   private def biFill(df: DataFrame, timeCol: String, tie: Option[String],
       fwdCols: Seq[String], bwdCols: Seq[String], buckets: Int = 0,
       memo: Option[CutsMemo] = None): DataFrame = {
+    if (fwdCols.isEmpty && bwdCols.isEmpty) return df
     val spark = df.sparkSession
     val nb = if (buckets > 0) buckets else spark.sparkContext.defaultParallelism
+    // tracked persist: released in bulk by graft.CacheScope.release() (the
+    // ContextCleaner otherwise reclaims it only once the plan is unreachable)
     val cached = graft.CacheScope.persist(df)
     val us = unix_micros(col(timeCol))
     val cuts = bucketCuts(cached, us, nb, memo) match {
@@ -601,14 +244,12 @@ object Align {
       case Some(cs) => cs
     }
     val withB = cached.withColumn("__b", bucketCol(us, cuts, timeCol))
-    val ordFwd = col(timeCol) +: tie.map(col).toSeq
-    val ordBwd = col(timeCol) +: tie.map(t => col(t).desc).toSeq
     // both directions' carry-outs in ONE aggregate: fwd = value on the
     // LAST (time, tie asc) non-null row = max struct; bwd = value on the
     // FIRST (time, tie desc) non-null row = min struct over (time, -tie)
     val aggs =
       fwdCols.map(c => max(when(col(c).isNotNull, struct(
-        (ordFwd :+ col(c).as("__v")): _*))).as(s"__s_$c")) ++
+        ((col(timeCol) +: tie.map(col).toSeq) :+ col(c).as("__v")): _*))).as(s"__s_$c")) ++
       bwdCols.map(c => min(when(col(c).isNotNull, struct(
         (col(timeCol) +: tie.map(t => (-col(t)).as("__td")).toSeq :+
           col(c).as("__v")): _*))).as(s"__e_$c"))
@@ -620,28 +261,37 @@ object Align {
     val carryIn = carries.select(
       col("__b") +:
         (fwdCols.map(c => last(col(s"__s_$c"), ignoreNulls = true).over(wPrev)
-          .getField("__v").as(s"__cp_$c")) ++
+          .getField("__v").as(s"__carry_$c")) ++
          bwdCols.map(c => first(col(s"__e_$c"), ignoreNulls = true).over(wNext)
           .getField("__v").as(s"__cn_$c"))): _*)
-    // two window sorts over ONE bucket exchange (same partitioning key)
-    val wF = Window.partitionBy(col("__b")).orderBy(ordFwd: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wB = Window.partitionBy(col("__b")).orderBy(ordBwd: _*)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val filledF = fwdCols.foldLeft(withB) { (d, c) =>
-      d.withColumn(c, last(col(c), ignoreNulls = true).over(wF))
-    }
-    val filled = bwdCols.foldLeft(filledF) { (d, c) =>
-      d.withColumn(c, first(col(c), ignoreNulls = true).over(wB))
-    }
+    val filled = windowFill(withB, Seq(col("__b")), timeCol, tie, fwdCols, bwdCols)
     val joined = filled.join(broadcast(carryIn), Seq("__b"), "left")
-    val coalescedF = fwdCols.foldLeft(joined) { (d, c) =>
-      d.withColumn(c, coalesce(col(c), col(s"__cp_$c")))
-    }
-    bwdCols.foldLeft(coalescedF) { (d, c) =>
-      d.withColumn(c, coalesce(col(c), col(s"__cn_$c")))
-    }.drop("__b")
-      .drop(fwdCols.map(c => s"__cp_$c") ++ bwdCols.map(c => s"__cn_$c"): _*)
+    val (fw, bw) = (fwdCols.toSet, bwdCols.toSet)
+    joined.select(filled.columns.toSeq.filter(_ != "__b").map { c =>
+      if (fw(c)) coalesce(col(c), col(s"__carry_$c")).as(c)
+      else if (bw(c)) coalesce(col(c), col(s"__cn_$c")).as(c)
+      else col(c)
+    }: _*)
+  }
+
+  /** In-place window fill of `fwdCols` (last non-null up to the row) and
+    * `bwdCols` (first non-null from the row on), both partitioned `by` and
+    * ordered by time then `tie` (ascending forward, descending backward —
+    * see [[biFill]]). One select for every column.
+    */
+  private def windowFill(df: DataFrame, by: Seq[Column], timeCol: String,
+      tie: Option[String], fwdCols: Seq[String], bwdCols: Seq[String]): DataFrame = {
+    val wF = Window.partitionBy(by: _*).orderBy((col(timeCol) +: tie.map(col).toSeq): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wB = Window.partitionBy(by: _*)
+      .orderBy((col(timeCol) +: tie.map(t => col(t).desc).toSeq): _*)
+      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val (fw, bw) = (fwdCols.toSet, bwdCols.toSet)
+    df.select(df.columns.toSeq.map { c =>
+      if (fw(c)) last(col(c), ignoreNulls = true).over(wF).as(c)
+      else if (bw(c)) first(col(c), ignoreNulls = true).over(wB).as(c)
+      else col(c)
+    }: _*)
   }
 
   /** Above this many frames (with one common value dtype), [[alignOuter]]
@@ -790,31 +440,13 @@ object Align {
       memo: Option[CutsMemo] = None): DataFrame = {
     require(frames.nonEmpty, "alignInterp needs at least one frame")
     val names = frames.map(_._1)
-    val wide = alignOuter(timeCol, frames, doFfill = false)
-    val us = unix_micros(col(timeCol))
-    // one select, not a withColumn fold — see [[ffillOrdered]]'s depth note
-    val seeded = wide.select(wide.columns.toSeq.map(col) ++ names.flatMap { c =>
-      val obs = when(col(c).isNotNull, struct(us.as("t"), col(c).as("v")))
-      Seq(obs.as(s"__p_$c"), obs.as(s"__n_$c"))
-    }: _*)
+    val seeded = observations(alignOuter(timeCol, frames, doFfill = false),
+      timeCol, names, lit(true), fwd = true, bwd = true)
     // union times are unique (the outer join / pivot keys on the instant),
     // so the axis alone is a total order — no tie-break column needed
     val both = biFill(seeded, timeCol, None,
       names.map(c => s"__p_$c"), names.map(c => s"__n_$c"), memo = memo)
-    val g = unix_micros(col(timeCol))
-    val outCols = names.map { c =>
-      val p = col(s"__p_$c"); val n = col(s"__n_$c")
-      val t0 = p.getField("t"); val v0 = p.getField("v").cast("double")
-      val t1 = n.getField("t"); val v1 = n.getField("v").cast("double")
-      when(p.isNull || n.isNull, lit(null).cast("double"))
-        .when(t1 === t0, v0)
-        .otherwise(v0 + (v1 - v0) *
-          ((g - t0).cast("double") / (t1 - t0).cast("double"))).as(c)
-    }
-    both.select((col(timeCol) +: outCols): _*)
-  }
-
-  private def micros(t: java.sql.Timestamp): Long = {
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
+    both.select(col(timeCol) +: names.map(c =>
+      interpolate(col(s"__p_$c"), col(s"__n_$c"), unix_micros(col(timeCol))).as(c)): _*)
   }
 }

@@ -91,7 +91,7 @@ object Rolling {
     * than at the last observation before t. Exact construction: each
     * windowed count/sum at t is the difference of the per-entity PREFIX
     * aggregate F at t and at t−window, both served by the same backward
-    * as-of machinery ([[Align.asOfJoinKeyed]]). Window semantics are
+    * as-of machinery ([[Align.pointInTime]]). Window semantics are
     * half-open `(t−window, t]` — the differenceable form (an
     * observation exactly at t−window belongs to F(t−window) and
     * cancels). NOTE this differs from [[trailingAgg]]'s DEFAULT
@@ -140,7 +140,7 @@ object Rolling {
           aggs.indices.map(i => sum(col(s"__v$i")).over(w).as(s"__F$i")): _*))
 
     val fCols = aggs.indices.map(i => s"__F$i")
-    val at = Align.asOfJoinKeyed(spine, cum, Seq(entityCol), timeCol, fCols)
+    val at = Align.pointInTime(spine, cum, Seq(entityCol), timeCol, fCols)
     val renamedA = aggs.indices.foldLeft(at) { (d, i) =>
       d.withColumnRenamed(s"__F$i", s"__Fa$i")
     }
@@ -148,7 +148,7 @@ object Rolling {
       .withColumn("__t_orig", col(timeCol))
       .withColumn(timeCol,
         timestamp_micros(unix_micros(col(timeCol)) - micros))
-    val atPrev = Align.asOfJoinKeyed(shifted, cum, Seq(entityCol), timeCol, fCols)
+    val atPrev = Align.pointInTime(shifted, cum, Seq(entityCol), timeCol, fCols)
     val withOuts = aggs.zipWithIndex.foldLeft(atPrev) { case (d, (a, i)) =>
       d.withColumn(outName(a),
         coalesce(col(s"__Fa$i"), lit(0L)) - coalesce(col(s"__F$i"), lit(0L)))
@@ -202,7 +202,7 @@ object Rolling {
       .withColumn("__j", explode(sequence(lit(0), lit(k))))
       .withColumn(timeCol,
         timestamp_micros(unix_micros(col(timeCol)) - col("__j") * h))
-    val at = Align.asOfJoinKeyed(exploded, cum, Seq(entityCol), timeCol,
+    val at = Align.pointInTime(exploded, cum, Seq(entityCol), timeCol,
       Seq("__F"))
     // bucket j's decayed contribution: floor((F_j - F_{j+1}) / 2^j),
     // F monotone per entity so the difference is >= 0 for non-negative

@@ -74,7 +74,7 @@ object Scd {
     * instant — the interval with the latest `valid_from <= t`. Because
     * intervals of one entity abut (each closes where the next opens),
     * this IS a per-entity backward as-of join on `valid_from`, so it
-    * rides [[Align.asOfJoinKeyed]]'s union+window shape: one hash
+    * rides [[Align.pointInTime]]'s keyed union+window shape: one hash
     * shuffle on the entity key, no interval explode, no range join.
     *
     * Empty intervals (`valid_to == valid_from`, produced by two changes
@@ -85,7 +85,7 @@ object Scd {
     * first interval get nulls.
     *
     * The attribute tuple carries through the as-of as ONE struct column,
-    * never per-column: `asOfJoinKeyed`'s per-column ignoreNulls carry
+    * never per-column: `pointInTime`'s per-column ignoreNulls carry
     * would skip an interval whose attribute is legitimately NULL (null
     * is a value in SCD2 — a spine row inside a null interval must see
     * null, not the previous interval's value) and could stitch a mixed
@@ -104,7 +104,7 @@ object Scd {
     val live = scd.where(col("valid_to").isNull || col("valid_to") > col("valid_from"))
       .select(col(entityCol), col("valid_from").as(timeCol),
         struct(attrCols.map(col): _*).as("__scd_attrs"))
-    val joined = Align.asOfJoinKeyed(spine, live,
+    val joined = Align.pointInTime(spine, live,
       Seq(entityCol), timeCol, Seq("__scd_attrs"))
     attrCols.foldLeft(joined) { (d, a) =>
       d.withColumn(a, col(s"__scd_attrs.$a"))

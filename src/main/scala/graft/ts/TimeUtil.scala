@@ -2,6 +2,8 @@ package graft.ts
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+
 /** Parsing for pandas-style duration / frequency strings used by the
   * reference API: `"-15min"` time-travel deltas (reference
   * src/qafs/backend/pandas.py:130) and `"2d"` / `"10min"` resample
@@ -48,4 +50,13 @@ object TimeUtil {
     val ldt = java.time.LocalDateTime.parse(norm)
     Timestamp.from(ldt.toInstant(java.time.ZoneOffset.UTC))
   }
+
+  /** Epoch microseconds of `t`, exact on both sides of the epoch — Spark's
+    * own conversion, so it agrees with how a timestamp literal or a
+    * collected row crosses into and out of the engine.
+    */
+  def micros(t: Timestamp): Long = DateTimeUtils.fromJavaTimestamp(t)
+
+  /** Inverse of [[micros]]. */
+  def timestamp(us: Long): Timestamp = DateTimeUtils.toJavaTimestamp(us)
 }

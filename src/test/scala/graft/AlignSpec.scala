@@ -54,8 +54,8 @@ class AlignSpec extends SparkTestBase {
       "2021-01-01 00:05:00" -> 1.0,
       "2021-01-02 00:00:00" -> 2.0, // exactly at a grid point
       "2021-01-04 12:00:00" -> 3.0))
-    val out = Align.resampleFfill(df, "time", Seq("value"),
-      ts("2021-01-01"), ts("2021-01-06"), TimeUtil.parseMicros("1d"))
+    val out = Align.pointInTime(Align.grid(spark, ts("2021-01-01"), ts("2021-01-06"),
+      TimeUtil.parseMicros("1d"), "time"), df, Nil, "time", Seq("value"))
     val m = collectMap(out)
     assert(m.size == 6)
     assert(m(ts("2021-01-01")) == null) // grid point before first observation
@@ -115,7 +115,8 @@ class AlignSpec extends SparkTestBase {
     val data = seriesDf(Seq("2021-01-02" -> 2.0, "2021-01-05" -> 5.0))
     val spine = Seq((ts("2021-01-01"), "a"), (ts("2021-01-02"), "b"),
       (ts("2021-01-04"), "c"), (ts("2021-01-06"), "d")).toDF("time", "label")
-    val out = Align.asOfJoin(spine, "time", Seq("x" -> data))
+    val out = Align.pointInTime(spine, Align.alignOuter("time", Seq("x" -> data),
+        doFfill = false), Nil, "time", Seq("x"))
       .orderBy("time").collect()
     assert(out.map(r => (Option(r.getAs[Any]("x")), r.getAs[String]("label"))).toSeq ==
       Seq((None, "a"), (Some(2.0), "b"), (Some(2.0), "c"), (Some(5.0), "d")))
@@ -127,7 +128,7 @@ class AlignSpec extends SparkTestBase {
       .toDF("k", "time", "v")
     val spine = Seq((1L, ts("2021-01-02"), "a"), (2L, ts("2021-01-02"), "b"),
       (3L, ts("2021-01-02"), "c")).toDF("k", "time", "tag")
-    val out = Align.asOfJoinKeyed(spine, data, Seq("k"), "time", Seq("v"))
+    val out = Align.pointInTime(spine, data, Seq("k"), "time", Seq("v"))
       .orderBy("k").collect()
     assert(out.map(r => (r.getLong(0), Option(r.getAs[Any]("v")), r.getAs[String]("tag"))).toSeq ==
       Seq((1L, Some(10.0), "a"), (2L, Some(20.0), "b"), (3L, None, "c")))
@@ -138,8 +139,8 @@ class AlignSpec extends SparkTestBase {
     // observations at day 2 (v=2) and day 6 (v=10); 1-day grid over [1, 7]
     val data = Seq((ts("2021-01-02"), 2.0), (ts("2021-01-06"), 10.0))
       .toDF("time", "value")
-    val out = Align.resampleInterp(data, "time", Seq("value"),
-        ts("2021-01-01"), ts("2021-01-07"), 86400L * 1000000)
+    val out = Align.pointInTime(Align.grid(spark, ts("2021-01-01"), ts("2021-01-07"),
+        86400L * 1000000, "time"), data, Nil, "time", Seq("value"), Align.Interp)
       .orderBy("time").collect()
       .map(r => Option(r.getAs[Any]("value")).map(_.asInstanceOf[Double]))
     assert(out.toSeq == Seq(
@@ -164,7 +165,7 @@ class AlignSpec extends SparkTestBase {
     val spine = Seq(
       (1L, ts("2021-01-01")), (1L, ts("2021-01-04")), (1L, ts("2021-01-06")),
       (2L, ts("2021-01-04")), (2L, ts("2021-01-05"))).toDF("k", "time")
-    val out = Align.interpJoinKeyed(spine, data, Seq("k"), "time", Seq("v"))
+    val out = Align.pointInTime(spine, data, Seq("k"), "time", Seq("v"), Align.Interp)
       .orderBy("k", "time").collect()
       .map(r => (r.getLong(0), Option(r.getAs[Any]("v"))))
     assert(out.toSeq == Seq(
@@ -187,15 +188,15 @@ class AlignSpec extends SparkTestBase {
       (2L, ts("2021-01-09"))   // 5d after obs -> stale
     ).toDF("k", "time")
     val tol = 2L * 86400 * 1000000
-    val out = Align.asOfJoinKeyedTolerance(spine, data, Seq("k"), "time",
-        Seq("v"), tol)
+    val out = Align.pointInTime(spine, data, Seq("k"), "time",
+        Seq("v"), Align.Backward, Some(tol))
       .orderBy("k", "time").collect()
       .map(r => (r.getLong(0), Option(r.getAs[Any]("v"))))
     assert(out.toSeq == Seq(
       (1L, Some(5.0)), (1L, None), (1L, Some(9.0)), (2L, None)))
     // tolerance 0 still serves an observation AT the spine instant
-    val exact = Align.asOfJoinKeyedTolerance(spine, data, Seq("k"), "time",
-        Seq("v"), 0L)
+    val exact = Align.pointInTime(spine, data, Seq("k"), "time",
+        Seq("v"), Align.Backward, Some(0L))
       .orderBy("k", "time").collect().map(r => Option(r.getAs[Any]("v")))
     assert(exact.toSeq == Seq(None, None, Some(9.0), None))
   }
@@ -210,7 +211,8 @@ class AlignSpec extends SparkTestBase {
       Tuple1(ts("2021-01-09"))   // both stale
     ).toDF("time")
     val tol = 2L * 86400 * 1000000
-    val out = Align.asOfJoinTolerance(spine, "time", Seq("a" -> a, "b" -> b), tol)
+    val out = Align.pointInTime(spine, Align.alignOuter("time", Seq("a" -> a, "b" -> b),
+        doFfill = false), Nil, "time", Seq("a", "b"), Align.Backward, Some(tol))
       .orderBy("time").collect()
       .map(r => (Option(r.getAs[Any]("a")), Option(r.getAs[Any]("b"))))
     assert(out.toSeq == Seq(
@@ -230,23 +232,29 @@ class AlignSpec extends SparkTestBase {
       (1L, ts("2021-01-06")),  // exact hit -> both directions serve 6
       (1L, ts("2021-01-08"))   // after both: fwd=null, nearest=6
     ).toDF("k", "time")
-    def run(dir: String, tol: Option[Long] = None) =
-      Align.asOfJoinKeyedDirection(spine, data, Seq("k"), "time", Seq("v"),
-          dir, tol)
+    def run(mode: Align.Mode, tol: Option[Long] = None) =
+      Align.pointInTime(spine, data, Seq("k"), "time", Seq("v"), mode, tol)
         .orderBy("time").collect().map(r => Option(r.getAs[Any]("v"))).toSeq
-    assert(run("forward") == Seq(Some(2.0), Some(6.0), Some(6.0), Some(6.0),
+    assert(run(Align.Forward) == Seq(Some(2.0), Some(6.0), Some(6.0), Some(6.0),
       Some(6.0), None))
     // time order: 01, 03, 04 (the tie), 05, 06, 08
-    assert(run("nearest") == Seq(Some(2.0), Some(2.0), Some(2.0), Some(6.0),
+    assert(run(Align.Nearest) == Seq(Some(2.0), Some(2.0), Some(2.0), Some(6.0),
       Some(6.0), Some(6.0)))
-    // backward delegates to the plain window form
-    assert(run("backward") == Seq(None, Some(2.0), Some(2.0), Some(2.0),
+    // backward: the last observation at-or-before, ties included
+    assert(run(Align.Backward) == Seq(None, Some(2.0), Some(2.0), Some(2.0),
       Some(6.0), Some(6.0)))
     // a 1-day lookahead bound voids forward matches farther than 1d
     val day = 86400L * 1000000
-    assert(run("forward", Some(day)) == Seq(Some(2.0), None, None,
+    assert(run(Align.Forward, Some(day)) == Seq(Some(2.0), None, None,
       Some(6.0), Some(6.0), None))
-    intercept[IllegalArgumentException] { run("sideways") }
+    // a bound has no meaning between two neighbors; negative bounds none at all
+    intercept[IllegalArgumentException] { run(Align.Interp, Some(day)) }
+    intercept[IllegalArgumentException] { run(Align.Forward, Some(-1L)) }
+    // bucket cuts belong to the unkeyed scan; a keyed join has none to reuse
+    intercept[IllegalArgumentException] {
+      Align.pointInTime(spine, data, Seq("k"), "time", Seq("v"),
+        memo = Some(new Align.CutsMemo))
+    }
   }
 
   test("asOfJoinInterp: spine rows interpolate per frame, payload rides along") {
@@ -260,7 +268,8 @@ class AlignSpec extends SparkTestBase {
       (ts("2021-01-03"), 200L),  // a: halfway = 30; b: halfway 4->8 = 6
       (ts("2021-01-06"), 300L)   // past both ends -> nulls
     ).toDF("time", "spine_id")
-    val out = Align.asOfJoinInterp(spine, "time", Seq("a" -> a, "b" -> b))
+    val out = Align.pointInTime(spine, Align.alignOuter("time", Seq("a" -> a, "b" -> b),
+        doFfill = false), Nil, "time", Seq("a", "b"), Align.Interp)
       .orderBy("time").collect()
       .map(r => (r.getLong(1), Option(r.getAs[Any]("a")), Option(r.getAs[Any]("b"))))
     assert(out.toSeq == Seq(
@@ -284,6 +293,95 @@ class AlignSpec extends SparkTestBase {
       (ts("2021-01-03"), Some(30.0), Some(7.0)),   // a halfway 10 -> 50
       (ts("2021-01-05"), Some(50.0), Some(5.0)),   // b halfway 7 -> 3
       (ts("2021-01-07"), None, Some(3.0))))        // past a's last obs
+  }
+
+  test("pointInTime == brute-force scan over keys x mode x tolerance") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    val hour = 3600L * 1000000
+    val base = TimeUtil.micros(ts("2021-01-01"))
+    def at(h: Int) = TimeUtil.timestamp(base + h * hour)
+    // (key, hour, v, w): key 1 has an observation AT a probe instant (h2),
+    // null values the fill must skip (v at h5, w at h6) and nearest ties
+    // (v at h4: h2 vs h6, at h8: h6 vs h10); key 3 has no data at all
+    val obs = Seq(
+      (1L, 2, Some(2.0), Some(20L)), (1L, 5, None, Some(50L)),
+      (1L, 6, Some(6.0), None), (1L, 10, Some(10.0), Some(100L)),
+      (2L, 4, Some(40.0), Some(400L)), (2L, 8, None, None),
+      (2L, 12, Some(120.0), Some(1200L)))
+    val probes = Seq((1L, 0), (1L, 2), (1L, 3), (1L, 4), (1L, 5), (1L, 8),
+      (1L, 11), (2L, 4), (2L, 6), (2L, 8), (2L, 13), (3L, 5))
+    val cols = Seq("v", "w")
+    val data = obs.map { case (k, h, v, w) => (k, at(h), v, w) }.toDF("k", "time", "v", "w")
+    val spine = probes.map { case (k, h) => (k, at(h), s"$k@$h") }.toDF("k", "time", "tag")
+    // the oracle: scan every observation of the probe's source directly
+    def scan(src: Seq[(Long, Int, Option[Double], Option[Long])], h: Int, c: Int,
+        mode: Align.Mode, tol: Option[Long]): Option[Double] = {
+      val t = base + h * hour
+      val seen = src.flatMap { o =>
+        (if (c == 0) o._3 else o._4.map(_.toDouble)).map(v => (base + o._2 * hour, v))
+      }
+      val back = seen.filter(_._1 <= t).maxByOption(_._1)
+      val ahead = seen.filter(_._1 >= t).minByOption(_._1)
+      def bounded(o: Option[(Long, Double)]) =
+        o.filter(x => math.abs(x._1 - t) <= tol.getOrElse(Long.MaxValue)).map(_._2)
+      mode match {
+        case Align.Backward => bounded(back)
+        case Align.Forward => bounded(ahead)
+        case Align.Nearest =>
+          bounded(if (ahead.exists(a => back.forall(b => a._1 - t < t - b._1))) ahead else back)
+        case Align.Interp =>
+          for ((t0, v0) <- back; (t1, v1) <- ahead)
+            yield if (t1 == t0) v0 else v0 + (v1 - v0) * ((t - t0).toDouble / (t1 - t0).toDouble)
+      }
+    }
+    val modes = Seq(Align.Backward, Align.Forward, Align.Nearest, Align.Interp)
+    for (keyed <- Seq(false, true); mode <- modes;
+         tol <- Seq(None, Some(2 * hour)) if mode != Align.Interp || tol.isEmpty) {
+      // unkeyed data must be time-unique (what alignOuter hands over): key 1's
+      val (keys, d, sp) =
+        if (keyed) (Seq("k"), data, spine)
+        else (Nil, data.where($"k" === 1).drop("k"), spine.drop("k"))
+      val out = Align.pointInTime(sp, d, keys, "time", cols, mode, tol)
+      val what = s"keys=$keys mode=$mode tolerance=$tol"
+      assert(out.columns.toSeq == keys ++ Seq("time", "tag") ++ cols, what)
+      assert(out.schema("w").dataType == (if (mode == Align.Interp) DoubleType else LongType), what)
+      val got = out.collect().map(r => r.getAs[String]("tag") -> cols.map(c =>
+        Option(r.getAs[Any](c)).map(_.asInstanceOf[Number].doubleValue))).toMap
+      val want = probes.map { case (k, h) =>
+        val src = obs.filter(_._1 == (if (keyed) k else 1L))
+        s"$k@$h" -> cols.indices.map(c => scan(src, h, c, mode, tol))
+      }.toMap
+      assert(got == want, what)
+    }
+    graft.CacheScope.release()
+  }
+
+  test("alignInterp adds the same plan depth at any width") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    // nested Projects along the deepest path: a per-column withColumn fold
+    // grows this with the frame count until the analyzer overflows its stack
+    def depth(p: LogicalPlan): Int =
+      (if (p.isInstanceOf[Project]) 1 else 0) + (p.children.map(depth) :+ 0).max
+    def added(width: Int): Int = {
+      val frames = (0 until width).map { i =>
+        s"f$i" -> Seq((ts("2021-01-01"), i.toDouble), (ts(f"2021-01-${i % 27 + 2}%02d"), 1.0))
+          .toDF("time", "value")
+      }
+      depth(Align.alignInterp("time", frames).queryExecution.analyzed) -
+        depth(Align.alignOuter("time", frames, doFfill = false).queryExecution.analyzed)
+    }
+    assert(added(4) == added(40))
+    graft.CacheScope.release()
+  }
+
+  test("TimeUtil micros round-trip on both sides of the epoch") {
+    val pre = ts("1969-12-31 23:59:59.5")
+    assert(TimeUtil.micros(pre) == -500000L)
+    assert(TimeUtil.timestamp(-500000L) == pre)
+    val post = ts("2021-01-01 00:00:00.000001")
+    assert(TimeUtil.timestamp(TimeUtil.micros(post)) == post)
   }
 
   test("duration parsing") {

@@ -138,6 +138,11 @@ class FeatureStoreSpec extends SparkTestBase {
     val asof = fs.loadKeyedAsOf(spine, "k/score", as = Some("score")).collect()
       .map(r => (r.getLong(0), r.getAs[Any]("score"))).toMap
     assert(asof == Map(1L -> 99.0, 2L -> 20.0, 3L -> null))
+    // the direction string maps onto a mode; an unknown one is refused by name
+    val bad = intercept[IllegalArgumentException] {
+      fs.loadKeyedAsOf(spine, "k/score", direction = "sideways")
+    }
+    assert(bad.getMessage.contains("backward/forward/nearest"))
     // saving to a non-keyed feature via saveKeyed is rejected
     fs.createFeature("k/plain")
     intercept[FeatureStoreException](fs.saveKeyed("k/plain", kdf(Nil)))
@@ -321,6 +326,21 @@ class FeatureStoreSpec extends SparkTestBase {
       fs.loadKeyedFeaturesAsOf(spine, Seq("k/a", "k/other"))
     }
     assert(ex.getMessage.contains("entity key set"))
+  }
+
+  test("loadKeyedResampled: a pre-epoch grid starts at its own instant") {
+    import spark.implicits._
+    val fs = freshStore()
+    fs.createNamespace("pe")
+    fs.createKeyedFeature("pe/f", Seq("uid"))
+    fs.saveKeyed("pe/f", Seq((1L, ts("1969-12-31 23:59:59"), 1.0, ts("1970-01-02")))
+      .toDF("uid", "time", "value", "created_time"))
+    val out = fs.loadKeyedResampled("pe/f", "1969-12-31 23:59:59.5",
+      "1970-01-01 00:00:01.5", "500ms").orderBy("time").collect()
+    assert(out.map(_.getTimestamp(1)).toSeq ==
+      Seq("1969-12-31 23:59:59.5", "1970-01-01 00:00:00", "1970-01-01 00:00:00.5",
+        "1970-01-01 00:00:01", "1970-01-01 00:00:01.5").map(ts))
+    assert(out.forall(_.getAs[Double]("value") == 1.0))
   }
 
   test("keyed group: per-(entity, time) latest-row dedup, pruning, misuse guards") {

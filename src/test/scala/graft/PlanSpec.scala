@@ -81,6 +81,20 @@ class PlanSpec extends SparkTestBase {
       s"packing must use the bucketed prefix scan, not a global-order window:\n$windows")
   }
 
+  test("point-in-time joins: unkeyed windows bucket-partitioned, keyed ones per entity") {
+    def windows(p: String) = p.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
+    Seq("fs_asof_spine", "fs_asof_spine_tol").foreach { q =>
+      val p = plan(q)
+      assert(windows(p).nonEmpty && windows(p).forall(_.contains("__b")),
+        s"$q: the unkeyed as-of must use the bucketed prefix scan:\n${windows(p)}")
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"$q must stay equi/broadcast-joined")
+    }
+    val keyed = windows(plan("fs_keyed_asof"))
+    assert(keyed.nonEmpty && keyed.forall(_.contains("user_id")),
+      s"fs_keyed_asof: windows must partition by the entity key:\n$keyed")
+  }
+
   test("fs_load_latest: dedup is a partial (map-side) aggregation, not a window sort") {
     val p = plan("fs_load_latest")
     assert(p.contains("partial_max") || p.contains("HashAggregate"),
@@ -156,7 +170,8 @@ class PlanSpec extends SparkTestBase {
           "timestamp '2024-01-01 00:00:00' + make_interval(0,0,0,0,cast(id*7 as int),0,0)")
           .as("time"),
         org.apache.spark.sql.functions.col("id").as("spine_id"))
-      fs.loadFeaturesAsOfInterp(spine, Seq("events/click", "events/purchase")).count()
+      fs.loadFeaturesAsOf(spine, Seq("events/click", "events/purchase"), how = "interp")
+        .count()
     }
     resample("ffill"); resample("interp"); spineInterp() // warm the memos
     // memo-hit ceilings: 1 action = main job + its broadcast-subtree job
