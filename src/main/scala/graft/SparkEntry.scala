@@ -1506,15 +1506,16 @@ object SparkEntry {
         Seq("events/click", "events/purchase"), how = "interp")
     }),
 
-    // the same spine under a 12h staleness bound: a carry older than 12h
-    // at the spine instant serves null, never stale state
+    // the same spine under a 5min staleness bound: a carry older than 5min
+    // at the spine instant serves null, never stale state (at sf0.01 most
+    // spine instants are that stale, some are not)
     "fs_asof_spine_tol" -> ((s, dir) => {
       val spine = s.range(0, 100).select(
         expr("timestamp '2024-01-01 00:00:00' + make_interval(0,0,0,0,cast(id*7 as int),0,0)")
           .as("time"),
         col("id").as("spine_id"))
       Fixtures.store(s, dir).loadFeaturesAsOf(spine,
-        Seq("events/click", "events/purchase"), tolerance = Some("12h"))
+        Seq("events/click", "events/purchase"), tolerance = Some("5min"))
     }),
 
     // entity-keyed as-of join: per-user last click value at each purchase
@@ -4797,9 +4798,9 @@ object SparkEntry {
                  i AS spine_id FROM range(100) t(i)),
           c AS (${ev("click")}), p AS (${ev("purchase")})
           SELECT g.time, g.spine_id,
-            CASE WHEN epoch_us(g.time) - epoch_us(c.time) <= 43200000000
+            CASE WHEN epoch_us(g.time) - epoch_us(c.time) <= 300000000
                  THEN c.value END AS "events/click",
-            CASE WHEN epoch_us(g.time) - epoch_us(p.time) <= 43200000000
+            CASE WHEN epoch_us(g.time) - epoch_us(p.time) <= 300000000
                  THEN p.value END AS "events/purchase"
           FROM g ASOF LEFT JOIN c ON c.time <= g.time
                  ASOF LEFT JOIN p ON p.time <= g.time

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Committed-read manifest for the batch-dir store family (fingerprint /
   * minhash / simhash / winnow / window / line-census / cluster-label /
@@ -219,6 +220,44 @@ object StoreCommit {
     while (it.hasNext) { if (it.next()._2.startsWith(storeRoot)) it.remove() }
   }
 
+  /** Last schema [[read]] used per (session, familyRoot), with the visible
+    * (token, dir-mtime) set it was used over. Deliberately NOT cleared by
+    * [[invalidate]]: an append adds a token and leaves every earlier one
+    * untouched, so the next read reuses the schema instead of inferring it
+    * again (one footer-read Spark job per family per probe). Any drop,
+    * same-token rewrite, compaction or rebuild removes or re-stamps an
+    * earlier entry and the next read infers again.
+    */
+  private val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
+      (Seq[(String, Long)], StructType)]()
+
+  /** The `meta` row and the `root/meta` listing (file names, lengths,
+    * mtimes) it was read under, per store root.
+    */
+  private val metaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], Row)]()
+
+  /** The store's one-row `meta` sidecar, or None when `root/meta` is
+    * absent or holds no row. Served from a driver cache validated on every
+    * call against one `listStatus` of `root/meta`: a rebuild or sidecar
+    * overwrite writes new part-file names, so it always misses. A warm
+    * call runs no Spark job; an absent or empty meta is never cached.
+    */
+  def meta(spark: SparkSession, root: String): Option[Row] = {
+    val p = new Path(s"$root/meta")
+    val listing = try fs(spark, p).listStatus(p).toSeq
+      .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).sorted
+    catch { case _: java.io.FileNotFoundException => return None }
+    val hit = metaCache.get(root)
+    if (hit != null && hit._1 == listing) Some(hit._2)
+    else {
+      val row = spark.read.parquet(p.toString).limit(1).collect().headOption
+      row.foreach(r => metaCache.put(root, (listing, r)))
+      row
+    }
+  }
+
   /** Committed-only read of the batch-dir family at `storeRoot(/sub)`.
     * `basePath` keeps the `batch` partition column alive, so readers that
     * filter a replayed micro-batch's own dir (`col("batch") =!= t`) are
@@ -243,9 +282,15 @@ object StoreCommit {
         val hit = readCache.get(key)
         if (hit != null && hit._1 == visible) hit._2
         else {
-          val df = spark.read.option("basePath", familyRoot)
+          val prev = Option(schemaCache.get(key)).filter { case (seen, schema) =>
+            seen.forall(visible.contains) &&
+              schema.find(_.name == "batch").forall(_.dataType == StringType)
+          }
+          val reader = spark.read.option("basePath", familyRoot)
+          val df = prev.fold(reader)(p => reader.schema(p._2))
             .parquet(visible.map(t => s"$familyRoot/batch=${t._1}"): _*)
           readCache.put(key, (visible, df))
+          schemaCache.put(key, (visible, df.schema))
           df
         }
     }

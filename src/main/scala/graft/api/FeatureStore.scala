@@ -889,7 +889,8 @@ class FeatureStore(
   def profileDriftStored(qualified: String, curFrom: String, curTo: String,
       path: String, timeTravel: Option[String] = None): DataFrame = {
     val (ns, n) = Catalog.splitName(qualified)
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = graft.StoreCommit.meta(spark, path).getOrElse(
+      throw new IllegalStateException(s"no histogram store at $path"))
     val (lo, hi, bins) = (meta.getDouble(0), meta.getDouble(1), meta.getInt(2))
     val cur = storage.load(ns, n, Some(TimeUtil.parseTimestamp(curFrom)),
         Some(TimeUtil.parseTimestamp(curTo)), timeTravel = timeTravel)

@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for training-data pipelines: exact (hash),
   * MinHash+LSH near-dup, SimHash, and exact n-gram-Jaccard baseline.
@@ -1369,7 +1370,6 @@ object DedupOps {
   def winnowingPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 4, w: Int = 5, minShared: Int = 2,
       maxDocFreq: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(minShared >= 1, "minShared must be >= 1")
     require(maxDocFreq >= 2, "maxDocFreq must be >= 2 (pairs need two docs)")
     // persisted ([[graft.CacheScope]]): the fingerprint pipeline (shingle
@@ -1377,10 +1377,19 @@ object DedupOps {
     // doc-frequency count and both size-join sides — and each arm would
     // otherwise re-run the whole pass (the incremental twin already
     // persists its batch fingerprints for the same reason)
-    val fps = graft.CacheScope.persist(
-      TextOps.winnowingFingerprints(df, idCol, textCol, k, w)
-        .select(col("id"), col("fingerprint").as("f")).distinct())
-    val sizes = fps.groupBy(col("id")).agg(count(lit(1)).as("n"))
+    val fps = graft.CacheScope.persist(winnowFingerprints(df, idCol, textCol, k, w))
+    withWinnowSizes(sharedFingerprintPairs(fps, minShared, maxDocFreq),
+      fps.groupBy(col("id")).agg(count(lit(1)).as("n")))
+  }
+
+  /** `(id_a, id_b, shared_fps)` for doc pairs sharing >= `minShared` of the
+    * `(id, f)` rows' fingerprints. Fingerprints in more than `maxDocFreq`
+    * docs pair nothing and are reported through [[WinnowStopMetrics]];
+    * `keep` drops pairs before they are counted.
+    */
+  private def sharedFingerprintPairs(fps: DataFrame, minShared: Int,
+      maxDocFreq: Int, keep: Option[Column] = None): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val counted = fps
       .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("f"))))
       .observe(WinnowStopMetrics,
@@ -1395,13 +1404,66 @@ object DedupOps {
       .agg(sort_array(collect_list(col("id"))).as("ids"))
       .select(explode(pairCombinations(col("ids"))).as("p"))
       .select(col("p._1").as("id_a"), col("p._2").as("id_b"))
+    keep.fold(pairs)(pairs.where)
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("shared_fps"))
       .where(col("shared_fps") >= minShared)
+  }
+
+  /** Attach both sides' distinct-fingerprint counts from `(id, n)` rows.
+    * Both joins read the same unrenamed `sizes` plan, so a broadcast of it
+    * is built once and reused for the second side.
+    */
+  private def withWinnowSizes(pairs: DataFrame, sizes: DataFrame): DataFrame =
     pairs
-      .join(sizes.select(col("id").as("id_a"), col("n").as("n_a")), Seq("id_a"))
-      .join(sizes.select(col("id").as("id_b"), col("n").as("n_b")), Seq("id_b"))
+      .join(sizes.as("__sa"), col("id_a") === col("__sa.id"))
+      .join(sizes.as("__sb"), col("id_b") === col("__sb.id"))
       .select(col("id_a"), col("id_b"), col("shared_fps"),
-        col("n_a").cast("bigint").as("n_a"), col("n_b").cast("bigint").as("n_b"))
+        col("__sa.n").cast("bigint").as("n_a"), col("__sb.n").cast("bigint").as("n_b"))
+
+  /** One batch's distinct winnow fingerprints `(id, f)`. When they number
+    * at most `collectMax` (the [[IsinPushdownMax]] bound the minhash probe
+    * applies to its candidate ids) they are collected once: `fps` is then
+    * a local relation and `rows` holds them, so the probe prunes the store
+    * by static `In` lists and the append writes one file per family, with
+    * nothing persisted. Otherwise `rows` is None and `fps` is the persisted
+    * distributed frame.
+    */
+  private final class WinnowBatch(val fps: DataFrame, val rows: Option[Array[Row]]) {
+    /** `(id, n)` distinct-fingerprint counts per doc. */
+    def sizes: DataFrame = rows.fold(fps.groupBy(col("id")).agg(count(lit(1)).as("n"))) { rs =>
+      fps.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rs.groupBy(_.get(0)).map { case (id, g) =>
+          Row(id, g.length.toLong) }.toSeq: _*),
+        StructType(Seq(fps.schema("id"), StructField("n", LongType, nullable = false))))
+    }
+  }
+
+  /** Distinct `(id, f)` winnow fingerprint rows of `df`. */
+  private def winnowFingerprints(df: DataFrame, idCol: String, textCol: String,
+      k: Int, w: Int): DataFrame =
+    TextOps.winnowingFingerprints(df, idCol, textCol, k, w)
+      .select(col("id"), col("fingerprint").as("f")).distinct()
+
+  private object WinnowBatch {
+    def apply(df: DataFrame, idCol: String, textCol: String, k: Int, w: Int,
+        collectMax: Int): WinnowBatch = {
+      val spark = df.sparkSession
+      val fps = winnowFingerprints(df, idCol, textCol, k, w)
+      // only an input the planner would broadcast is tried: in one task its
+      // fingerprint windows and distinct need no shuffle, so the collect is
+      // one job. A larger input goes straight to the distributed pass; a
+      // tried input past `collectMax` re-runs there (bounded by the same
+      // broadcast threshold)
+      val rows =
+        if (df.queryExecution.optimizedPlan.stats.sizeInBytes >
+            spark.sessionState.conf.autoBroadcastJoinThreshold) None
+        else Some(winnowFingerprints(df.coalesce(1), idCol, textCol, k, w)
+          .limit(collectMax + 1).collect()).filter(_.length <= collectMax)
+      rows.fold(new WinnowBatch(graft.CacheScope.persist(fps), None)) { rs =>
+        new WinnowBatch(spark.createDataFrame(java.util.Arrays.asList(rs.toSeq: _*),
+          fps.schema), rows)
+      }
+    }
   }
 
   /** Build (overwrite) a persisted winnowing-fingerprint store at `path` —
@@ -1427,31 +1489,36 @@ object DedupOps {
     spark.range(1).select(lit(k).as("k"), lit(w).as("w")).coalesce(1)
 
   /** Append one batch of NEW docs (ids disjoint from every prior batch).
-    * Same-token re-runs overwrite rather than duplicate. */
+    * Same-token re-runs overwrite rather than duplicate. A batch of at
+    * most [[IsinPushdownMax]] fingerprint rows writes one file per family.
+    */
   def appendWinnowStore(df: DataFrame, idCol: String, textCol: String,
       path: String, k: Int = 4, w: Int = 5,
       batchToken: String = java.util.UUID.randomUUID.toString): Unit =
+    appendWinnowBatch(df, idCol, textCol, path, k, w, batchToken, IsinPushdownMax)
+
+  /** [[appendWinnowStore]] with the collect bound as a parameter. */
+  private[graft] def appendWinnowBatch(df: DataFrame, idCol: String,
+      textCol: String, path: String, k: Int, w: Int, batchToken: String,
+      collectMax: Int): Unit =
       graft.StoreLock.withLock(df.sparkSession, path) {
     val spark = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val hasMeta = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (hasMeta) {
-      val m = spark.read.parquet(s"$path/meta").head()
+    val meta = graft.StoreCommit.meta(spark, path)
+    meta.foreach { m =>
       require(m.getAs[Int]("k") == k && m.getAs[Int]("w") == w,
         s"store at $path was built with (k=${m.getAs[Int]("k")}, " +
           s"w=${m.getAs[Int]("w")}); appending at (k=$k, w=$w) would mix " +
           "incompatible fingerprints")
     }
-    val fps = graft.CacheScope.persist(
-      TextOps.winnowingFingerprints(df, idCol, textCol, k, w)
-        .select(col("id"), col("fingerprint").as("f")).distinct())
+    val batch = WinnowBatch(df, idCol, textCol, k, w, collectMax)
+    def one(d: DataFrame) = if (batch.rows.isDefined) d.coalesce(1) else d
     // one marker covers BOTH families: probes see the token's fps and
     // sizes dirs all-or-nothing (a sizes-less fps batch would under-count
     // containment denominators)
     graft.StoreCommit.writeBatch(spark, path, batchToken) { b =>
-      if (!hasMeta) b.sidecar(winnowMeta(spark, k, w), "meta")
-      b.write(fps, "fps")
-      b.write(fps.groupBy(col("id")).agg(count(lit(1)).as("n")), "sizes")
+      if (meta.isEmpty) b.sidecar(winnowMeta(spark, k, w), "meta")
+      b.write(one(batch.fps), "fps")
+      b.write(one(batch.sizes), "sizes")
     }
   }
 
@@ -1465,7 +1532,8 @@ object DedupOps {
   def compactWinnowStore(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, dstPath: String): Unit =
     graft.StoreCommit.compact(spark, srcPath, dstPath) { b =>
-      val m = spark.read.parquet(s"$srcPath/meta").head()
+      val m = graft.StoreCommit.meta(spark, srcPath).getOrElse(
+        throw new IllegalStateException(s"no winnow store at $srcPath"))
       b.sidecar(winnowMeta(spark, m.getAs[Int]("k"), m.getAs[Int]("w")), "meta")
       b.write(graft.StoreCommit.read(spark, srcPath, Some("fps"))
         .select(col("id"), col("f")), "fps")
@@ -1485,28 +1553,38 @@ object DedupOps {
     * computed over the pruned union is the true global df. Store-only
     * fingerprints can only pair store docs with each other — found when
     * those batches were probed. Sizes come from the additive sidecar
-    * (pruned to candidate ids), never from stored fingerprint rows.
+    * (pruned to ids that can pair), never from stored fingerprint rows.
     *
-    * Scale: store scanned (id, f)-only and pruned map-side by the
-    * broadcast probe-fingerprint set ([[probePrune]]'s guarded cut);
-    * everything downstream is proportional to the batch and its matches.
+    * Scale: a batch of at most [[IsinPushdownMax]] fingerprint rows is
+    * collected once; the store scan takes its fingerprints as a static
+    * `In` filter, pairs are cut to the new ids by an `In` before they are
+    * counted, and nothing is persisted. A larger batch is persisted and
+    * prunes the store map-side by its broadcast fingerprint set
+    * ([[probePrune]]'s guarded cut). Either way everything downstream is
+    * proportional to the batch and its matches.
     */
   def incrementalWinnowingPairs(newDocs: DataFrame, idCol: String,
       textCol: String, path: String, k: Int = 4, w: Int = 5,
       minShared: Int = 2, maxDocFreq: Int = 1000,
-      excludeBatch: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      excludeBatch: Option[String] = None): DataFrame =
+    winnowProbe(newDocs, idCol, textCol, path, k, w, minShared, maxDocFreq,
+      excludeBatch, IsinPushdownMax)
+
+  /** [[incrementalWinnowingPairs]] with the collect bound as a parameter. */
+  private[graft] def winnowProbe(newDocs: DataFrame, idCol: String,
+      textCol: String, path: String, k: Int, w: Int, minShared: Int,
+      maxDocFreq: Int, excludeBatch: Option[String],
+      collectMax: Int): DataFrame = {
     require(minShared >= 1, "minShared must be >= 1")
     require(maxDocFreq >= 2, "maxDocFreq must be >= 2 (pairs need two docs)")
     val spark = newDocs.sparkSession
-    val m = spark.read.parquet(s"$path/meta").head()
+    val m = graft.StoreCommit.meta(spark, path).getOrElse(
+      throw new IllegalStateException(s"no winnow store at $path"))
     require(m.getAs[Int]("k") == k && m.getAs[Int]("w") == w,
       s"store at $path was built with (k=${m.getAs[Int]("k")}, " +
         s"w=${m.getAs[Int]("w")}); probe with the store's parameters")
-    val fresh = graft.CacheScope.persist(
-      TextOps.winnowingFingerprints(newDocs, idCol, textCol, k, w)
-        .select(col("id"), col("fingerprint").as("f")).distinct())
-    val freshRows = fresh.count()
+    val batch = WinnowBatch(newDocs, idCol, textCol, k, w, collectMax)
+    val fresh = batch.fps
     // excludeBatch drops a replayed micro-batch's own (possibly partial)
     // prior attempt; a sub-dir missing entirely (crash between the meta
     // and fps/sizes writes of the very first append) reads as empty —
@@ -1518,45 +1596,40 @@ object DedupOps {
         excludeBatch.fold(d)(t => d.where(col("batch") =!= t))
       } else shape.limit(0)
     }
-    val oldPruned = probePrune(
-      storeDir("fps", fresh).select(col("id"), col("f")),
-      fresh.select(col("f")).distinct(), Seq("f"), freshRows)
-    val unioned = fresh.unionByName(oldPruned)
-    val counted = unioned
-      .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("f"))))
-      .observe(WinnowStopMetrics,
-        sum(when(col("__df") > maxDocFreq, 1L).otherwise(0L)).as("stop_rows"),
-        coalesce(max(col("__df")), lit(0L)).cast("long").as("max_doc_freq"))
-    val pairs = counted.where(col("__df") > 1 && col("__df") <= maxDocFreq)
-      .groupBy(col("f"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .select(explode(pairCombinations(col("ids"))).as("p"))
-      .select(col("p._1").as("id_a"), col("p._2").as("id_b"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("shared_fps"))
-      .where(col("shared_fps") >= minShared)
-    val nids = fresh.select(col("id")).distinct()
-    val tag = (d: DataFrame) =>
-      if (freshRows <= BroadcastProbeRows) broadcast(d)
-      else d.hint("shuffle_hash")
-    val touching = graft.CacheScope.persist(pairs
-      .join(tag(nids.select(col("id").as("id_a"), lit(1).as("__na"))),
-        Seq("id_a"), "left")
-      .join(tag(nids.select(col("id").as("id_b"), lit(1).as("__nb"))),
-        Seq("id_b"), "left")
-      .where(col("__na").isNotNull || col("__nb").isNotNull)
-      .select(col("id_a"), col("id_b"), col("shared_fps")))
-    val candIds = touching.select(col("id_a").as("id"))
-      .union(touching.select(col("id_b").as("id"))).distinct()
-    val freshSizes = fresh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val sizes = freshSizes
-      .unionByName(storeDir("sizes", freshSizes)
-        .select(col("id"), col("n"))
-        .join(broadcast(candIds), Seq("id"), "left_semi"))
-    touching
-      .join(sizes.select(col("id").as("id_a"), col("n").as("n_a")), Seq("id_a"))
-      .join(sizes.select(col("id").as("id_b"), col("n").as("n_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("shared_fps"),
-        col("n_a").cast("bigint").as("n_a"), col("n_b").cast("bigint").as("n_b"))
+    val storeFps = storeDir("fps", fresh).select(col("id"), col("f"))
+    val freshSizes = batch.sizes
+    val storeSizes = storeDir("sizes", freshSizes).select(col("id"), col("n"))
+    batch.rows match {
+      case Some(rows) =>
+        val old = storeFps.where(col("f").isInCollection(rows.map(_.get(1)).distinct))
+        val ids = rows.map(_.get(0)).distinct
+        val touching = sharedFingerprintPairs(fresh.unionByName(old), minShared,
+          maxDocFreq, Some(col("id_a").isInCollection(ids) || col("id_b").isInCollection(ids)))
+        // stored docs that can pair are exactly those with a pruned row
+        withWinnowSizes(touching, freshSizes.unionByName(
+          storeSizes.join(old.select(col("id")), Seq("id"), "left_semi")))
+      case None =>
+        val freshRows = fresh.count()
+        val oldPruned = probePrune(storeFps,
+          fresh.select(col("f")).distinct(), Seq("f"), freshRows)
+        val pairs = sharedFingerprintPairs(fresh.unionByName(oldPruned),
+          minShared, maxDocFreq)
+        val nids = fresh.select(col("id")).distinct()
+        val tag = (d: DataFrame) =>
+          if (freshRows <= BroadcastProbeRows) broadcast(d)
+          else d.hint("shuffle_hash")
+        val touching = graft.CacheScope.persist(pairs
+          .join(tag(nids.select(col("id").as("id_a"), lit(1).as("__na"))),
+            Seq("id_a"), "left")
+          .join(tag(nids.select(col("id").as("id_b"), lit(1).as("__nb"))),
+            Seq("id_b"), "left")
+          .where(col("__na").isNotNull || col("__nb").isNotNull)
+          .select(col("id_a"), col("id_b"), col("shared_fps")))
+        val candIds = touching.select(col("id_a").as("id"))
+          .union(touching.select(col("id_b").as("id"))).distinct()
+        withWinnowSizes(touching, freshSizes.unionByName(
+          storeSizes.join(broadcast(candIds), Seq("id"), "left_semi")))
+    }
   }
 
   /** Observation name for [[exactJaccardPairs]]'s stop-shingle cut:

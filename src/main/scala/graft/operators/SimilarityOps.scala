@@ -552,6 +552,13 @@ object SimilarityOps {
       s"aggregate($vCol, 0L, (m, x) -> greatest(m, abs(CAST(x AS BIGINT))))"))
       .as("__gm"))
 
+  /** The stored SQ8 scale of an index's `meta` row as a one-row `__gm`
+    * frame — the shape [[corpusGmax]] builds from a corpus.
+    */
+  private def storedGmax(spark: org.apache.spark.sql.SparkSession,
+      meta: org.apache.spark.sql.Row): DataFrame =
+    spark.range(1).select(lit(meta.get(meta.fieldIndex("gmax"))).cast("bigint").as("__gm"))
+
   /** Engine-exact int8 codes for the vector column named `v`, given a
     * `__gm` scale column in scope: `((x + gm)·127) div gm − 127` — the
     * shift keeps the dividend non-negative, where floor == truncation.
@@ -641,9 +648,8 @@ object SimilarityOps {
       graft.StoreLock.withLock(newVecs.sparkSession, path) {
     ensureRegistered(newVecs)
     val spark = newVecs.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").limit(1).collect()
-      .headOption.getOrElse(
-        throw new IllegalStateException(s"no SQ8 index at $path"))
+    val meta = graft.StoreCommit.meta(spark, path).getOrElse(
+      throw new IllegalStateException(s"no SQ8 index at $path"))
     val dim = meta.getAs[Int]("dim")
     val bad = newVecs.where(size(col(vecCol)) =!= dim).limit(1).collect()
     require(bad.isEmpty,
@@ -660,7 +666,7 @@ object SimilarityOps {
           "= false only with upstream disjointness)")
     }
     val c = prep(newVecs, idCol, vecCol, "neighbor_id", "cv", "cn")
-    val gm = spark.read.parquet(s"$path/meta").select(col("gmax").as("__gm"))
+    val gm = storedGmax(spark, meta)
     graft.StoreCommit.writeBatch(spark, path, batchToken)(
       _.write(sq8Codes(c, gm), "codes"))
   }
@@ -677,12 +683,12 @@ object SimilarityOps {
     require(k > 0 && candFactor > 0, "k and candFactor must be positive")
     ensureRegistered(corpus)
     val spark = corpus.sparkSession
-    val gm = spark.read.parquet(s"$path/meta").select(col("gmax").as("__gm"))
     // a zero-row meta (e.g. a corrupt or hand-built index) would cross-join
     // to an empty query set and silently return no neighbors — fail loudly
     // like appendSq8Index does on a missing index
-    require(gm.limit(1).collect().nonEmpty,
-      s"sq8TopKIndexed: empty SQ8 meta at $path")
+    val meta = graft.StoreCommit.meta(spark, path)
+    require(meta.nonEmpty, s"sq8TopKIndexed: empty SQ8 meta at $path")
+    val gm = storedGmax(spark, meta.get)
     val c8 = graft.StoreCommit.read(spark, path, Some("codes"))
       .select(col("id").as("neighbor_id"), col("c8"))
     val q = graft.CacheScope.persist(
@@ -1053,8 +1059,8 @@ object SimilarityOps {
       graft.StoreLock.withLock(newVecs.sparkSession, path) {
     ensureRegistered(newVecs)
     val spark = newVecs.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").limit(1).collect()
-      .headOption.getOrElse(throw new IllegalStateException(s"no IVF+PQ index at $path"))
+    val meta = graft.StoreCommit.meta(spark, path)
+      .getOrElse(throw new IllegalStateException(s"no IVF+PQ index at $path"))
     val (m, dim) = (meta.getAs[Int]("m"), meta.getAs[Int]("dim"))
     val bad = newVecs.where(size(col(vecCol)) =!= dim).limit(1).collect()
     require(bad.isEmpty,
@@ -1089,8 +1095,8 @@ object SimilarityOps {
     require(k > 0 && candFactor > 0 && nProbe > 0, "k, candFactor, nProbe must be positive")
     ensureRegistered(corpus)
     val spark = corpus.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").limit(1).collect()
-      .headOption.getOrElse(throw new IllegalStateException(s"no IVF+PQ index at $path"))
+    val meta = graft.StoreCommit.meta(spark, path)
+      .getOrElse(throw new IllegalStateException(s"no IVF+PQ index at $path"))
     val (m, dim) = (meta.getAs[Int]("m"), meta.getAs[Int]("dim"))
     val cents = spark.read.parquet(s"$path/centroids")
     val book = readPqBook(spark, path, m, dim)
@@ -1171,8 +1177,8 @@ object SimilarityOps {
       graft.StoreLock.withLock(newVecs.sparkSession, path) {
     ensureRegistered(newVecs)
     val spark = newVecs.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").limit(1).collect()
-      .headOption.getOrElse(throw new IllegalStateException(s"no PQ index at $path"))
+    val meta = graft.StoreCommit.meta(spark, path)
+      .getOrElse(throw new IllegalStateException(s"no PQ index at $path"))
     val (m, dim) = (meta.getAs[Int]("m"), meta.getAs[Int]("dim"))
     val bad = newVecs.where(size(col(vecCol)) =!= dim).limit(1).collect()
     require(bad.isEmpty,
@@ -1286,8 +1292,8 @@ object SimilarityOps {
     require(srcPath != dstPath, "compact to a NEW path, then swap")
     ensureRegistered(corpus)
     val spark = corpus.sparkSession
-    val meta = spark.read.parquet(s"$srcPath/meta").limit(1).collect()
-      .headOption.getOrElse(throw new IllegalStateException(s"no PQ index at $srcPath"))
+    val meta = graft.StoreCommit.meta(spark, srcPath)
+      .getOrElse(throw new IllegalStateException(s"no PQ index at $srcPath"))
     val (m, ksub) = (meta.getAs[Int]("m"), meta.getAs[Int]("ksub"))
     val ids = graft.StoreCommit.read(spark, srcPath, Some("codes"))
       .select(col("id")).distinct()
@@ -1353,8 +1359,8 @@ object SimilarityOps {
     require(k > 0 && candFactor > 0, "k and candFactor must be positive")
     ensureRegistered(corpus)
     val spark = corpus.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").limit(1).collect()
-      .headOption.getOrElse(throw new IllegalStateException(s"no PQ index at $path"))
+    val meta = graft.StoreCommit.meta(spark, path)
+      .getOrElse(throw new IllegalStateException(s"no PQ index at $path"))
     val (m, dim) = (meta.getAs[Int]("m"), meta.getAs[Int]("dim"))
     val book = readPqBook(spark, path, m, dim)
     val codes = graft.StoreCommit.read(spark, path, Some("codes"))

@@ -356,7 +356,8 @@ object TextOps {
   def bigramSurpriseStored(docs: DataFrame, idCol: String, textCol: String,
       path: String, broadcastRefChars: Long = 64000000L): DataFrame = {
     val spark = docs.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = graft.StoreCommit.meta(spark, path).getOrElse(
+      throw new IllegalStateException(s"no bigram model at $path"))
     val c12 = spark.read.parquet(s"$path/c12")
       .select(col("w1"), col("w2"), col("c").as("__c12"))
     val c1 = spark.read.parquet(s"$path/c1")

@@ -132,19 +132,22 @@ class TimeseriesStorage(val root: String, spark: SparkSession,
   private def read(t: Table, scheme: PartitionScheme,
       from: Option[Timestamp], to: Option[Timestamp], timeTravel: Option[String],
       schema: Option[StructType] = None): DataFrame = {
-    // no driver-side existence probe: spark.read's own file listing is the
-    // single storage round-trip per table (an extra fs.exists here is one
-    // more remote call per feature per query — N+ on a wide loadFeatures)
+    def empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(t.columns.map(c => StructField(c, t.types.getOrElse(c,
+        if (c == TimeCol || c == CreatedCol) TimestampType
+        else if (t.keys.contains(c)) LongType
+        else DoubleType)))))
+    // a never-written dir is answered on the driver: handing it to the
+    // reader makes Spark's sink-metadata probe log a WARN and a full stack
+    // trace before PATH_NOT_FOUND. The catch stays for a dir dropped
+    // between this check and the listing, and for an emptied one.
+    if (!fs.exists(new Path(t.dir))) return empty
     val stored = try schema.fold(spark.read)(spark.read.schema(_))
         .format(fmt(t.namespace)).load(t.dir) catch {
       case e: org.apache.spark.sql.AnalysisException
           if Option(e.getCondition).exists(c =>
             c == "PATH_NOT_FOUND" || c.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
-        return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(t.columns.map(c => StructField(c, t.types.getOrElse(c,
-            if (c == TimeCol || c == CreatedCol) TimestampType
-            else if (t.keys.contains(c)) LongType
-            else DoubleType)))))
+        return empty
     }
     val (f, u) = clampRange(from, to)
     var df = within(stored, f, u)

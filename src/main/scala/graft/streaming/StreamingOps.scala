@@ -250,7 +250,7 @@ object StreamingOps {
       maxDocFreq: Int = 1000): StreamingQuery =
     eachBatch(stream, checkpoint, trigger) { (batch, token) =>
       val pairs =
-        if (exists(batch.sparkSession, s"$storePath/meta"))
+        if (StoreCommit.meta(batch.sparkSession, storePath).isDefined)
           DedupOps.incrementalWinnowingPairs(batch, idCol, textCol, storePath,
             k, w, minShared, maxDocFreq, excludeBatch = Some(token))
         else
@@ -544,7 +544,7 @@ object StreamingOps {
       attrCols: Seq[String], tieCols: Seq[String], storePath: String,
       checkpoint: String, trigger: Trigger): StreamingQuery =
     eachBatch(stream, checkpoint, trigger) { (batch, token) =>
-      if (exists(batch.sparkSession, s"$storePath/meta"))
+      if (StoreCommit.meta(batch.sparkSession, storePath).isDefined)
         graft.ts.Scd.updateScdStore(batch, storePath, token)
       else
         graft.ts.Scd.buildScdStore(batch, entityCol, timeCol, attrCols, tieCols, storePath)
@@ -562,7 +562,8 @@ object StreamingOps {
     */
   def hist(stream: DataFrame, valueCol: String, refPath: String,
       curPath: String, checkpoint: String, trigger: Trigger): StreamingQuery = {
-    val meta = stream.sparkSession.read.parquet(s"$refPath/meta").head()
+    val meta = StoreCommit.meta(stream.sparkSession, refPath).getOrElse(
+      throw new IllegalStateException(s"no histogram store at $refPath"))
     val (lo, hi, bins) = (meta.getDouble(0), meta.getDouble(1), meta.getInt(2))
     val width = (hi - lo) / bins
     eachBatch(stream, checkpoint, trigger) { (batch, token) =>

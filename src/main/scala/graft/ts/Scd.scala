@@ -184,7 +184,8 @@ object Scd {
 
   private def readMeta(spark: org.apache.spark.sql.SparkSession,
       path: String): (String, String, Seq[String], Seq[String]) = {
-    val m = spark.read.parquet(s"$path/meta").head()
+    val m = graft.StoreCommit.meta(spark, path).getOrElse(
+      throw new IllegalStateException(s"no SCD store at $path"))
     def split(s: String) = if (s.isEmpty) Nil else s.split(",").toSeq
     (m.getString(0), m.getString(1), split(m.getString(2)), split(m.getString(3)))
   }

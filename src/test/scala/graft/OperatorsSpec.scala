@@ -1015,6 +1015,73 @@ class OperatorsSpec extends SparkTestBase {
     }
   }
 
+  test("winnow probe and append: collected and distributed paths agree on both sides of the bound") {
+    // collectMax = 0 forces every batch past the bound onto the persisted,
+    // broadcast-semi-join path; the default bound collects these batches
+    val (small, large) = (DedupOps.IsinPushdownMax, 0)
+    val base = docs.where(col("doc_id") < 200)
+    val mid = docs.where(col("doc_id") >= 200 && col("doc_id") < 250)
+    val batch = docs.where(col("doc_id") >= 250)
+    val stores = Seq(small, large).map { bound =>
+      val store = tmpDir(s"wn_bound$bound") + "/store"
+      DedupOps.appendWinnowBatch(base, "doc_id", "text", store, 4, 5, "base", bound)
+      DedupOps.appendWinnowBatch(mid, "doc_id", "text", store, 4, 5, "b1", bound)
+      store
+    }
+    def rows(store: String, family: String) =
+      StoreCommit.read(spark, store, Some(family)).drop("batch").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    Seq("fps", "sizes").foreach { family =>
+      assert(rows(stores(0), family) == rows(stores(1), family) &&
+        rows(stores(0), family).nonEmpty, s"stored $family rows differ")
+      // a collected batch lands as one file per family
+      val files = new java.io.File(s"${stores(0)}/$family/batch=b1").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"$family: ${files.length} files for one small batch")
+    }
+    def probe(bound: Int, maxDocFreq: Int = 20, exclude: Option[String] = None) =
+      DedupOps.winnowProbe(batch, "doc_id", "text", stores(0), 4, 5, 2, maxDocFreq,
+        exclude, bound)
+    def canon(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
+    val pairs = canon(probe(small))
+    assert(pairs.nonEmpty && pairs == canon(probe(large)))
+    assert(pairs == canon(DedupOps.winnowingPairs(docs, "doc_id", "text", maxDocFreq = 20)
+      .where(col("id_a") >= 250 || col("id_b") >= 250)))
+    // the small path prunes the fps scan by a static In; the fallback keeps
+    // the broadcast semi join
+    assert(probe(small).queryExecution.executedPlan.toString.contains("In(f,"))
+    val fallback = probe(large).queryExecution.executedPlan.toString
+    assert(fallback.contains("LeftSemi") && fallback.contains("BroadcastHashJoin"),
+      s"fallback must prune via a broadcast semi join:\n$fallback")
+    // a replayed batch excludes its own prior attempt on both paths
+    DedupOps.appendWinnowBatch(batch, "doc_id", "text", stores(0), 4, 5, "b2", small)
+    assert(canon(probe(small, exclude = Some("b2"))) == pairs)
+    assert(canon(probe(large, exclude = Some("b2"))) == pairs)
+    // a capped probe reports the same stop-fingerprint cut on both paths
+    def stopRows(bound: Int): Long = {
+      val seen = new java.util.concurrent.atomic.AtomicReference[Option[Long]](None)
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            d: Long): Unit =
+          qe.observedMetrics.get(DedupOps.WinnowStopMetrics).foreach(r =>
+            seen.set(Some(r.getAs[Long]("stop_rows"))))
+        override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        probe(bound, maxDocFreq = 2, exclude = Some("b2")).collect()
+        val deadline = System.currentTimeMillis() + 10000
+        while (seen.get.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      } finally spark.listenerManager.unregister(listener)
+      seen.get.getOrElse(fail(s"no $bound-bound stop observation"))
+    }
+    val cut = stopRows(small)
+    assert(cut > 0 && cut == stopRows(large), s"stop_rows $cut")
+    CacheScope.release()
+  }
+
   test("shinglePosRows == shingleRows; substring dedup at ExactSubstr k=50") {
     import spark.implicits._
     def norm(x: org.apache.spark.sql.DataFrame) =

@@ -208,13 +208,36 @@ class PlanSpec extends SparkTestBase {
     // work — a regression to a full-store shuffle or a cartesian flips
     // probe cost from ∝ batch to ∝ corpus
     Seq("dedup_exact_serving", "dedup_minhash_serving",
-        "dedup_simhash_serving", "dedup_winnow_serving").foreach { q =>
+        "dedup_simhash_serving").foreach { q =>
       val p = plan(q)
       assert(p.contains("LeftSemi"), s"$q: store must prune via a semi join")
       assert(p.contains("BroadcastHashJoin"),
         s"$q: the probe key set must broadcast into the store scan")
       assert(!p.contains("CartesianProduct"), s"$q must never cartesian")
     }
+    // the winnow gate's batch is under the collect bound: its fingerprints
+    // reach the fps scan as a pushed static In, below every exchange
+    val p = plan("dedup_winnow_serving")
+    val fpsScans = p.linesIterator.filter(l => l.contains("FileScan") && l.contains("/fps/")).toSeq
+    assert(fpsScans.nonEmpty && fpsScans.forall(_.contains("PushedFilters: [In(f,")),
+      s"dedup_winnow_serving: the fps scan must take the batch's fingerprints as a pushed In:\n$p")
+    assert(!p.contains("CartesianProduct"), "dedup_winnow_serving must never cartesian")
+  }
+
+  test("warm winnow probes hold their job counts") {
+    // measured steady-state counts of the collected small-batch path: the
+    // gate's documents schema read, one fingerprint job, then the pair
+    // plan's stage and broadcast jobs; a lost meta or schema cache, a
+    // persist or a return to the semi-join prune adds jobs and fails here
+    val caps = Seq("dedup_winnow_incremental" -> 8, "dedup_winnow_serving" -> 8)
+    def run(n: String): Unit = { SparkEntry.queries(n)(spark, dir).count(); () }
+    caps.foreach { case (n, _) => run(n) } // warm stores, meta and schemas
+    caps.foreach { case (n, cap) =>
+      val jobs = countJobs(run(n))
+      info(s"$n: $jobs jobs")
+      assert(jobs <= cap, s"$n regressed to $jobs jobs (cap $cap)")
+    }
+    graft.CacheScope.release()
   }
 
   test("floor-bound fs_ micro-queries hold their job counts") {

@@ -198,6 +198,28 @@ class StorageSpec extends SparkTestBase {
       to = Some(ts("2021-01-01"))), "a").keySet == Set(ts("2021-01-01")))
   }
 
+  test("a never-written feature or group dir reads empty without a WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val st = freshStore()
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("ghost-read-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warned.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    try {
+      assert(st.load("ns", "ghost").isEmpty)
+      assert(st.loadGroup("ns", "ghost", Seq("x")).isEmpty)
+    } finally root.removeAppender(capture)
+    assert(warned.isEmpty, s"a never-written read logged: ${warned.toArray.mkString("\n")}")
+  }
+
   test("empty/missing feature loads as empty frame; delete removes dir; copy clones data") {
     val st = freshStore()
     assert(st.load("ns", "ghost").isEmpty)

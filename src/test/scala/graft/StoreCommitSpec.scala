@@ -20,6 +20,47 @@ class StoreCommitSpec extends SparkTestBase {
       "doc_id", "text", store)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
 
+  /** Spark jobs `body` submits from this thread (job-group count). */
+  private def countJobs(body: => Any): Int = {
+    val group = s"jobcount-${java.util.UUID.randomUUID()}"
+    spark.sparkContext.setJobGroup(group, "job-count gate", false)
+    try body finally spark.sparkContext.clearJobGroup()
+    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("meta: a warm read runs no job; a rebuild at new (k, w) misses the cache") {
+    val store = tmpDir("sc_meta_store") + "/store"
+    val base = docs.where(col("doc_id") < 100)
+    val batch = docs.where(col("doc_id") >= 250 && col("doc_id") < 280)
+    assert(StoreCommit.meta(spark, store).isEmpty, "an absent meta reads as None")
+    DedupOps.buildWinnowStore(base, "doc_id", "text", store)
+    DedupOps.incrementalWinnowingPairs(batch, "doc_id", "text", store).collect()
+    assert(StoreCommit.meta(spark, store).map(_.getAs[Int]("k")).contains(4))
+    assert(countJobs(StoreCommit.meta(spark, store)) == 0,
+      "a warm meta read must not run a Spark job")
+    // same JVM, same root, new parameters: the cached (4, 5) row must not
+    // answer for the rebuilt store
+    DedupOps.buildWinnowStore(base, "doc_id", "text", store, k = 5, w = 9)
+    val e = intercept[IllegalArgumentException](
+      DedupOps.incrementalWinnowingPairs(batch, "doc_id", "text", store))
+    assert(e.getMessage.contains("k=5, w=9"), e.getMessage)
+  }
+
+  test("read: append-only growth reuses the schema; a dropped batch infers it again") {
+    val store = tmpDir("sc_schema_store")
+    DedupOps.buildWinnowStore(docs.where(col("doc_id") < 100), "doc_id", "text", store)
+    val fps = StoreCommit.read(spark, store, Some("fps"))
+    DedupOps.appendWinnowStore(docs.where(col("doc_id") >= 100 && col("doc_id") < 130),
+      "doc_id", "text", store, batchToken = "b1")
+    var grown: org.apache.spark.sql.DataFrame = null
+    assert(countJobs { grown = StoreCommit.read(spark, store, Some("fps")) } == 0,
+      "a read after an append must reuse the schema, not infer it")
+    assert(grown.schema == fps.schema && grown.count() > fps.count())
+    StoreCommit.uncommit(spark, store, "b1")
+    assert(countJobs(StoreCommit.read(spark, store, Some("fps"))) > 0,
+      "a read after a batch left the visible set must infer the schema again")
+  }
+
   test("mid-append probe sees only committed batches; commit flips visibility") {
     val store = tmpDir("sc_fp_store")
     DedupOps.buildFingerprintStore(docs.where(col("doc_id") < 200),
