@@ -2,7 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StringType
 
 /** Committed-read manifest for the batch-dir store family (fingerprint /
   * minhash / simhash / winnow / window / line-census / cluster-label /
@@ -206,31 +206,27 @@ object StoreCommit {
     * token), replay rewrite (same token, new dir mtime), compaction
     * (token set and mtimes both change) — misses the cache by key. The
     * two `listStatus` calls the validation needs were already paid by the
-    * uncached path. [[commit]]/[[uncommit]] also invalidate eagerly
-    * (belt-and-braces for in-JVM mutators; cross-JVM mutators are caught
-    * by the key comparison). Bounded: one entry per store family actually
-    * probed in the session.
+    * uncached path. [[commit]]/[[uncommit]] also mark the store's entries
+    * stale (belt-and-braces for in-JVM mutators; cross-JVM mutators are
+    * caught by the key comparison). Bounded: one entry per store family
+    * actually probed in the session.
+    *
+    * A missed entry still lends its schema to the rebuilt plan when every
+    * (token, dir-mtime) it was built over is still visible: an append adds
+    * a token and leaves every earlier one untouched, so the read skips the
+    * footer-read schema job. Any drop, same-token rewrite, compaction or
+    * rebuild removes or re-stamps an earlier entry and the schema is
+    * inferred again.
     */
   private val readCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (Seq[(String, Long)], DataFrame)]()
+      (Seq[(String, Long)], DataFrame, Boolean)]()
 
-  private[graft] def invalidate(storeRoot: String): Unit = {
-    val it = readCache.keySet().iterator()
-    while (it.hasNext) { if (it.next()._2.startsWith(storeRoot)) it.remove() }
-  }
-
-  /** Last schema [[read]] used per (session, familyRoot), with the visible
-    * (token, dir-mtime) set it was used over. Deliberately NOT cleared by
-    * [[invalidate]]: an append adds a token and leaves every earlier one
-    * untouched, so the next read reuses the schema instead of inferring it
-    * again (one footer-read Spark job per family per probe). Any drop,
-    * same-token rewrite, compaction or rebuild removes or re-stamps an
-    * earlier entry and the next read infers again.
+  /** Mark every cached plan under `storeRoot` stale: the next [[read]]
+    * rebuilds it (keeping its schema when [[read]]'s rule allows).
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (Seq[(String, Long)], StructType)]()
+  private[graft] def invalidate(storeRoot: String): Unit =
+    readCache.replaceAll((key, v) => if (key._2.startsWith(storeRoot)) v.copy(_3 = true) else v)
 
   /** The `meta` row and the `root/meta` listing (file names, lengths,
     * mtimes) it was read under, per store root.
@@ -279,18 +275,14 @@ object StoreCommit {
             "mid-construction (writer crashed before its first commit " +
             "marker) or its _commits dir was damaged")
         val key = (spark, familyRoot)
-        val hit = readCache.get(key)
-        if (hit != null && hit._1 == visible) hit._2
-        else {
-          val prev = Option(schemaCache.get(key)).filter { case (seen, schema) =>
-            seen.forall(visible.contains) &&
-              schema.find(_.name == "batch").forall(_.dataType == StringType)
-          }
+        val hit = Option(readCache.get(key))
+        hit.filter(h => !h._3 && h._1 == visible).map(_._2).getOrElse {
+          val prev = hit.collect { case (seen, d, _) if seen.forall(visible.contains) &&
+              d.schema.find(_.name == "batch").forall(_.dataType == StringType) => d.schema }
           val reader = spark.read.option("basePath", familyRoot)
-          val df = prev.fold(reader)(p => reader.schema(p._2))
+          val df = prev.fold(reader)(reader.schema)
             .parquet(visible.map(t => s"$familyRoot/batch=${t._1}"): _*)
-          readCache.put(key, (visible, df))
-          schemaCache.put(key, (visible, df.schema))
+          readCache.put(key, (visible, df, false))
           df
         }
     }

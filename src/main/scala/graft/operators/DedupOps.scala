@@ -1420,23 +1420,13 @@ object DedupOps {
       .select(col("id_a"), col("id_b"), col("shared_fps"),
         col("__sa.n").cast("bigint").as("n_a"), col("__sb.n").cast("bigint").as("n_b"))
 
-  /** One batch's distinct winnow fingerprints `(id, f)`. When they number
-    * at most `collectMax` (the [[IsinPushdownMax]] bound the minhash probe
-    * applies to its candidate ids) they are collected once: `fps` is then
-    * a local relation and `rows` holds them, so the probe prunes the store
-    * by static `In` lists and the append writes one file per family, with
-    * nothing persisted. Otherwise `rows` is None and `fps` is the persisted
-    * distributed frame.
+  /** Parquet bytes one winnow fingerprint row takes in a batch's input: a
+    * row stands for about (w+1)/2 tokens, ~18 bytes of text, which parquet
+    * stores in ~7.5 (the `documents` fixtures at every scale). An input
+    * whose size estimate exceeds `collectMax` rows at this rate is not
+    * tried in one task.
     */
-  private final class WinnowBatch(val fps: DataFrame, val rows: Option[Array[Row]]) {
-    /** `(id, n)` distinct-fingerprint counts per doc. */
-    def sizes: DataFrame = rows.fold(fps.groupBy(col("id")).agg(count(lit(1)).as("n"))) { rs =>
-      fps.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rs.groupBy(_.get(0)).map { case (id, g) =>
-          Row(id, g.length.toLong) }.toSeq: _*),
-        StructType(Seq(fps.schema("id"), StructField("n", LongType, nullable = false))))
-    }
-  }
+  private val WinnowInputBytesPerRow = 8L
 
   /** Distinct `(id, f)` winnow fingerprint rows of `df`. */
   private def winnowFingerprints(df: DataFrame, idCol: String, textCol: String,
@@ -1444,27 +1434,48 @@ object DedupOps {
     TextOps.winnowingFingerprints(df, idCol, textCol, k, w)
       .select(col("id"), col("fingerprint").as("f")).distinct()
 
-  private object WinnowBatch {
-    def apply(df: DataFrame, idCol: String, textCol: String, k: Int, w: Int,
-        collectMax: Int): WinnowBatch = {
-      val spark = df.sparkSession
-      val fps = winnowFingerprints(df, idCol, textCol, k, w)
-      // only an input the planner would broadcast is tried: in one task its
-      // fingerprint windows and distinct need no shuffle, so the collect is
-      // one job. A larger input goes straight to the distributed pass; a
-      // tried input past `collectMax` re-runs there (bounded by the same
-      // broadcast threshold)
-      val rows =
-        if (df.queryExecution.optimizedPlan.stats.sizeInBytes >
-            spark.sessionState.conf.autoBroadcastJoinThreshold) None
-        else Some(winnowFingerprints(df.coalesce(1), idCol, textCol, k, w)
-          .limit(collectMax + 1).collect()).filter(_.length <= collectMax)
-      rows.fold(new WinnowBatch(graft.CacheScope.persist(fps), None)) { rs =>
-        new WinnowBatch(spark.createDataFrame(java.util.Arrays.asList(rs.toSeq: _*),
-          fps.schema), rows)
-      }
+  /** One batch's distinct winnow fingerprints `(id, f)`, with the rows
+    * themselves when they number at most `collectMax` (the
+    * [[IsinPushdownMax]] bound the minhash probe applies to its candidate
+    * ids): the frame is then a local relation, so the probe prunes the
+    * store by static `In` lists and the append writes one file per family,
+    * with nothing persisted. Otherwise the rows are None and the frame is
+    * persisted.
+    *
+    * Only an input whose size estimate fits `collectMax` rows (at
+    * [[WinnowInputBytesPerRow]]) is tried, in one task: its id window and
+    * distinct need no shuffle there, so the collect is one job. A larger
+    * input goes straight to the distributed pass. An input the estimate
+    * undercounts (an in-memory relation counts 20 bytes per string) and
+    * that overflows is fingerprinted again there: persisting the try
+    * would save that pass, but a cached frame's first action materializes
+    * it as a job of its own, one more job on every small batch.
+    */
+  private def winnowBatch(df: DataFrame, idCol: String, textCol: String,
+      k: Int, w: Int, collectMax: Int): (DataFrame, Option[Array[Row]]) = {
+    val fps = winnowFingerprints(df, idCol, textCol, k, w)
+    val rows =
+      if (df.queryExecution.optimizedPlan.stats.sizeInBytes >
+          collectMax * WinnowInputBytesPerRow) None
+      else Some(winnowFingerprints(df.coalesce(1), idCol, textCol, k, w)
+        .limit(collectMax + 1).collect()).filter(_.length <= collectMax)
+    rows match {
+      case Some(rs) => (df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rs.toSeq: _*), fps.schema), rows)
+      case None => (graft.CacheScope.persist(fps), None)
     }
   }
+
+  /** `(id, n)` distinct-fingerprint counts per doc of a [[winnowBatch]],
+    * counted on the driver when its rows were collected.
+    */
+  private def winnowSizes(fps: DataFrame, rows: Option[Array[Row]]): DataFrame =
+    rows.fold(fps.groupBy(col("id")).agg(count(lit(1)).as("n"))) { rs =>
+      fps.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rs.groupBy(_.get(0)).map { case (id, g) =>
+          Row(id, g.length.toLong) }.toSeq: _*),
+        StructType(Seq(fps.schema("id"), StructField("n", LongType, nullable = false))))
+    }
 
   /** Build (overwrite) a persisted winnowing-fingerprint store at `path` —
     * the MOSS-pair family's member of the build-once/probe-many store
@@ -1489,8 +1500,8 @@ object DedupOps {
     spark.range(1).select(lit(k).as("k"), lit(w).as("w")).coalesce(1)
 
   /** Append one batch of NEW docs (ids disjoint from every prior batch).
-    * Same-token re-runs overwrite rather than duplicate. A batch of at
-    * most [[IsinPushdownMax]] fingerprint rows writes one file per family.
+    * Same-token re-runs overwrite rather than duplicate. A small batch
+    * (see [[winnowBatch]]) writes one file per family.
     */
   def appendWinnowStore(df: DataFrame, idCol: String, textCol: String,
       path: String, k: Int = 4, w: Int = 5,
@@ -1510,15 +1521,15 @@ object DedupOps {
           s"w=${m.getAs[Int]("w")}); appending at (k=$k, w=$w) would mix " +
           "incompatible fingerprints")
     }
-    val batch = WinnowBatch(df, idCol, textCol, k, w, collectMax)
-    def one(d: DataFrame) = if (batch.rows.isDefined) d.coalesce(1) else d
+    val (fps, rows) = winnowBatch(df, idCol, textCol, k, w, collectMax)
+    def one(d: DataFrame) = if (rows.isDefined) d.coalesce(1) else d
     // one marker covers BOTH families: probes see the token's fps and
     // sizes dirs all-or-nothing (a sizes-less fps batch would under-count
     // containment denominators)
     graft.StoreCommit.writeBatch(spark, path, batchToken) { b =>
       if (meta.isEmpty) b.sidecar(winnowMeta(spark, k, w), "meta")
-      b.write(one(batch.fps), "fps")
-      b.write(one(batch.sizes), "sizes")
+      b.write(one(fps), "fps")
+      b.write(one(winnowSizes(fps, rows)), "sizes")
     }
   }
 
@@ -1555,8 +1566,9 @@ object DedupOps {
     * those batches were probed. Sizes come from the additive sidecar
     * (pruned to ids that can pair), never from stored fingerprint rows.
     *
-    * Scale: a batch of at most [[IsinPushdownMax]] fingerprint rows is
-    * collected once; the store scan takes its fingerprints as a static
+    * Scale: a small batch (size estimate and fingerprint rows both within
+    * [[IsinPushdownMax]] rows, see [[winnowBatch]]) is collected once;
+    * the store scan takes its fingerprints as a static
     * `In` filter, pairs are cut to the new ids by an `In` before they are
     * counted, and nothing is persisted. A larger batch is persisted and
     * prunes the store map-side by its broadcast fingerprint set
@@ -1583,8 +1595,7 @@ object DedupOps {
     require(m.getAs[Int]("k") == k && m.getAs[Int]("w") == w,
       s"store at $path was built with (k=${m.getAs[Int]("k")}, " +
         s"w=${m.getAs[Int]("w")}); probe with the store's parameters")
-    val batch = WinnowBatch(newDocs, idCol, textCol, k, w, collectMax)
-    val fresh = batch.fps
+    val (fresh, rows) = winnowBatch(newDocs, idCol, textCol, k, w, collectMax)
     // excludeBatch drops a replayed micro-batch's own (possibly partial)
     // prior attempt; a sub-dir missing entirely (crash between the meta
     // and fps/sizes writes of the very first append) reads as empty —
@@ -1597,12 +1608,12 @@ object DedupOps {
       } else shape.limit(0)
     }
     val storeFps = storeDir("fps", fresh).select(col("id"), col("f"))
-    val freshSizes = batch.sizes
+    val freshSizes = winnowSizes(fresh, rows)
     val storeSizes = storeDir("sizes", freshSizes).select(col("id"), col("n"))
-    batch.rows match {
-      case Some(rows) =>
-        val old = storeFps.where(col("f").isInCollection(rows.map(_.get(1)).distinct))
-        val ids = rows.map(_.get(0)).distinct
+    rows match {
+      case Some(rs) =>
+        val old = storeFps.where(col("f").isInCollection(rs.map(_.get(1)).distinct))
+        val ids = rs.map(_.get(0)).distinct
         val touching = sharedFingerprintPairs(fresh.unionByName(old), minShared,
           maxDocFreq, Some(col("id_a").isInCollection(ids) || col("id_b").isInCollection(ids)))
         // stored docs that can pair are exactly those with a pruned row

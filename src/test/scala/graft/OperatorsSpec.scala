@@ -1079,6 +1079,25 @@ class OperatorsSpec extends SparkTestBase {
     }
     val cut = stopRows(small)
     assert(cut > 0 && cut == stopRows(large), s"stop_rows $cut")
+    // an in-memory batch's size estimate counts 20 bytes per string, so a
+    // bound between that estimate and its fingerprint rows makes the
+    // one-task try overflow onto the distributed plan
+    val local = spark.createDataFrame(java.util.Arrays.asList(batch.collect().toSeq: _*),
+      batch.schema)
+    val tight = 2000
+    val over = DedupOps.winnowProbe(local, "doc_id", "text", stores(0), 4, 5, 2, 20,
+      Some("b2"), tight)
+    assert(canon(over) == pairs)
+    val overPlan = over.queryExecution.executedPlan.toString
+    assert(overPlan.contains("LeftSemi") && overPlan.contains("BroadcastHashJoin"),
+      s"an overflowed try must take the fallback:\n$overPlan")
+    val overStore = tmpDir("wn_overflow") + "/store"
+    DedupOps.appendWinnowBatch(local, "doc_id", "text", overStore, 4, 5, "b2", tight)
+    Seq("fps", "sizes").foreach { family =>
+      assert(rows(overStore, family) == StoreCommit.read(spark, stores(0), Some(family))
+        .where(col("batch") === "b2").drop("batch").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet, s"overflowed $family rows differ")
+    }
     CacheScope.release()
   }
 

@@ -13,19 +13,6 @@ class PlanSpec extends SparkTestBase {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
-  /** Deterministic job counting via job GROUPS (statusTracker), not a
-    * SparkListener: the async listener bus can replay earlier runs'
-    * backlogged events into a freshly added listener (overcount) or lag
-    * past a fixed drain sleep (undercount); job-group membership is
-    * assigned synchronously on submit from this thread.
-    */
-  private def countJobs(body: => Unit): Int = {
-    val group = s"jobcount-${java.util.UUID.randomUUID()}"
-    spark.sparkContext.setJobGroup(group, "job-count gate", false)
-    try body finally spark.sparkContext.clearJobGroup()
-    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-  }
-
   test("q1_agg: shipdate filter pushed to parquet, schema pruned to used columns") {
     val p = plan("q1_agg")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))

@@ -18,6 +18,19 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   def ts(s: String): Timestamp = graft.ts.TimeUtil.parseTimestamp(s)
 
+  /** Spark jobs `body` submits from this thread. Counted via job GROUPS
+    * (statusTracker), not a SparkListener: the async listener bus can
+    * replay earlier runs' backlogged events into a freshly added listener
+    * (overcount) or lag past a fixed drain sleep (undercount); job-group
+    * membership is assigned synchronously on submit from this thread.
+    */
+  def countJobs(body: => Any): Int = {
+    val group = s"jobcount-${java.util.UUID.randomUUID()}"
+    spark.sparkContext.setJobGroup(group, "job-count gate", false)
+    try body finally spark.sparkContext.clearJobGroup()
+    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+  }
+
   /** df(time, value[, created_time]) from (time-string, value) pairs. */
   def seriesDf(rows: Seq[(String, Any)], created: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.types._

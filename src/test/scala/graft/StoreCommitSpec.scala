@@ -20,14 +20,6 @@ class StoreCommitSpec extends SparkTestBase {
       "doc_id", "text", store)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
 
-  /** Spark jobs `body` submits from this thread (job-group count). */
-  private def countJobs(body: => Any): Int = {
-    val group = s"jobcount-${java.util.UUID.randomUUID()}"
-    spark.sparkContext.setJobGroup(group, "job-count gate", false)
-    try body finally spark.sparkContext.clearJobGroup()
-    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-  }
-
   test("meta: a warm read runs no job; a rebuild at new (k, w) misses the cache") {
     val store = tmpDir("sc_meta_store") + "/store"
     val base = docs.where(col("doc_id") < 100)
