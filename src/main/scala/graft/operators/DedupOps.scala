@@ -1385,7 +1385,8 @@ object DedupOps {
   /** `(id_a, id_b, shared_fps)` for doc pairs sharing >= `minShared` of the
     * `(id, f)` rows' fingerprints. Fingerprints in more than `maxDocFreq`
     * docs pair nothing and are reported through [[WinnowStopMetrics]];
-    * `keep` drops pairs before they are counted.
+    * `keep` drops pairs before they are counted, and the kept pairs (one
+    * batch's, so few) are then counted in one partition.
     */
   private def sharedFingerprintPairs(fps: DataFrame, minShared: Int,
       maxDocFreq: Int, keep: Option[Column] = None): DataFrame = {
@@ -1404,21 +1405,26 @@ object DedupOps {
       .agg(sort_array(collect_list(col("id"))).as("ids"))
       .select(explode(pairCombinations(col("ids"))).as("p"))
       .select(col("p._1").as("id_a"), col("p._2").as("id_b"))
-    keep.fold(pairs)(pairs.where)
+    keep.fold(pairs)(pairs.where(_).coalesce(1))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("shared_fps"))
       .where(col("shared_fps") >= minShared)
   }
 
   /** Attach both sides' distinct-fingerprint counts from `(id, n)` rows.
     * Both joins read the same unrenamed `sizes` plan, so a broadcast of it
-    * is built once and reused for the second side.
+    * is built once and reused for the second side. `hashPairs` keeps the
+    * pairs in one partition and builds each join's hash table on them; it
+    * needs `sizes` in one partition too, so neither join has an exchange.
     */
-  private def withWinnowSizes(pairs: DataFrame, sizes: DataFrame): DataFrame =
-    pairs
-      .join(sizes.as("__sa"), col("id_a") === col("__sa.id"))
+  private def withWinnowSizes(pairs: DataFrame, sizes: DataFrame,
+      hashPairs: Boolean = false): DataFrame = {
+    val build = (d: DataFrame) => if (hashPairs) d.coalesce(1).hint("shuffle_hash") else d
+    build(build(pairs)
+      .join(sizes.as("__sa"), col("id_a") === col("__sa.id")))
       .join(sizes.as("__sb"), col("id_b") === col("__sb.id"))
       .select(col("id_a"), col("id_b"), col("shared_fps"),
         col("__sa.n").cast("bigint").as("n_a"), col("__sb.n").cast("bigint").as("n_b"))
+  }
 
   /** Parquet bytes one winnow fingerprint row takes in a batch's input: a
     * row stands for about (w+1)/2 tokens, ~18 bytes of text, which parquet
@@ -1453,16 +1459,15 @@ object DedupOps {
     */
   private def winnowBatch(df: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int, collectMax: Int): (DataFrame, Option[Array[Row]]) = {
-    val fps = winnowFingerprints(df, idCol, textCol, k, w)
-    val rows =
+    val tried =
       if (df.queryExecution.optimizedPlan.stats.sizeInBytes >
           collectMax * WinnowInputBytesPerRow) None
-      else Some(winnowFingerprints(df.coalesce(1), idCol, textCol, k, w)
-        .limit(collectMax + 1).collect()).filter(_.length <= collectMax)
-    rows match {
-      case Some(rs) => (df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rs.toSeq: _*), fps.schema), rows)
-      case None => (graft.CacheScope.persist(fps), None)
+      else Some(winnowFingerprints(df.coalesce(1), idCol, textCol, k, w))
+    val rows = tried.map(_.limit(collectMax + 1).collect()).filter(_.length <= collectMax)
+    (tried, rows) match {
+      case (Some(t), Some(rs)) => (df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rs.toSeq: _*), t.schema), rows)
+      case _ => (graft.CacheScope.persist(winnowFingerprints(df, idCol, textCol, k, w)), None)
     }
   }
 
@@ -1564,13 +1569,14 @@ object DedupOps {
     * computed over the pruned union is the true global df. Store-only
     * fingerprints can only pair store docs with each other — found when
     * those batches were probed. Sizes come from the additive sidecar
-    * (pruned to ids that can pair), never from stored fingerprint rows.
+    * (joined to ids that can pair), never from stored fingerprint rows.
     *
     * Scale: a small batch (size estimate and fingerprint rows both within
     * [[IsinPushdownMax]] rows, see [[winnowBatch]]) is collected once;
     * the store scan takes its fingerprints as a static
     * `In` filter, pairs are cut to the new ids by an `In` before they are
-    * counted, and nothing is persisted. A larger batch is persisted and
+    * counted in one partition, where the sizes sidecar streams past them,
+    * and nothing is persisted. A larger batch is persisted and
     * prunes the store map-side by its broadcast fingerprint set
     * ([[probePrune]]'s guarded cut). Either way everything downstream is
     * proportional to the batch and its matches.
@@ -1612,13 +1618,16 @@ object DedupOps {
     val storeSizes = storeDir("sizes", freshSizes).select(col("id"), col("n"))
     rows match {
       case Some(rs) =>
+        // one exchange (the df window's, over the pruned store scan);
+        // the batch's pairs are then counted and sized in one partition,
+        // so the plan has a single query stage to wait on, no broadcast,
+        // and the size joins hash the pairs and stream the sizes past them
         val old = storeFps.where(col("f").isInCollection(rs.map(_.get(1)).distinct))
         val ids = rs.map(_.get(0)).distinct
         val touching = sharedFingerprintPairs(fresh.unionByName(old), minShared,
           maxDocFreq, Some(col("id_a").isInCollection(ids) || col("id_b").isInCollection(ids)))
-        // stored docs that can pair are exactly those with a pruned row
-        withWinnowSizes(touching, freshSizes.unionByName(
-          storeSizes.join(old.select(col("id")), Seq("id"), "left_semi")))
+        withWinnowSizes(touching, freshSizes.unionByName(storeSizes).coalesce(1),
+          hashPairs = true)
       case None =>
         val freshRows = fresh.count()
         val oldPruned = probePrune(storeFps,
